@@ -1,9 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // median-of-N timed runs (default 3): single-run spread on
     // sub-second queries is ±50% on this machine (BASELINE.md)
     val runs = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
@@ -11,34 +9,7 @@ object Bench {
     // driver never sets this → full sweep)
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
     def selected(name: String) = only.forall(_.exists(name.startsWith))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions) // production injection path
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // dev-only: k=v runtime SQL confs for probe experiments (e.g.
-    // SPARK_GRAFT_BENCH_CONF=spark.sql.adaptive.enabled=false);
-    // the driver never sets this → production bench confs above.
-    // Delimiter: ';' when present, else ',' — a conf VALUE that itself
-    // contains commas (spark.sql.extensions lists, codec chains) would
-    // be torn into malformed tokens by a bare comma split, so
-    // multi-conf probes with comma-valued confs must use ';'
-    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach { raw =>
-      val toks = if (raw.contains(";")) raw.split(";") else raw.split(",")
-      toks.foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-        case _ if kv.trim.isEmpty => () // trailing delimiter / blank token
-        case _ => sys.error(s"SPARK_GRAFT_BENCH_CONF: malformed token '$kv' (want k=v)")
-      }
-      }
-    }
+    val spark = Harness.session()
     // Machine contention context: without it a uniformly-slow run (a
     // loaded host) is indistinguishable from a real regression in the
     // artifact (round-7 driver run: uniform ~1.4x vs same-day builder
@@ -51,27 +22,15 @@ object Bench {
       if (v < 0) "null" else v.toString
     }
     val loadStart = loadAvg
-    // Forcing function: run the query's OWN physical plan to the last
-    // row (toRdd.count walks the planned output without re-optimizing).
-    // A bare df.count() re-plans `count(1)` over the tree and Spark 4's
-    // optimizer is allowed to DELETE real work under it — an outer
-    // join onto a unique-key aggregate is pruned whole, which reduced
-    // the census-shaped queries (hn04/hn05/ivf07/sd01: per-layer audit
-    // frames LEFT-JOINed onto an anchor) to counting a 3-row Range.
-    // toRdd executes exactly what Verify writes and a consumer reads —
-    // every aggregate, join, and the final sort included.
-    def force(df: org.apache.spark.sql.DataFrame): Unit = {
-      df.queryExecution.toRdd.count(); ()
-    }
     val results = SparkEntry.queries.toSeq.filter(kv => selected(kv._1))
       .sortBy(_._1).map { case (name, fn) =>
       // warm-up pass absorbs JIT/codegen/file-footer costs, then
       // median of `runs` steady-state executions
-      try { force(fn(spark, sfDir)) } catch { case _: Throwable => () }
+      try { Harness.force(fn(spark, sfDir)) } catch { case _: Throwable => () }
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         // a failing query is reported as -1, never as a fast success
-        try { force(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
+        try { Harness.force(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
         catch { case _: Throwable => -1.0 }
       }
       val elapsed =
@@ -80,12 +39,7 @@ object Bench {
       // min-of-N is the contention-robust floor: medians inflate under
       // external load, mins survive unless every run was contended
       val floor = if (times.exists(_ < 0)) -1.0 else times.min
-      // Isolation between queries: a query that persists/checkpoints
-      // internally must not leave cached blocks behind to squeeze the
-      // storage/execution memory of every query after it — a 128-query
-      // run would otherwise slow down monotonically with position.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Harness.release(spark)
       (name, elapsed, floor)
     }
     val loadEnd = loadAvg

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool for optimization rounds: run ONE registry query under the
   * bench's session confs with a job listener attached and print the
@@ -18,33 +17,12 @@ object JobProbe {
     val sfDir = args(0)
     val name = args(1)
     val warmups = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", 64 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    sys.env.get("SPARK_GRAFT_BENCH_CONF").foreach { raw =>
-      val toks = if (raw.contains(";")) raw.split(";") else raw.split(",")
-      toks.foreach { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) if k.nonEmpty => spark.conf.set(k, v)
-          case _ => ()
-        }
-      }
-    }
+    val spark = Harness.session()
     val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))
-    def force(): Unit = { fn(spark, sfDir).queryExecution.toRdd.count(); () }
+    def force(): Unit = Harness.force(fn(spark, sfDir))
     (1 to warmups).foreach { _ =>
       force()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Harness.release(spark)
     }
     // timed run under the listener
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()

@@ -1,18 +1,28 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Writes PLANS.md: the formatted physical plan of representative
-  * headline queries, each with the property that makes it the plan
-  * we WANT at 100 TB (pushdown reaching the scan, broadcast only on
-  * bounded sides, zero-Exchange layout joins, codegen spans, the
-  * custom TopK operator). PlanSpec asserts these properties; this
-  * artifact makes them reviewable without running anything.
+/** The plan-dump tool: `.explain("formatted")` of registry queries on
+  * the harness session, so every captured plan is the one the bench
+  * times.
   *
-  * Usage: runMain graft.ExplainDump [sfDir] [outFile]
+  * With no query names it writes PLANS.md: the formatted physical plan
+  * of representative headline queries, each with the property that
+  * makes it the plan we WANT at 100 TB (pushdown reaching the scan,
+  * broadcast only on bounded sides, zero-Exchange layout joins, codegen
+  * spans, the custom TopK operator). PlanSpec asserts these properties;
+  * this artifact makes them reviewable without running anything.
+  *
+  * With names it writes `<outDir>/<name>_<suffix>.txt` per query — the
+  * `plans/rN/<query>_{before,after}.txt` artifact an optimization round
+  * diffs.
+  *
+  * Usage: runMain graft.PlanDump [sfDir] [outFile]
+  *        runMain graft.PlanDump <sfDir> <outDir> <suffix> <queryName>...
   */
-object ExplainDump {
+object PlanDump {
   private val picks: Seq[(String, String)] = Seq(
     "q01_pricing_summary" ->
       "Partial aggregation before the exchange (map-side combine); scan reads only the 4 referenced columns of lineitem (ReadSchema) with the date filter pushed (PushedFilters).",
@@ -91,7 +101,7 @@ object ExplainDump {
     "hn01_graph_ann" ->
       "Graph ANN: assignment is HIERARCHICAL (coarse reps then one group's ≤128 centroids — both map-side broadcast-array argmax, ~(n/16384+128)·n cosines instead of the flat n²/128 the 1000× probe timed out on); the kNN edge build is an equi-join on the count-calibrated cell id through the k-bounded TopK operator; hub cliques stay within super-cells plus an apex clique (edge table ~n, never (n/128)²); the entry scan is hubs × broadcast(32 queries) map-side; beam rounds broadcast only beam-bounded candidate lists; per-round visited sets are pinned InMemoryRelations.",
     "ev17_bucketized_interval" ->
-      "Pure (no-equi-key) interval join under time-bin blocking: the views side is exploded into (bin, bin+1) map-side, the join is a plain shuffle equi-join on the bin with the exact range predicate as its post-filter — no BroadcastNestedLoopJoin, no CartesianProduct anywhere in the plan.",
+      "Pure (no-equi-key) interval join under time-bin blocking: the views side is exploded into (bin, bin+1) map-side, the join is a plain equi-join on the bin with the exact range predicate as its post-filter (hash-broadcast while the exploded side fits the 64 MB threshold, as at this SF; a shuffle join beyond it) — no BroadcastNestedLoopJoin, no CartesianProduct anywhere in the plan.",
     "dd18_evolving_admission" ->
       "Evolving LSH admission: ONE equi-join on (band_idx, bkey) between the delta bands and the corpus+delta pool (band-key-bucketed at cluster scale ⇒ no state reshuffle); the corpus/id-order predicates ride the join as post-filters, and the signature pass is pinned once for both splits.",
     "dd19_twin_safe_lsh" ->
@@ -132,36 +142,38 @@ object ExplainDump {
       "MV rewrite under a predicate: the dim-only filter (l_returnflag <> 'A') selects whole grain groups, so the rule replays it verbatim over the summary scan — Filter sits above the 6-row MV relation, and the fact table is untouched. A predicate on any pre-aggregated column (q01's l_shipdate) structurally disqualifies the rewrite instead."
   )
 
+  private def explain(spark: SparkSession, sfDir: String, name: String): String =
+    SparkEntry.queries.getOrElse(name, sys.error(s"unknown query: $name"))(spark, sfDir)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val qs = SparkEntry.queries
-    val body = picks.flatMap { case (name, why) =>
-      qs.get(name).map { fn =>
-        val plan = fn(spark, sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
-        s"## `$name`\n\n$why\n\n```\n${plan.trim}\n```\n"
+    val spark = Harness.session()
+    if (args.length > 3) {
+      val Array(outDir, suffix) = args.slice(1, 3)
+      Files.createDirectories(Paths.get(outDir))
+      args.drop(3).foreach { name =>
+        Files.write(Paths.get(s"$outDir/${name}_$suffix.txt"),
+          explain(spark, sfDir, name).getBytes("UTF-8"))
+        println(s"wrote $outDir/${name}_$suffix.txt")
       }
-    }.mkString("\n")
-    val header =
-      s"""# PLANS — physical-plan audit (generated by `graft.ExplainDump`)
-         |
-         |Formatted plans for representative headline queries at $sfDir.
-         |Each section states the scale property the plan must carry;
-         |PlanSpec enforces these properties in CI, this file makes them
-         |reviewable. Regenerate: `sbt "runMain graft.ExplainDump"`.
-         |""".stripMargin
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (header + "\n" + body).getBytes("UTF-8"))
-    println(s"wrote $out (${picks.size} plans)")
+    } else {
+      val out = args.lift(1).getOrElse("PLANS.md")
+      val body = picks.map { case (name, why) =>
+        s"## `$name`\n\n$why\n\n```\n${explain(spark, sfDir, name).trim}\n```\n"
+      }.mkString("\n")
+      val header =
+        s"""# PLANS — physical-plan audit (generated by `graft.PlanDump`)
+           |
+           |Formatted plans for representative headline queries at $sfDir on the
+           |harness session (`graft.Harness`, the bench's confs at ${Harness.cpus} cores).
+           |Each section states the scale property the plan must carry; PlanSpec
+           |enforces these properties in CI, this file makes them reviewable.
+           |Regenerate: `tools/graft_java.sh graft.PlanDump`.
+           |""".stripMargin
+      Files.write(Paths.get(out), (header + "\n" + body).getBytes("UTF-8"))
+      println(s"wrote $out (${picks.size} plans)")
+    }
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Writes a key-shifted K× replica of a testdata scale-factor dir — the
@@ -35,14 +34,7 @@ object ScaleUp {
     val tables: Option[Set[String]] =
       if (args.length > 3) Some(args(3).split(",").toSet) else None
     def wanted(t: String): Boolean = tables.forall(_.contains(t))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val copies = spark.range(k.toLong).select(col("id").as("copy"))
 
     if (wanted("documents")) {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -23,13 +22,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 object ScanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     Registry.all.sortBy(_.name).foreach { q =>
       try {
@@ -48,9 +41,7 @@ object ScanAudit {
           .map { case (p, o) => s"$p x${o.size}" }
         if (dup.nonEmpty) println(s"${q.name}: ${dup.mkString(", ")}")
       } catch { case e: Throwable => println(s"${q.name}: ERR $e") }
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Harness.release(spark)
     }
     spark.stop()
   }

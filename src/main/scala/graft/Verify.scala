@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,15 +11,8 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions) // production injection path
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the bench session: the plan the oracle checks is the plan Bench times
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
     // per-query wall time: a coarse bench cross-check riding the
     // correctness run (single cold execution, includes the result
@@ -36,13 +28,7 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Pin's persist mode registers frames in the CacheManager and
-      // relies on the RUN boundary to release them; a full 156-query
-      // sweep in one JVM is that boundary's worst case (every iterative
-      // query's per-round frames would otherwise accumulate for the
-      // whole run). Same per-query isolation as Bench.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Harness.release(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -634,7 +634,7 @@ object IvfQueries {
     *
     * Scale shape: the query set is a fixed harness parameter (32
     * vectors — scale-invariant, so the broadcast hint passes the
-    * BroadcastGuardSpec sweep), the exact side is one linear corpus
+    * RegistrySweepSpec broadcast guard), the exact side is one linear corpus
     * scan per query batch (ground truth is query×corpus BY
     * DEFINITION — bounded by the query prefix, never quadratic in the
     * corpus), and the IVF side joins only the queries' own cells.
@@ -858,7 +858,7 @@ object IvfQueries {
     * for exact). Scale shape: the edge build is cell-bounded; every
     * search-side join broadcasts only fixed-size frames (32 queries,
     * ≤16 hubs, beam-bounded candidate lists) against corpus-side
-    * fetch joins on vec_id — BroadcastGuardSpec-clean; the H-round
+    * fetch joins on vec_id — broadcast-guard clean; the H-round
     * loop pins each round's visited set (Pin), the iterative-operator
     * convention PageRank/k-means established here. */
   // graph-ANN family parameters, shared by hn01 (build+search+recall
@@ -1880,19 +1880,6 @@ object IvfQueries {
   private val h5Dirs =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), (String, Int)]
 
-  /** (cid-range width, #group dirs) of the bucket-range-grouped
-    * SECONDARY node store ([[h5IndexDir]] writes it; hn05's member
-    * fetch prunes with it) — same key and lifetime as [[h5Dirs]]. */
-  private val h5Grp =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), (Long, Long)]
-
-  /** Group-dir budget for the secondary node store: large enough that
-    * a sparse delta's interval set touches a few percent of the dirs
-    * at the 1000× scale (≈15.6k cells → cw 4), small enough that the
-    * per-dir files stay readable-sized; ncells caps the actual count
-    * (small corpora get one dir per cid). */
-  private val H5NodeGroups = 4096L
-
   private val H5ModConf = "spark.graft.hn05.deltaMod"
 
   private def h5Mod(s: SparkSession): Long =
@@ -2338,41 +2325,6 @@ object IvfQueries {
               sum((col("src") * lit(1000003L) + col("dst"))
                 % lit(1000000007L)).cast(LongType).as("chk"))
             .write.mode("overwrite").parquet(s"$dir/esum")
-          // SECONDARY bucket-range-grouped node store (mf01's
-          // explicit-list skipping idiom applied to the member fetch):
-          // one dir per cid range of width cw, so a sparse delta's
-          // fetch reads ONLY the dirs its top-layer bucket intervals
-          // intersect. A plain hash repartition on the GROUP key over
-          // the parquet READ-BACK — deliberately not repartitionByRange
-          // (its sampling pass re-executed the live assignment plan,
-          // +420 s at 2M vectors — the r14 negative result) and no
-          // change to the primary store any other path reads.
-          // built only when pruning can ever engage (small corpora —
-          // the three harness SFs at ncells = 16 — cover every group
-          // with any delta and always take the full fallback; skipping
-          // the build keeps default sweeps free of the extra corpus
-          // read+shuffle+write and the ~2× node-store disk).
-          // Partitioned by (LEVEL, cid-group): the node mass is
-          // hash-geometric in level, so levels 0–2 (~98% of rows) get
-          // narrow cid-range dirs a sparse delta can skip, and each
-          // deep level (≤ n/64 rows total) lands in one dir read
-          // whole. `plvl` duplicates lvl as the partition key so the
-          // data files keep the lvl column the recompute needs.
-          if (ncells >= 256 &&
-              s.conf.get("spark.graft.hn05.prune", "false").toBoolean) {
-            val cw = math.max(1L, (ncells + H5NodeGroups - 1) / H5NodeGroups)
-            s.read.parquet(s"$dir/nodes")
-              .withColumn("plvl", col("lvl"))
-              .withColumn("cgrp",
-                when(col("lvl") <= 2, expr(s"cid div $cw"))
-                  .otherwise(lit(-1L)))
-              .repartition(col("plvl"), col("cgrp"))
-              .write.mode("overwrite").partitionBy("plvl", "cgrp")
-              .parquet(s"$dir/nodes_grp")
-            val ndirs = s.read.parquet(s"$dir/nodes_grp")
-              .select(col("plvl"), col("cgrp")).distinct().count()
-            h5Grp.put((s, d, mod), (cw, ndirs))
-          }
           // the staged ingest batch the timed path admits
           Tables.embeddings(s, d).filter(col("vec_id") % mod === 0)
             .select(col("vec_id"), col("embedding"))
@@ -2459,53 +2411,8 @@ object IvfQueries {
       try {
         val nodes = s.read.parquet(s"$dir/nodes")
         val nsum = s.read.parquet(s"$dir/nsum")
-        // Member-fetch FILE PRUNING (mf01's explicit-list idiom over
-        // the (level, cid-group) secondary store): a level-lv node can
-        // match an affected bucket at any layer l ≤ min(lv, lmax), and
-        // bucket agreement at layer l means cid agreement within a
-        // width-4^l interval ((a div m) div n = a div m·n) — so for
-        // levels 0–2 the fetch reads only the group dirs covering the
-        // delta cids' width-4^min(lv,2) intervals, and deep levels
-        // (≥ 3, hash-geometric ≤ n/64 of the mass) read whole. The
-        // semi-join inside ladderRecompute still filters exactly over
-        // this superset (byte-identical census proven at the 100×
-        // sparse probe). OFF BY DEFAULT — a measured NEGATIVE result
-        // on this box (SCALING.md r15): the many-small-dir read cost
-        // more than the scan bytes it saved at both 100× (16.2 s vs
-        // 7.5 s full) and 1000× sparse (96.8 s vs 87.9 s same-day
-        // full), because the member fetch is a minor term of the
-        // upsert and leaf-dir fan-out dominates the savings. Kept
-        // behind spark.graft.hn05.prune=true for layouts where the
-        // node store is remote/columnar-cold and bytes dominate
-        // opens; also falls back when the cover spans most dirs (the
-        // uniform/dense %211 regime).
-        val fetch = h5Grp.get((s, d, h5Mod(s))) match {
-          case Some((cw, ndirs))
-              if s.conf.get("spark.graft.hn05.prune", "false").toBoolean =>
-            val cids = delta.select(col("cid")).distinct()
-              .collect().map(_.getLong(0))
-            val shallow = (0 to math.min(2, lmax)).flatMap { lv =>
-              val w = math.pow(4, lv).toLong
-              cids.flatMap { c =>
-                val lo = (c / w) * w
-                (lo / cw to (lo + w - 1) / cw).map(g => (lv, g))
-              }.distinct
-            }
-            val deep = (3 to lmax).map(lv => (lv, -1L))
-            if ((shallow.length + deep.length) * 2L >= ndirs) nodes
-            else {
-              val gfs = new org.apache.hadoop.fs.Path(s"$dir/nodes_grp")
-                .getFileSystem(s.sparkContext.hadoopConfiguration)
-              val dirs = (shallow ++ deep)
-                .map { case (lv, g) => s"$dir/nodes_grp/plvl=$lv/cgrp=$g" }
-                .filter(p => gfs.exists(new org.apache.hadoop.fs.Path(p)))
-              if (dirs.isEmpty) nodes.limit(0)
-              else s.read.schema(nodes.schema).parquet(dirs.toSeq: _*)
-            }
-          case _ => nodes
-        }
         val (members, affected, rec) =
-          ladderRecompute(fetch.unionByName(delta), delta)
+          ladderRecompute(nodes.unionByName(delta), delta)
         try {
           LadderGuard.check(s, "hn05_ladder_upsert",
             members.count(),
@@ -3678,9 +3585,10 @@ object IvfQueries {
     * as regressing). The child is memoized per (session, dir) so the
     * per-session index/fixture memoizers keep their keys across a
     * bench's timed runs, with parent confs re-copied per access
-    * (Sessions.sizedFor). hn01–hn03 stay unwrapped: hn03 already
-    * runs its search on its own 4-partition child, and hn01/hn02
-    * were not probe-covered. */
+    * (Sessions.sizedFor). hn01–hn03 are not embSized: each runs its
+    * search on its own width-1 no-AQE child, because every shuffled
+    * frame of the beam/descent search is query-count-bounded (r17
+    * probes: hn01 0.89×, hn02 0.70×, hn03 0.78× min-of-5). */
   private val embCounts =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
 

@@ -394,7 +394,7 @@ object SimilarityQueries {
     * label, neighbor ties by smallest cand_id — both integer rules, so
     * the matrix is engine-identical. Scale shape: the query side is a
     * fixed 64-vector slice (broadcast — scale-invariant, passes the
-    * BroadcastGuardSpec sweep); the reference side streams once
+    * RegistrySweepSpec broadcast guard); the reference side streams once
     * map-side through the codegen'd cosine as a plain broadcast cross
     * (the slices are disjoint, so no join predicate — and no
     * BroadcastNestedLoopJoin per-pair filter); neighbor selection and

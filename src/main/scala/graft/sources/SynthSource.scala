@@ -538,7 +538,7 @@ object SynthQueries {
     (s, _) => {
       // child session (ad02's idiom): same SparkContext + extensions,
       // but the SPJ planner opt-in can't leak into later queries —
-      // ConfHygieneSpec sweeps every registry query for exactly this
+      // RegistrySweepSpec checks every registry query for exactly this
       val s2 = graft.Sessions.child(s,
         "spark.sql.sources.v2.bucketing.enabled" -> "true")
       def rd(rows: Int) = s2.read.format("graft.sources.SynthSource")

@@ -26,26 +26,6 @@ class ContractSpec extends AnyFunSuite {
     }
   }
 
-  /** Registry completeness guard: EVERY registry query must at least
-    * ANALYZE against the current testdata. Building a DataFrame runs
-    * Catalyst analysis eagerly, so schema drift in the corpus (the
-    * round-7 events.parquet nanos→micros regeneration killed 18
-    * queries with zero per-name signal) surfaces here as a named list
-    * instead of one opaque red. No jobs run for pure builders; the
-    * few iterative builders (kmeans, BPE) execute their bounded loops
-    * at sf0.001, keeping the sweep cheap. */
-  test("every registry query analyzes against current testdata") {
-    val failures = Registry.all.flatMap { q =>
-      scala.util.Try(SparkEntry.queries(q.name)(spark, sf).schema) match {
-        case scala.util.Success(_) => None
-        case scala.util.Failure(e) =>
-          Some(s"${q.name}: ${e.getClass.getSimpleName} ${Option(e.getMessage).getOrElse("").linesIterator.take(2).mkString(" | ")}")
-      }
-    }
-    assert(failures.isEmpty,
-      s"${failures.size} registry queries fail analysis:\n${failures.mkString("\n")}")
-  }
-
   /** Blanket determinism sweep: EVERY registry query, run twice,
     * must return identical rows in identical order. This is the local
     * face of the driver's hash compare — any query that depends on

@@ -91,7 +91,7 @@ class GraphSpec extends AnyFunSuite {
     // the recursion must be a single engine-executed loop, not an
     // unrolled union of 4 levels. gr05's build now materializes the
     // result eagerly (the cteRecursionRowLimit raise is scoped to the
-    // build — ConfHygieneSpec), so the RETURNED frame's plan is the
+    // build — RegistrySweepSpec), so the RETURNED frame's plan is the
     // checkpoint scan; pin the loop on the recursion text itself over
     // a local edge view (r16: the build registers its view on the
     // input-sized CHILD session — Sessions.sizedFor — so this session

@@ -6,17 +6,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    // the production deployment path: every spec exercises the
-    // injected functions/strategy/optimizer-rule, not the imperative
-    // register() shims
-    .withExtensions(new graft.plans.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // fixed width: partition-count and plan assertions are written for 4 cores
+  lazy val spark: SparkSession = Harness.session(cpus = 4)
 }
 
 /** Ports of the reference's end-to-end semantic tests

@@ -1,9 +1,12 @@
 #!/bin/bash
-# Run a graft main (graft.Verify / graft.Bench / graft.ScaleUp) on the
+# Run a graft main (graft.Verify / graft.Bench / graft.PlanDump /
+# graft.JobProbe / graft.ScanAudit / graft.ScaleUp) on the
 # sbt runtime classpath WITHOUT sbt's per-invocation startup cost,
 # with the same JVM module-opens build.sbt gives forked runs (raw
 # `java -cp` otherwise dies in Kryo on java.nio access — pc01).
 # Usage: tools/graft_java.sh [-Xmx...] graft.Verify args...
+#        tools/graft_java.sh graft.PlanDump [sfDir] [outFile]   (PLANS.md)
+#        tools/graft_java.sh graft.PlanDump <sfDir> <outDir> <suffix> <query>...
 set -e
 cd "$(dirname "$0")/.."
 CP_CACHE=/tmp/graft_runtime_cp.txt
