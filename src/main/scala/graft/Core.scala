@@ -17,9 +17,30 @@ import org.apache.spark.sql.types._
   */
 final case class GraftQuery(
     name: String,
-    build: (SparkSession, String) => DataFrame,
+    body: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    doc: String = "")
+    doc: String = "",
+    sizing: Sizing = Sizing.Session) {
+  /** What every caller runs: `body` on the session [[sizing]] picks. */
+  val build: (SparkSession, String) => DataFrame =
+    (s, d) => body(sizing.session(s, d), d)
+}
+
+/** The shuffle width a query's span runs at: the session's own, or one
+  * derived from a single input table's size ([[Sessions.sizedFor]]) for
+  * spans whose every shuffled frame that table bounds. */
+sealed trait Sizing {
+  def session(parent: SparkSession, dir: String): SparkSession
+}
+object Sizing {
+  case object Session extends Sizing {
+    def session(parent: SparkSession, dir: String): SparkSession = parent
+  }
+  final case class Input(table: String, adaptive: Boolean = true) extends Sizing {
+    def session(parent: SparkSession, dir: String): SparkSession =
+      Sessions.sizedFor(parent, dir, table, adaptive)
+  }
+}
 
 /** Table loaders for the driver-generated parquet corpus (TESTDATA.md).
   * Plain `spark.read.parquet` — Catalyst handles column pruning and
@@ -28,7 +49,17 @@ final case class GraftQuery(
   */
 object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    spark.read.parquet(path(dir, name))
+
+  /** Data-file bytes of a table: the `sizeInBytes` Catalyst's analyzed
+    * plan reports for its raw scan, read from the file index alone —
+    * `t` pays a parquet schema-inference job, a listing pays none. */
+  def bytes(spark: SparkSession, dir: String, name: String): Long =
+    new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(spark,
+      Seq(new org.apache.hadoop.fs.Path(path(dir, name))), Map.empty, None)
+      .sizeInBytes
+
+  private def path(dir: String, name: String) = s"$dir/$name.parquet"
 
   def region(s: SparkSession, d: String) = t(s, d, "region")
   def nation(s: SparkSession, d: String) = t(s, d, "nation")
@@ -267,85 +298,88 @@ object Pin {
   * isolated overrides; static confs that refuse a runtime set are
   * skipped (they cannot differ within one context anyway). */
 object Sessions {
-  /** Child session whose shuffle width derives from an input-row
-    * estimate — rows/50k + 1, capped at the parent's width (the
-    * starContraction loop-sizing rule extended to whole query spans;
-    * r16). Iterative/micro-stage operators over input-bounded frames
-    * pay a fixed scheduling cost per near-empty task at the session's
-    * fact-table width; deriving the width from the INPUT keeps it
-    * scale-adaptive — a 100 TB input saturates the cap and nothing
-    * narrows. Returns the parent unchanged when the estimate already
-    * fills the width.
+  /** Child session for a span whose shuffled frames one input table
+    * bounds: width = data-file bytes / 1 MB + 1 ([[Tables.bytes]], no
+    * job), capped at the parent's width. Iterative/micro-stage spans
+    * over input-bounded frames pay a fixed scheduling cost per
+    * near-empty task at the session's fact-table width; deriving the
+    * width from the INPUT keeps it scale-adaptive — a 100 TB input
+    * saturates the cap, the parent comes back unchanged and nothing
+    * narrows. 1 MB per partition gives documents, embeddings and
+    * lineitem, at every testdata scale, the widths the probes cited
+    * below measured (those ran under a rows/50k rule).
     *
-    * ONE sized child per (parent, key), memoized: builders that
-    * memoize per-session state (index dirs, collected fixtures — all
-    * keyed by session) need the SAME session across a bench's timed
-    * runs or every run would rebuild its setup state. `rows` is
-    * by-name so the input count runs once, on first use. The parent's
-    * runtime confs are RE-COPIED on every access (then the width
-    * override re-applied): a conf set on the parent after the child
-    * was created — a guard key, a probe override — must still reach
-    * the wrapped query, exactly as it would an unwrapped one. */
-  private val sizedChildren = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), SparkSession]
-
-  /** `adaptive = false` additionally disables AQE in the NARROWED
+    * `adaptive = false` additionally disables AQE in the NARROWED
     * child (r17, measured on the iterative/census family: hn04 0.53×,
     * hn05 0.74×, dd08 0.73×, dd20 0.81×, gr06 0.88× min-of-5). AQE's
     * per-stage materialization exists to right-size big shuffles at
-    * runtime; at an input-derived width of 1–13 partitions there is
-    * nothing left to coalesce, and its driver barrier per query stage
-    * is pure latency in 10–40-micro-stage loop spans. Scale-safe by
-    * the same construction as the width itself: the flag only ever
-    * applies when the input estimate NARROWS the child — a 100 TB
-    * input saturates the cap, the parent session is returned
-    * unchanged, and AQE stays on. NOT the default: the
-    * embeddings-serving family measured mixed (pq01 1.37× worse —
-    * its plan leans on AQE's runtime broadcast conversion), so each
-    * call site opts in with its own probe. */
-  def sizedFor(parent: SparkSession, key: String, rows: => Long,
-      adaptive: Boolean = true): SparkSession =
-    sizedChildren.synchronized {
-      // defensive parse (ADVICE r16): a platform that sets a
-      // non-numeric width (e.g. "auto") must degrade to the context
-      // parallelism, not throw in every sized query
-      val cur = scala.util.Try(
-        parent.conf.get("spark.sql.shuffle.partitions").toLong)
-        .getOrElse(parent.sparkContext.defaultParallelism.toLong)
-      val parts = math.max(1L, math.min(cur, rows / 50000L + 1L))
-      if (parts >= cur) parent
-      else {
-        val c = sizedChildren.getOrElseUpdate((parent, key), parent.newSession())
-        val pc = parent.conf.getAll
-        // removals must propagate too: a key UNSET on the parent (a
-        // test's guard/probe conf restored in its finally) would
-        // otherwise stay live in the child forever — observed as a
-        // stale hn05 deltaMod tripping the oracle pin a suite later
-        c.conf.getAll.keys.filterNot(pc.contains).foreach { k =>
-          try c.conf.unset(k)
-          catch { case _: org.apache.spark.sql.AnalysisException => () }
-        }
-        pc.foreach { case (k, v) =>
-          try c.conf.set(k, v)
-          catch { case _: org.apache.spark.sql.AnalysisException => () }
-        }
-        c.conf.set("spark.sql.shuffle.partitions", parts.toString)
-        if (!adaptive) c.conf.set("spark.sql.adaptive.enabled", "false")
-        c
-      }
+    * runtime; at an input-derived width there is nothing left to
+    * coalesce, and its driver barrier per query stage is pure latency
+    * in 10–40-micro-stage loop spans. It only applies when the width
+    * narrows. NOT the default: the embeddings-serving family measured
+    * mixed (pq01 1.37× worse — its plan leans on AQE's runtime
+    * broadcast conversion). */
+  def sizedFor(parent: SparkSession, dir: String, table: String,
+      adaptive: Boolean = true): SparkSession = {
+    // defensive parse (ADVICE r16): a platform that sets a non-numeric
+    // width (e.g. "auto") must degrade to the context parallelism
+    val cur = scala.util.Try(
+      parent.conf.get("spark.sql.shuffle.partitions").toLong)
+      .getOrElse(parent.sparkContext.defaultParallelism.toLong)
+    val parts = math.min(cur, Tables.bytes(parent, dir, table) / 1000000L + 1L)
+    if (parts >= cur) parent else narrowed(parent, s"$table@$dir", parts, adaptive)
+  }
+
+  /** ONE child per (parent, key, adaptive), memoized: builders that
+    * memoize per-session state (index dirs, collected fixtures — all
+    * keyed by session) need the SAME session across a bench's timed
+    * runs or every run would rebuild its setup state. The parent's
+    * runtime confs are RE-COPIED on every access (then the width
+    * override re-applied): a conf set on the parent after the child
+    * was created — a guard key, a probe override — must still reach
+    * the query, exactly as it would the parent. That re-copy mutates
+    * a child another query may be running on, so it assumes one
+    * driver thread builds and runs queries at a time (true of Bench,
+    * Verify and the test suite); concurrent query threads would need a
+    * per-query conf snapshot instead. */
+  private val children = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, Boolean), SparkSession]
+
+  def narrowed(parent: SparkSession, key: String, width: Long,
+      adaptive: Boolean): SparkSession =
+    children.synchronized {
+      val c = children.getOrElseUpdate((parent, key, adaptive), parent.newSession())
+      mirror(parent, c)
+      c.conf.set("spark.sql.shuffle.partitions", width.toString)
+      if (!adaptive) c.conf.set("spark.sql.adaptive.enabled", "false")
+      c
     }
 
   def child(parent: SparkSession, overrides: (String, String)*): SparkSession = {
     val s = parent.newSession()
-    parent.conf.getAll.foreach { case (k, v) =>
+    mirror(parent, s)
+    overrides.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
+
+  /** Makes `c`'s runtime confs equal the parent's. */
+  private def mirror(parent: SparkSession, c: SparkSession): Unit = {
+    val pc = parent.conf.getAll
+    // removals must propagate too: a key UNSET on the parent (a test's
+    // guard/probe conf restored in its finally) would otherwise stay
+    // live in a memoized child forever — observed as a stale hn05
+    // deltaMod tripping the oracle pin a suite later
+    c.conf.getAll.keys.filterNot(pc.contains).foreach { k =>
+      try c.conf.unset(k)
+      catch { case _: org.apache.spark.sql.AnalysisException => () }
+    }
+    pc.foreach { case (k, v) =>
       // static confs refuse a runtime set (AnalysisException — they
       // cannot differ within one context anyway); anything ELSE that
       // fails to copy must surface, not silently vanish from the child
-      try s.conf.set(k, v)
+      try c.conf.set(k, v)
       catch { case _: org.apache.spark.sql.AnalysisException => () }
     }
-    overrides.foreach { case (k, v) => s.conf.set(k, v) }
-    s
   }
 }
 

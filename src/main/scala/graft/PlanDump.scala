@@ -119,7 +119,7 @@ object PlanDump {
     "hn02_graph_serving" ->
       "Graph-ANN serving: the NSW index (edges repartitioned by src, hubs with embeddings, id->vector fetch table) persists ONCE per session/dir (bench reports it as setup_write) and the timed plan is pure search — hub entry scan x broadcast(queries), HnH beam rounds whose every join broadcasts only beam-bounded candidate lists against storage-side fetch joins. The serving fleet shape: index offline, answer online.",
     "hn03_hnsw_ann" ->
-      "Multi-layer HNSW serving: the ladder's edges persist partitioned BY LAYER, so every descent round's scan is one layer partition (partition pruning on `layer`); each of the log₄(cells) descent rounds joins that slice against a BROADCAST front of ≤ NQ·E candidates and scores via storage-side fetch joins (vecs looked up by id, the corpus is never rescanned); per-round frames are LogicalRDD-truncated so round-N plans stay round-sized (skipped when the ladder is too shallow to blow up). Every SHUFFLED frame here is query-count-bounded, so the search runs on a child session pinned to 4 shuffle partitions — the session default fanned ~18 micro-stages into 32 near-empty tasks each, and AQE's parallelism-first coalescer never shrinks below core count (round-14: 4.9 → 2.3 s min-of-5 at sf0.1). Search cost follows ladder depth, not corpus size — measured 6.2 → 13.7 s across a 1000× corpus growth (BENCH_1000X_hn03_r12.json).",
+      "Multi-layer HNSW serving: the ladder's edges persist partitioned BY LAYER, so every descent round's scan is one layer partition (partition pruning on `layer`); each of the log₄(cells) descent rounds joins that slice against a BROADCAST front of ≤ NQ·E candidates and scores via storage-side fetch joins (vecs looked up by id, the corpus is never rescanned); per-round frames are LogicalRDD-truncated so round-N plans stay round-sized (skipped when the ladder is too shallow to blow up). Every SHUFFLED frame here is query-count-bounded, so the search runs on one memoized child session at width 1 with AQE off (shared with hn01/hn02) — at the session default each of ~18 micro-stages fanned into near-empty tasks with an AQE driver barrier apiece, and AQE's parallelism-first coalescer never shrinks below core count (round-14, width 4: 4.9 → 2.3 s min-of-5 at sf0.1; r17, width 1 and AQE off: 2.69 → 2.09 s). Search cost follows ladder depth, not corpus size — measured 6.2 → 13.7 s across a 1000× corpus growth (BENCH_1000X_hn03_r12.json).",
     "hn04_hnsw_upsert" ->
       "Incremental ladder upsert as ONE fused plan: the delta assigns+levels against a 16-row broadcast codebook map-side; nodes explode to their layers once and (layer, bucket) keys every join; the affected-bucket recompute is a semi-join-bounded self-join, the carry is a broadcast ANTI join against the stored per-layer edges (partition-pruned by layer), and the census is two 3-row groupBys — the corpus is never rescanned and no stage depends on layer count sequentially.",
     "q61_min_cost_supplier" ->

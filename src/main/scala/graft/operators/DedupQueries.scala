@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Sizing, Tables}
 import graft.Pin.PinOps
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,28 +21,16 @@ import org.apache.spark.sql.types._
   * in the DuckDB oracle.
   */
 object DedupQueries {
-  /** Input-sized shuffle width for incidence-bounded loop spans
-    * ([[graft.Sessions.sizedFor]]; the gr06/gr07 discipline). Document
-    * count memoized per (session, dir) — static-input metadata. */
-  private val docCounts =
-    scala.collection.concurrent.TrieMap.empty[(org.apache.spark.sql.SparkSession, String), Long]
-
-  private def sizedChild(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.Sessions.sizedFor(s, s"docs:$d",
-      // raw scan, not Tables.documents: the loader wraps fanout and the
-      // sizing count would pay that repartition's shuffle for a footer
-      // row count
-      docCounts.getOrElseUpdate((s, d), Tables.t(s, d, "documents").count()),
-      // adaptive = false: label-prop/star-contraction loop spans — AQE's
-      // per-stage driver barrier is pure latency at the sized width
-      // (r17 min-of-5: dd08 0.73×, dd20 0.81×); no-op at scale where
-      // the width cap saturates (Sessions.sizedFor)
-      adaptive = false)
-
-
-  private def q(name: String, doc: String, sql: String)(
+  private def q(name: String, doc: String, sql: String,
+      sizing: Sizing = Sizing.Session)(
       build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
+    GraftQuery(name, build, Some(sql), doc, sizing)
+
+  /** dd08/dd20's loop spans are bounded by the doc-bucket incidence, so
+    * their width derives from `documents`; AQE off because its
+    * per-stage driver barrier is pure latency at the sized width (r17
+    * min-of-5: dd08 0.73×, dd20 0.81×). */
+  private val ByDocuments = Sizing.Input("documents", adaptive = false)
 
   /** Exact-duplicate groups by content digest. The digest (not the
     * text) is the groupBy key, so the shuffle carries 32 hex chars per
@@ -310,8 +298,8 @@ object DedupQueries {
        |l$k AS MATERIALIZED (SELECT i.doc_id, MIN(b.blbl) AS lbl
        |  FROM inc i JOIN b$k b USING (bucket) GROUP BY i.doc_id)""").mkString
       + s"""
-       |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin) { (s0, d) =>
-    val s = sizedChild(s0, d) // incidence-sized width for the label loop
+       |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin,
+    sizing = ByDocuments) { (s, d) =>
     val inc0 = Tables.documents(s, d)
       .select(col("doc_id"), explode(array(
         concat(lit("1:"), TextFunctions.lshBand(col("text"), 0, 2)),
@@ -1444,8 +1432,8 @@ object DedupQueries {
        |l$k AS MATERIALIZED (SELECT i.doc_id, MIN(b.blbl) AS lbl
        |  FROM inc i JOIN b$k b USING (bucket) GROUP BY i.doc_id)""").mkString
       + s"""
-       |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin) { (s0, d) =>
-    val s = sizedChild(s0, d) // incidence-sized width for the whole span
+       |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin,
+    sizing = ByDocuments) { (s, d) =>
     val docs = Tables.documents(s, d)
     val inc0 = docs
       .select(col("doc_id"), explode(array(

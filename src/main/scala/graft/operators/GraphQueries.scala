@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Sizing, Tables}
 import graft.Pin.PinOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -40,9 +40,18 @@ import org.apache.spark.sql.functions._
   * skipping the exchange is worth it. Output is identical either way.
   */
 object GraphQueries {
-  private def q(name: String, doc: String, sql: String)(
+  private def q(name: String, doc: String, sql: String,
+      sizing: Sizing = Sizing.Session)(
       build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
+    GraftQuery(name, build, Some(sql), doc, sizing)
+
+  /** Input-sized width for the component/BFS spans (gr05–gr07): they
+    * run ~10–40 micro-stages over frames bounded by the distinct-pair/
+    * vertex size, and at the session's fact-table width each stage fans
+    * into near-empty tasks (measured 17–33% of gr05/gr06/gr07 at
+    * sf0.1). AQE off: its per-stage driver barrier is pure latency at
+    * the sized width (r17 min-of-5: gr06 0.88×, gr05/gr07 neutral). */
+  private val ByLineitem = Sizing.Input("lineitem", adaptive = false)
 
   /** Join-mode switch for O(|V|) per-round node-state frames. */
   private def vside(df: DataFrame): DataFrame =
@@ -320,7 +329,7 @@ object GraphQueries {
         |GROUP BY d ORDER BY d""".stripMargin
     q("gr05_recursive_bfs",
       "BFS as a single recursive CTE (WITH RECURSIVE / UnionLoop) — engine-iterated, DISTINCT-per-level, depth-guarded",
-      body.replace("%LI%", "lineitem").replace("%ORD%", "orders")) { (s0, d) =>
+      body.replace("%LI%", "lineitem").replace("%ORD%", "orders"), sizing = ByLineitem) { (s, d) =>
       // UnionLoop re-evaluates every CTE the recursive step references
       // ON EACH ITERATION — the engine loop has no equivalent of
       // gr03's pinned edge frame (measured: 4.0 s vs gr03's ~0.5 s at
@@ -347,7 +356,6 @@ object GraphQueries {
       // getOption would report the registered DEFAULT (1M) as if it
       // had been set, and "restoring" it would pin the default as an
       // explicit session value — getAll carries only explicit settings
-      val s = sizedChild(s0, d) // input-sized width for the recursion
       val prevLimit = s.conf.getAll.get("spark.sql.cteRecursionRowLimit")
       s.conf.set("spark.sql.cteRecursionRowLimit", "100000000")
       try {
@@ -536,37 +544,12 @@ object GraphQueries {
          |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
          |l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM und)
          |${(1 to ROUNDS).map(lblSql).mkString}
-         |SELECT node AS part, lbl AS comp FROM l$ROUNDS ORDER BY part""".stripMargin) { (s0, d) =>
-      val s = sizedChild(s0, d) // input-sized width for the whole span
+         |SELECT node AS part, lbl AS comp FROM l$ROUNDS ORDER BY part""".stripMargin,
+      sizing = ByLineitem) { (s, d) =>
       val (labels, _) = starContraction(sparsifiedEdges(s, d).pinned)
       labels.select(col("node").as("part"), col("comp")).orderBy("part")
     }
   }
-
-  /** Input-sized shuffle width for the component/BFS query span — the
-    * starContraction loop-sizing rule (rows/50k + 1, capped at the
-    * session width) extended to the WHOLE query via a child session
-    * (the hn03/ad02 conf-isolation idiom, so nothing leaks to later
-    * registry queries). These queries run ~10–40 micro-stages over
-    * frames bounded by the distinct-pair/vertex size, and at the
-    * session's fact-table width each stage fans into near-empty tasks
-    * whose fixed scheduling cost never amortizes (measured 17–33% of
-    * gr05/gr06/gr07 at sf0.1). Scale-adaptive by construction: the
-    * width follows the INPUT's row count, so a 100 TB corpus keeps
-    * the full session width and nothing corpus-sized narrows. The
-    * count is static-input metadata, memoized per (session, dir) like
-    * hn03's fixtures. */
-  private val liCounts =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  private def sizedChild(s: SparkSession, d: String): SparkSession =
-    // adaptive = false: these are 10–40-micro-stage loop spans at an
-    // input-derived width — AQE's per-stage driver barrier is pure
-    // latency here (r17 min-of-5: gr06 0.88×, gr05/gr07 neutral);
-    // no-op at scale, where the width cap saturates (Sessions.sizedFor)
-    graft.Sessions.sizedFor(s, s"graph:$d",
-      liCounts.getOrElseUpdate((s, d), Tables.lineitem(s, d).count()),
-      adaptive = false)
 
   /** gr04/gr06's top-D-sparsified co-purchase edge list, CANONICAL
     * (child u > parent v), distinct. Shared by the component family. */
@@ -661,7 +644,8 @@ object GraphQueries {
          |${(1 to ROUNDS).map(lblSql).mkString}
          |SELECT node AS part, lbl AS comp FROM l$ROUNDS ORDER BY part""".stripMargin) { (s0, d) =>
       val dir = gr07BaseDir(s0, d) // base state builds under the parent
-      val s = sizedChild(s0, d) // input-sized width for the warm span
+      // the warm span alone runs at gr06's sized width
+      val s = ByLineitem.session(s0, d)
       val baseLabels = s.read.parquet(s"$dir/base_labels")
       val delta = s.read.parquet(s"$dir/delta")
       // warm start: base labels as canonical star edges (roots' (x,x)

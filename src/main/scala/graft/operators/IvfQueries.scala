@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Sizing, Tables}
 import graft.Pin.PinOps
 import graft.plans.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -81,9 +81,29 @@ object IvfQueries {
         col("best.cid").as("cid"), col("best.cos_c").as("cos_c"))
   }
 
-  private def q(name: String, doc: String, sql: String)(
+  private def q(name: String, doc: String, sql: String,
+      sizing: Sizing = Sizing.Session)(
       build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
+    GraftQuery(name, build, Some(sql), doc, sizing)
+
+  /** Width for the embeddings-bounded serving family: every shuffled
+    * frame in these queries (assignments, codes, per-query candidate
+    * sets) is bounded by the embeddings table — full session width at
+    * production corpus sizes, a handful of partitions at harness
+    * scales where the fixed per-task scheduling cost dominated
+    * (same-set min-of-5 probe at width 1: median 0.89×, no
+    * regressions; total 10.5→9.0 s across the 24-query family). AQE
+    * stays on: pq01 measured 1.37× WORSE without it (its plan leans on
+    * the runtime broadcast conversion). */
+  private val ByEmbeddings = Sizing.Input("embeddings")
+
+  /** The ladder-IVM trio (hn04–hn06) at the same width with AQE off —
+    * a distinct child from [[ByEmbeddings]]'s, so the h4/h5 index
+    * memoizers keyed on it stay stable. Their timed path is a census
+    * over many tiny aggregates plus an affected-bucket kNN, where AQE's
+    * per-query-stage driver barrier dominated (r17 min-of-5: hn04
+    * 0.53×, hn05 0.74×, hn06 0.90×). */
+  private val LadderByEmbeddings = Sizing.Input("embeddings", adaptive = false)
 
   /** Inverted-file cell histogram: assignment quality at a glance. */
   val ivf01Assign: GraftQuery = q(
@@ -91,7 +111,7 @@ object IvfQueries {
     "IVF coarse quantizer: nearest-centroid assignment histogram",
     s"""WITH $sqlAssign
        |SELECT cid, COUNT(*) AS n_vecs, MIN(vec_id) AS first_vec
-       |FROM assigned GROUP BY cid ORDER BY cid""".stripMargin) { (s, d) =>
+       |FROM assigned GROUP BY cid ORDER BY cid""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     assignedDf(s, d)
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("first_vec"))
@@ -117,7 +137,7 @@ object IvfQueries {
        |      ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
        |  FROM pairs)
        |SELECT query_id, cand_id, cosine, rn FROM ranked WHERE rn <= 5
-       |ORDER BY query_id, rn""".stripMargin) { (s, d) =>
+       |ORDER BY query_id, rn""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     val assigned = assignedDf(s, d)
     val qv = assigned.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cid"))
@@ -254,7 +274,7 @@ object IvfQueries {
   val ivf03Train: GraftQuery = q(
     "ivf03_kmeans_train",
     s"spherical k-means: $TRAIN_ITERS Lloyd rounds over int64-exact centroid sums",
-    sqlKmeans(TRAIN_ITERS)) { (s, d) =>
+    sqlKmeans(TRAIN_ITERS), sizing = ByEmbeddings) { (s, d) =>
     kmeansTrain(quantizedDf(s, d), CELLS, TRAIN_ITERS)
       .select(col("cid"), col("n").as("n_vecs"),
         (element_at(col("cvec"), 1).cast(DoubleType) / col("n")).as("c1"),
@@ -309,7 +329,7 @@ object IvfQueries {
        |      ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
        |  FROM pairs)
        |SELECT query_id, cand_id, cosine, rn FROM ranked WHERE rn <= 5
-       |ORDER BY query_id, rn""".stripMargin) { (s, d) =>
+       |ORDER BY query_id, rn""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     val probes = probedDf(s, d, PROBES).filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"), col("cid"))
     val cv = assignedDf(s, d).select(col("vec_id").as("cand_id"),
@@ -352,7 +372,7 @@ object IvfQueries {
   val ivf05TrainedSearch: GraftQuery = q(
     "ivf05_trained_search",
     "IVF ANN over k-means-trained cells: probe-1 top-5 per query",
-    sqlTrainedSearch) { (s, d) =>
+    sqlTrainedSearch, sizing = ByEmbeddings) { (s, d) =>
     val qv = quantizedDf(s, d)
     // both join sides read the assignment; pin it once (train already
     // checkpoints per round, so this adds one small materialization)
@@ -392,7 +412,7 @@ object IvfQueries {
   val ivf06PersistedIndex: GraftQuery = q(
     "ivf06_persisted_index",
     "IVF index persisted partitioned-by-cell, reloaded, searched from storage",
-    sqlTrainedSearch) { (s, d) =>
+    sqlTrainedSearch, sizing = ByEmbeddings) { (s, d) =>
     val dir = indexDir(s, d)
     val index = s.read.parquet(dir)
       .select(col("vec_id"), col("q"), col("n2"), col("cid").cast(LongType).as("cid"))
@@ -447,7 +467,7 @@ object IvfQueries {
        |SELECT a.cid, COUNT(DISTINCT a.vec_id) AS n_members,
        |  CAST(COUNT(DISTINCT p.drop_id) AS BIGINT) AS n_dropped
        |FROM assigned a LEFT JOIN pairs p ON p.cid = a.cid
-       |GROUP BY a.cid ORDER BY a.cid""".stripMargin) { (s, d) =>
+       |GROUP BY a.cid ORDER BY a.cid""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     val assigned = assignedDf(s, d).select(col("vec_id"), col("embedding"), col("cid"))
     val a = assigned.select(col("cid"), col("vec_id").as("keep_id"),
       col("embedding").as("ae"))
@@ -512,7 +532,7 @@ object IvfQueries {
        |FROM full_r f
        |LEFT JOIN base b ON b.cid = f.cid
        |LEFT JOIN delta d ON d.cid = f.cid
-       |ORDER BY f.cid""".stripMargin) { (s, d) =>
+       |ORDER BY f.cid""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
     // frozen quantizer: the 16 smallest BASE ids (training never reruns
@@ -567,7 +587,8 @@ object IvfQueries {
        |SELECT cs.vec_id, cs.cid, COUNT(*) AS n_eval_hits
        |FROM cs JOIN ev ON ev.cid = cs.cid
        |  AND ${sqlDot("cs", "ev")} / (cs.nrm * ev.nrm) > 0.3
-       |GROUP BY cs.vec_id, cs.cid ORDER BY cs.vec_id""".stripMargin) { (s, d) =>
+       |GROUP BY cs.vec_id, cs.cid ORDER BY cs.vec_id""".stripMargin,
+    sizing = ByEmbeddings) { (s, d) =>
     val assigned = assignedDf(s, d)
       .select(col("vec_id"), col("embedding"), col("cid"))
     val ev = assigned.filter(col("vec_id") % 50 === 0)
@@ -608,7 +629,11 @@ object IvfQueries {
        |      ORDER BY n DESC, term) AS BIGINT) AS term_rank
        |  FROM counts)
        |SELECT cid, term_rank, term, n FROM ranked
-       |WHERE term_rank <= 3 ORDER BY cid, term_rank""".stripMargin) { (s, d) =>
+       |WHERE term_rank <= 3 ORDER BY cid, term_rank""".stripMargin,
+    // width 1 measured 1.18 -> 1.00 s min-of-5. The token-stream join is
+    // documents-bounded, a constant factor above embeddings, and the
+    // width saturates at scale, so sizing by embeddings stays safe.
+    sizing = ByEmbeddings) { (s, d) =>
     val qv = quantizedDf(s, d)
     val assigned = assignToCells(qv, kmeansTrain(qv, CELLS, TRAIN_ITERS))
       .select(col("vec_id"), col("cid"))
@@ -683,7 +708,7 @@ object IvfQueries {
          |  CAST(COUNT(*) AS BIGINT) AS n_exact,
          |  CAST(SUM(hit) AS BIGINT) AS n_hits,
          |  CAST(SUM(hit) AS DOUBLE) / COUNT(*) AS recall
-         |FROM hits GROUP BY qcid ORDER BY cid""".stripMargin) { (s, d) =>
+         |FROM hits GROUP BY qcid ORDER BY cid""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val assigned = assignedDf(s, d).pinned // one assignment pass, three readers
       val qv = assigned.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -774,7 +799,9 @@ object IvfQueries {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
   private def dynCells(s: SparkSession, d: String): Long =
     cellsMemo.getOrElseUpdate((s, d),
-      math.max(16L, (Tables.embeddings(s, d).count() + 127L) / 128L))
+      // the RAW scan: Tables.embeddings wraps fanout, whose repartition
+      // shuffle a row count does not need
+      math.max(16L, (Tables.t(s, d, "embeddings").count() + 127L) / 128L))
 
   /** Spec access to the runtime ladder depth: hn03's (and hn05's)
     * ORACLE SQL is unrolled at LMAX = 2, while the engine derives
@@ -1044,6 +1071,18 @@ object IvfQueries {
        |    FROM visited0) WHERE rn <= $HnB),
        |${(1 to HnH).map(sqlHnHop).mkString(",\n")}""".stripMargin
 
+  /** The session hn01–hn03 search on: ONE memoized width-1 child with
+    * AQE off. Every shuffled frame of the beam/descent search is
+    * query-count-bounded (≤ NQ·E·(1+M+M²) rows at any corpus size), so
+    * the session default fanned each of its ~12–18 micro-stages into
+    * near-empty tasks with an AQE driver barrier apiece (r17 min-of-5:
+    * hn01 0.89×, hn02 0.70×, hn03 0.78×; hn03 width 4 → 1 alone
+    * 2.69 → 2.17 s). Corpus-side reads split by the FILE source, not
+    * this knob, so nothing corpus-sized narrows. The index memoizers
+    * stay keyed on the PARENT, so index builds keep the full width. */
+  private def searchSession(parent: SparkSession): SparkSession =
+    graft.Sessions.narrowed(parent, "hn-search", width = 1, adaptive = false)
+
   val hn01GraphAnn: GraftQuery = {
     val M = HnM
     val B = HnB
@@ -1092,16 +1131,7 @@ object IvfQueries {
       // attributed to whichever of hn01/hn02 triggers first) — the
       // timed query is what a recall evaluation actually repays per
       // run: load index, beam-search, join the persisted truth.
-      // r17: the search runs on a width-1 no-AQE child (the hn03
-      // idiom): every shuffled frame in the beam loop is query-count-
-      // bounded (≤ NQ·B·M rows), so the session default fanned each
-      // of the ~12 micro-stages into 32 near-empty tasks with an AQE
-      // driver barrier apiece. Corpus-side reads split by the FILE
-      // source, not this knob; the index memoizer stays keyed on the
-      // PARENT so repeated runs reuse the fixture.
-      val s = graft.Sessions.child(s0,
-        "spark.sql.shuffle.partitions" -> "1",
-        "spark.sql.adaptive.enabled" -> "false")
+      val s = searchSession(s0)
       val dir = hnIndexDir(s0, d, trigger = "hn01_graph_ann")
       val edges = s.read.parquet(s"$dir/edges").pinnedLazily // read HnH times
       val hubs = s.read.parquet(s"$dir/hubs")
@@ -1197,11 +1227,7 @@ object IvfQueries {
        |SELECT query_id, CAST(rn AS BIGINT) AS rank, cand_id
        |FROM ranked WHERE rn <= $HnK
        |ORDER BY query_id, rank""".stripMargin) { (s0, d) =>
-    // r17: width-1 no-AQE search child — same rationale and probe
-    // discipline as hn01 above (the serving face shares hnBeamSearch).
-    val s = graft.Sessions.child(s0,
-      "spark.sql.shuffle.partitions" -> "1",
-      "spark.sql.adaptive.enabled" -> "false")
+    val s = searchSession(s0)
     val dir = hnIndexDir(s0, d)
     val edges = s.read.parquet(s"$dir/edges").pinnedLazily // read HnH times
     val hubs = s.read.parquet(s"$dir/hubs")
@@ -1517,26 +1543,7 @@ object IvfQueries {
          |FROM hits h JOIN nv ON nv.query_id = h.query_id
          |GROUP BY h.query_id, nv.n_visited
          |ORDER BY h.query_id""".stripMargin) { (s0, d) =>
-      // Every SHUFFLED frame in the descent/beam is query-count-
-      // bounded (≤ NQ·E·(1+M+M²) rows at any corpus size), but the
-      // session default fans each of the ~18 micro-stages into 32
-      // near-empty tasks — and AQE's coalescer is parallelism-first
-      // by default, refusing to shrink below the core count, so the
-      // scheduling overhead never amortizes (measured ~2 s of the
-      // sf0.1 floor). The search therefore runs on a CHILD session
-      // (shared context, cache and scans; isolated conf — the
-      // ad02/sy03 idiom, so nothing leaks to the parent) pinned to a
-      // handful of shuffle partitions. Corpus-side reads are split by
-      // the FILE source, not this knob — nothing corpus-sized narrows,
-      // at sf0.1 or at the 1000× probe.
-      // r17 probe (min-of-5, quiet): width 4 -> 1 measured 2.69 -> 2.17
-      // (every shuffled frame here is query-count-bounded, so even 4
-      // partitions were mostly empty), and dropping AQE's per-stage
-      // barrier on top -> 2.09 (the ~18-micro-stage chain pays it per
-      // round; same rationale as Sessions.sizedFor(adaptive = false)).
-      // Corpus-side reads split by the FILE source, not this knob.
-      val s = graft.Sessions.child(s0, "spark.sql.shuffle.partitions" -> "1",
-        "spark.sql.adaptive.enabled" -> "false")
+      val s = searchSession(s0)
       VectorExpressions.register(s)
       import s.implicits._
       val dir = h3IndexDir(s0, d)
@@ -1814,7 +1821,7 @@ object IvfQueries {
          |SELECT * FROM (
          |  SELECT * FROM c0 UNION ALL SELECT * FROM c1
          |  UNION ALL SELECT * FROM c2)
-         |ORDER BY layer""".stripMargin) { (s, d) =>
+         |ORDER BY layer""".stripMargin, sizing = LadderByEmbeddings) { (s, d) =>
       VectorExpressions.register(s)
       val dir = h4IndexDir(s, d)
       val e = Tables.embeddings(s, d)
@@ -2391,7 +2398,7 @@ object IvfQueries {
          |SELECT * FROM (
          |  SELECT * FROM c0 UNION ALL SELECT * FROM c1
          |  UNION ALL SELECT * FROM c2)
-         |ORDER BY layer""".stripMargin) { (s, d) =>
+         |ORDER BY layer""".stripMargin, sizing = LadderByEmbeddings) { (s, d) =>
       VectorExpressions.register(s)
       h5OraclePin(s)
       val (dir, lmax) = h5IndexDir(s, d)
@@ -2522,7 +2529,7 @@ object IvfQueries {
          |SELECT * FROM (
          |  SELECT * FROM c0 UNION ALL SELECT * FROM c1
          |  UNION ALL SELECT * FROM c2)
-         |ORDER BY layer""".stripMargin) { (s, d) =>
+         |ORDER BY layer""".stripMargin, sizing = LadderByEmbeddings) { (s, d) =>
       VectorExpressions.register(s)
       h5OraclePin(s)
       val (dir, lmax) = h5IndexDir(s, d)
@@ -2838,7 +2845,7 @@ object IvfQueries {
          |      ORDER BY adc, cand_id) AS BIGINT) AS rn
          |  FROM adc0)
          |SELECT query_id, cand_id, adc, rn FROM ranked WHERE rn <= 5
-         |ORDER BY query_id, rn""".stripMargin) { (s, d) =>
+         |ORDER BY query_id, rn""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val qv = quantizedDf(s, d).select(col("vec_id"), col("q"))
       // codebook: one broadcast row of k-sorted (k, subvector source)
       val cbArr = pqSeedBooks(qv)
@@ -2908,7 +2915,7 @@ object IvfQueries {
          |  JOIN qa ON qa.cid = ax.cid AND x.vec_id <> qa.query_id
          |  JOIN qd q0 ON q0.query_id = qa.query_id AND q0.k = x.code0
          |  ${PqSql.sqlQdJoins}),
-         |${PqSql.sqlTail}""".stripMargin) { (s, d) =>
+         |${PqSql.sqlTail}""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val qv = quantizedDf(s, d) // (vec_id, q, n2)
       // coarse assignment + PQ encode — the hoisted shared kernels
       val asg = pqCoarseAsg(qv)
@@ -3020,7 +3027,7 @@ object IvfQueries {
          |  JOIN qa ON qa.cid = ax.cid AND x.vec_id <> qa.query_id
          |  JOIN qd0 q0 ON q0.query_id = qa.query_id AND q0.k = x.code0
          |  $qdJoins),
-         |${PqSql.sqlTail}""".stripMargin) { (s, d) =>
+         |${PqSql.sqlTail}""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val qv = quantizedDf(s, d) // (vec_id, q, n2)
       // exact int64 squared L2 between a SUB-dim slice of q and a
       // SUB-dim codeword
@@ -3142,7 +3149,7 @@ object IvfQueries {
          |  JOIN qa ON qa.cid = ax.cid AND x.vec_id <> qa.query_id
          |  JOIN qd q0 ON q0.query_id = qa.query_id AND q0.k = x.code0
          |  ${PqSql.sqlQdJoins}),
-         |${PqSql.sqlTail}""".stripMargin) { (s, d) =>
+         |${PqSql.sqlTail}""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val qv = quantizedDf(s, d) // (vec_id, q, n2)
       // coarse assignment, residuals, books, encode — shared kernels
       val asg = pqCoarseAsg(qv)
@@ -3229,7 +3236,7 @@ object IvfQueries {
          |      ROW_NUMBER() OVER (PARTITION BY query_id, cid
          |        ORDER BY adc, cand_id) AS rc
          |    FROM cand0) WHERE rc <= ${PqSql.C}),
-         |${PqSql.sqlRerank}""".stripMargin) { (s, d) =>
+         |${PqSql.sqlRerank}""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val qv = quantizedDf(s, d) // (vec_id, q, n2)
       val centArr = pqCentArr(qv)
       val asg = pqCoarseAsgOver(qv, centArr)
@@ -3313,7 +3320,7 @@ object IvfQueries {
          |      ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
          |  FROM pairs)
          |SELECT query_id, cand_id, label, cosine, rn FROM ranked WHERE rn <= 5
-         |ORDER BY query_id, rn""".stripMargin) { (s, d) =>
+         |ORDER BY query_id, rn""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val assigned = assignedDf(s, d).pinned // query side + candidate side
       val qv = assigned.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -3410,7 +3417,7 @@ object IvfQueries {
          |  FROM pairs)
          |SELECT query_id, n_probed, cand_id, label, cosine, rn
          |FROM ranked WHERE rn <= $K
-         |ORDER BY query_id, rn""".stripMargin) { (s, d) =>
+         |ORDER BY query_id, rn""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       VectorExpressions.register(s)
       val e = Tables.embeddings(s, d)
       val assigned = assignedDf(s, d).pinned
@@ -3531,7 +3538,7 @@ object IvfQueries {
          |FROM (SELECT DISTINCT aid, alabel FROM cands) a
          |JOIN pos p ON p.aid = a.aid AND p.rn = 1
          |JOIN neg n ON n.aid = a.aid AND n.rn = 1
-         |ORDER BY anchor_id""".stripMargin) { (s, d) =>
+         |ORDER BY anchor_id""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val lab = Tables.embeddings(s, d).select(col("vec_id"), col("label"))
       // the assignment feeds the anchor filter AND the candidate side
       // (and labels join both) — pin it or the centroid argmax pass
@@ -3571,70 +3578,6 @@ object IvfQueries {
     }
   }
 
-  /** Input-sized shuffle width for the embeddings-bounded serving
-    * family ([[graft.Sessions.sizedFor]] — the gr06/dd08 discipline):
-    * every shuffled frame in these queries is bounded by the
-    * embeddings table (assignments, codes, per-query candidate sets),
-    * so the width derives from ITS row count — full session width at
-    * production corpus sizes, a handful of partitions at harness
-    * scales where the fixed per-task scheduling cost dominated
-    * (same-set min-of-5 probe at width 1: median 0.89×, no
-    * regressions; total 10.5→9.0 s across the 24-query family; a
-    * second quiet-box probe added hn04 0.83× / hn05 0.87× / hn06
-    * ~1.0× — an earlier contended probe had mis-read the hn family
-    * as regressing). The child is memoized per (session, dir) so the
-    * per-session index/fixture memoizers keep their keys across a
-    * bench's timed runs, with parent confs re-copied per access
-    * (Sessions.sizedFor). hn01–hn03 are not embSized: each runs its
-    * search on its own width-1 no-AQE child, because every shuffled
-    * frame of the beam/descent search is query-count-bounded (r17
-    * probes: hn01 0.89×, hn02 0.70×, hn03 0.78× min-of-5). */
-  private val embCounts =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  private[operators] def embSized(s: SparkSession, d: String): SparkSession =
-    graft.Sessions.sizedFor(s, s"emb:$d",
-      // count the RAW scan: Tables.embeddings wraps fanout, and the
-      // sizing count would pay that repartition's full shuffle just to
-      // read a row count the parquet footers already hold
-      embCounts.getOrElseUpdate((s, d), Tables.t(s, d, "embeddings").count()))
-
-  /** The ladder-IVM trio runs on its OWN sized child (distinct key →
-    * distinct child session, so the h4/h5 index memoizers keyed on it
-    * stay stable) with AQE disabled: their timed path is a census over
-    * many tiny aggregates plus an affected-bucket kNN — AQE's
-    * per-query-stage driver barrier dominated at the sized width
-    * (r17 min-of-5: hn04 0.53×, hn05 0.74×, hn06 0.90×). The serving
-    * family keeps AQE (pq01 measured 1.37× WORSE without it — its
-    * plan leans on the runtime broadcast conversion). No-op at scale:
-    * the flag only applies when the width actually narrows. */
-  private[operators] def ladderSized(s: SparkSession, d: String): SparkSession =
-    graft.Sessions.sizedFor(s, s"ladder:$d",
-      embCounts.getOrElseUpdate((s, d), Tables.t(s, d, "embeddings").count()),
-      adaptive = false)
-
-  private def sizedEmb(g: GraftQuery): GraftQuery =
-    g.copy(build = (s0, d) => g.build(embSized(s0, d), d))
-
-  private def sizedLadder(g: GraftQuery): GraftQuery =
-    g.copy(build = (s0, d) => g.build(ladderSized(s0, d), d))
-
-  private val SizedNames: Set[String] = Set(
-    "ivf01_assign", "ivf02_probe_search", "ivf03_kmeans_train",
-    "ivf04_multiprobe", "ivf05_trained_search", "ivf06_persisted_index",
-    "ivf07_index_upsert", "sd01_semdedup", "dc02_semantic_decontam",
-    "pq01_pq_adc_search", "pq02_ivfpq_search", "pq03_trained_pq",
-    "pq04_residual_pq", "pq05_multiprobe_residual", "fa01_filtered_ann",
-    "fa02_filtered_ann_adaptive", "tm01_triplet_mining", "ann01_recall",
-    // cl01 quiet probe at width 1: 1.18 -> 1.00 min-of-5 (0.85x). Its
-    // token-stream join is documents-bounded, a constant factor above
-    // the embeddings count, and the rule saturates to session width at
-    // scale, so the emb-count derivation stays safe.
-    "cl01_cluster_labels")
-
-  private val LadderSizedNames: Set[String] = Set(
-    "hn04_hnsw_upsert", "hn05_ladder_upsert", "hn06_ladder_delete")
-
   val all: Seq[GraftQuery] =
     Seq(ivf01Assign, ivf02Probe, ivf03Train, ivf04Multiprobe, ivf05TrainedSearch,
       ivf06PersistedIndex, ivf07IndexUpsert, sd01SemDedup,
@@ -3643,8 +3586,4 @@ object IvfQueries {
       hn06LadderDelete, pq01AdcSearch, pq02IvfPqSearch, pq03TrainedPq,
       pq04ResidualPq, pq05MultiprobeResidual, fa01FilteredAnn,
       fa02FilteredAnnAdaptive, tm01TripletMining)
-      .map(g =>
-        if (SizedNames(g.name)) sizedEmb(g)
-        else if (LadderSizedNames(g.name)) sizedLadder(g)
-        else g)
 }

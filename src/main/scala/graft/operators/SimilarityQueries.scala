@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Sizing, Tables}
 import graft.Pin.PinOps
 import graft.plans.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -30,10 +30,18 @@ object SimilarityQueries {
   private def cosineExpr(a: String, b: String): Column =
     VectorExpressions.cosine_similarity(col(a), col(b))
 
-  private def q(name: String, doc: String, sql: String)(
+  private def q(name: String, doc: String, sql: String,
+      sizing: Sizing = Sizing.Session)(
       build: (SparkSession, String) => DataFrame): GraftQuery =
     GraftQuery(name, (s, d) => { VectorExpressions.register(s); build(s, d) },
-      Some(sql), doc)
+      Some(sql), doc, sizing)
+
+  /** Width for the embeddings-bounded sm/kn/rp/rr queries — the
+    * IvfQueries serving-family rule. r16 quiet probe at width 1
+    * (min-of-5, sf0.1): rp01 0.74x, rr02 0.89x; rr01 measured 1.26x
+    * WORSE (its per-ranker TopK fan-out wants the width) and stays at
+    * session width. */
+  private val ByEmbeddings = Sizing.Input("embeddings")
 
   /** Brute-force cosine top-10 for 3 query vectors against the whole
     * table. The query side is tiny → broadcast; candidates stream.
@@ -65,7 +73,7 @@ object SimilarityQueries {
        |      ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
        |  FROM pairs)
        |SELECT query_id, cand_id, cosine, rn FROM ranked
-       |WHERE rn <= 10 ORDER BY query_id, rn""".stripMargin) { (s, d) =>
+       |WHERE rn <= 10 ORDER BY query_id, rn""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     val e = Tables.embeddings(s, d)
     val qv = e.filter(col("vec_id") < 3)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -123,7 +131,7 @@ object SimilarityQueries {
       "JL random projection 64→8 dims (Achlioptas sparse signs, map-only, codegen)",
       s"""SELECT vec_id,
          |  ${sqlCols.mkString(",\n  ")}
-         |FROM embeddings ORDER BY vec_id""".stripMargin) { (s, d) =>
+         |FROM embeddings ORDER BY vec_id""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val projCols = sparse.zipWithIndex.map { case (terms, k) =>
         terms.map { case (i, sgn) =>
           val e = element_at(col("embedding"), i + 1).cast(DoubleType)
@@ -143,7 +151,8 @@ object SimilarityQueries {
     "sign-bit LSH bucket histogram",
     s"""SELECT ${sqlBucket("e")} AS bucket, COUNT(*) AS n_vecs,
        |  MIN(vec_id) AS first_vec
-       |FROM embeddings e GROUP BY 1 ORDER BY bucket""".stripMargin) { (s, d) =>
+       |FROM embeddings e GROUP BY 1 ORDER BY bucket""".stripMargin,
+    sizing = ByEmbeddings) { (s, d) =>
     Tables.embeddings(s, d)
       .groupBy(bucketExpr("embedding").as("bucket"))
       .agg(count(lit(1)).as("n_vecs"), min(col("vec_id")).as("first_vec"))
@@ -171,7 +180,7 @@ object SimilarityQueries {
        |      ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
        |  FROM pairs)
        |SELECT query_id, cand_id, cosine, rn FROM ranked
-       |WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin) { (s, d) =>
+       |WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     val coded = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"), bucketExpr("embedding").as("bucket"))
     val qv = coded.filter(col("vec_id") < 10)
@@ -193,7 +202,8 @@ object SimilarityQueries {
     "sm04_vector_norms",
     "per-vector L2 norm (map-side vector op)",
     s"""SELECT vec_id, label, SQRT(${sqlNorm2("e")}) AS l2_norm
-       |FROM embeddings e WHERE vec_id < 200 ORDER BY vec_id""".stripMargin) { (s, d) =>
+       |FROM embeddings e WHERE vec_id < 200 ORDER BY vec_id""".stripMargin,
+    sizing = ByEmbeddings) { (s, d) =>
     Tables.embeddings(s, d)
       .filter(col("vec_id") < 200)
       .select(col("vec_id"), col("label"),
@@ -223,7 +233,7 @@ object SimilarityQueries {
       |  list_reduce(list_transform(embedding,
       |    x -> abs(CAST(x AS DOUBLE) - floor(CAST(x AS DOUBLE) / scale + 0.5) * scale)),
       |    (a, b) -> a + b) AS abs_err
-      |FROM s ORDER BY vec_id""".stripMargin) { (s, d) =>
+      |FROM s ORDER BY vec_id""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     def xd(x: Column) = x.cast(DoubleType)
     def quant(x: Column) = floor(xd(x) / col("scale") + 0.5)
     Tables.embeddings(s, d)
@@ -270,7 +280,8 @@ object SimilarityQueries {
          |      ORDER BY approx_dot DESC, cand_id) AS BIGINT) AS rn
          |  FROM pairs)
          |SELECT query_id, cand_id, dot_q, approx_dot, rn
-         |FROM ranked WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin) { (s, d) =>
+         |FROM ranked WHERE rn <= 5 ORDER BY query_id, rn""".stripMargin,
+      sizing = ByEmbeddings) { (s, d) =>
       def xd(x: Column) = x.cast(DoubleType)
       val qc = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
@@ -434,7 +445,7 @@ object SimilarityQueries {
        |SELECT true_label, pred_label, COUNT(*) AS n_queries
        |FROM pred WHERE pr = 1
        |GROUP BY true_label, pred_label
-       |ORDER BY true_label, pred_label""".stripMargin) { (s, d) =>
+       |ORDER BY true_label, pred_label""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
     val e = Tables.embeddings(s, d)
     val qv = e.filter(col("vec_id") < 64)
       .select(col("vec_id").as("query_id"), col("embedding").as("qe"),
@@ -539,7 +550,7 @@ object SimilarityQueries {
          |cum1 AS (SELECT * FROM sel1),
          |${(2 to S).map(selSql).mkString(",\n")}
          |SELECT query_id, cand_id, CAST(rank AS BIGINT) AS rank, score
-         |FROM cum$S ORDER BY query_id, rank""".stripMargin) { (s, d) =>
+         |FROM cum$S ORDER BY query_id, rank""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
       val e = Tables.embeddings(s, d)
       val qv = e.filter(col("vec_id") < NQ)
         .select(col("vec_id").as("query_id"), col("embedding").as("qe"))
@@ -582,22 +593,8 @@ object SimilarityQueries {
     }
   }
 
-  /** Input-sized width for the embeddings-bounded sm/kn queries —
-    * see IvfQueries.embSized (same probe, same rule). r16 quiet probe
-    * at width 1 (min-of-5, sf0.1): rp01 0.74x, rr02 0.89x — wrapped;
-    * rr01 measured 1.26x WORSE (its per-ranker TopK fan-out wants the
-    * width) and stays at session width. */
-  private def sizedEmb(g: GraftQuery): GraftQuery =
-    g.copy(build = (s0, d) => g.build(IvfQueries.embSized(s0, d), d))
-
-  private val SizedNames: Set[String] = Set(
-    "sm01_cosine_topk", "sm02_simhash_buckets", "sm03_ann_bucketed",
-    "sm04_vector_norms", "sm05_int8_quantize", "sm06_quantized_topk",
-    "kn01_knn_classifier", "rp01_random_projection", "rr02_mmr_rerank")
-
   val all: Seq[GraftQuery] = Seq(
     sm01CosineTopK, sm02SimhashBuckets, sm03AnnBucketed, sm04Norms,
     sm05Int8Quantize, sm06QuantizedTopK, rp01RandomProjection, rr01RrfFusion,
     rr02MmrRerank, kn01KnnClassifier)
-    .map(g => if (SizedNames(g.name)) sizedEmb(g) else g)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Tables}
+import graft.{GraftQuery, Sizing, Tables}
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -59,9 +59,10 @@ object SpectralQueries {
   private val WSCALE = 1048576L // 2^20 — loading resolution ~1e-6
   private val RSCALE = 16L // Rayleigh vector bound: terms ≤ 16²·|G|·Dim²
 
-  private def q(name: String, doc: String, sql: String)(
+  private def q(name: String, doc: String, sql: String,
+      sizing: Sizing = Sizing.Session)(
       build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
+    GraftQuery(name, build, Some(sql), doc, sizing)
 
   /** int64-quantized embedding rows (the ivf03 quantizer). */
   private def quantized(s: SparkSession, d: String): DataFrame =
@@ -244,7 +245,12 @@ object SpectralQueries {
        |    / 1000000.0 AS variance,
        |  CAST(MIN(q) AS DOUBLE) / 1000.0 AS lo,
        |  CAST(MAX(q) AS DOUBLE) / 1000.0 AS hi
-       |FROM x GROUP BY i ORDER BY dim_idx""".stripMargin) { (s, d) =>
+       |FROM x GROUP BY i ORDER BY dim_idx""".stripMargin,
+    // embeddings-bounded: width 1 measured 0.74x (r16 min-of-5, sf0.1) —
+    // the posexplode partials collapse map-side, so near-empty reduce
+    // tasks were pure scheduling cost. em02 (0.96x) and pc01 (1.46x
+    // WORSE: its matrix-vector join wants the width) stay unsized.
+    sizing = Sizing.Input("embeddings")) { (s, d) =>
     val n = count(lit(1)).cast(DoubleType)
     val sq = sum(col("q")).cast(DoubleType)
     quantized(s, d)
@@ -297,16 +303,6 @@ object SpectralQueries {
       .limit(20)
   }
 
-  /** Input-sized shuffle width for the embeddings-bounded em01 — the
-    * IvfQueries.embSized rule. r16 quiet probe at width 1 (min-of-5,
-    * sf0.1): em01 0.74x — its posexplode partials collapse map-side so
-    * only #partitions x 64 rows shuffle, and near-empty reduce tasks
-    * were pure scheduling cost. em02 measured neutral (0.96x) and
-    * pc01 1.46x WORSE (the iteration's matrix-vector join wants the
-    * width) — both stay at session width. */
-  private def sizedEmb(g: GraftQuery): GraftQuery =
-    g.copy(build = (s0, d) => g.build(IvfQueries.embSized(s0, d), d))
-
   val all: Seq[GraftQuery] =
-    Seq(pc01PowerIteration, sizedEmb(em01DimStats), em02CentroidOutliers)
+    Seq(pc01PowerIteration, em01DimStats, em02CentroidOutliers)
 }

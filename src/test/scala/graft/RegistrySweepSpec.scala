@@ -4,6 +4,7 @@ import org.apache.spark.sql.GraftDatasetBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.Cross
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Try
@@ -11,10 +12,11 @@ import scala.util.Try
 /** Registry-wide lints over ONE build per query. Each registry query is
   * built once at sf0.001 (a shared lazy fixture) and every lint reads
   * that single build: the conf snapshot around it, its schema, the
-  * analyzed plan's broadcast-hinted subtrees (counted before release),
-  * the optimized plan's cross joins, the executed plan's
-  * CartesianProduct grep and a `count()`. Only hinted queries are
-  * rebuilt, at sf0.01, for the broadcast guard's scale comparison.
+  * analyzed plan's broadcast-hinted subtrees (counted before release)
+  * and fanout-shaped repartitions, the optimized plan's cross joins, the
+  * executed plan's CartesianProduct grep and a `count()`. Only hinted
+  * queries are rebuilt, at sf0.01, for the broadcast guard's scale
+  * comparison.
   * Build failures are collected by name; every lint that needs the
   * failed reading fails on them. */
 class RegistrySweepSpec extends AnyFunSuite {
@@ -98,13 +100,14 @@ class RegistrySweepSpec extends AnyFunSuite {
             CrossJoin(est(j.left), est(j.right), j.simpleString(2))
         }
       }
+      val fanouts = df.map(d => fanoutBreaches(d.queryExecution.analyzed))
       val cartesian = df.map(_.queryExecution.executedPlan.toString.contains("CartesianProduct"))
       val count = df.map(_.count())
       val after = spark.conf.getAll
       val changed = (before.keySet ++ after.keySet)
         .filter(k => before.get(k) != after.get(k))
         .map(k => k -> (before.get(k), after.get(k))).toMap
-      Reading(q, schema, hinted, crossJoins, cartesian, count, changed)
+      Reading(q, schema, hinted, crossJoins, fanouts, cartesian, count, changed)
     } finally Harness.release(spark)
   }
 
@@ -127,6 +130,23 @@ class RegistrySweepSpec extends AnyFunSuite {
     plan.collect { case h: ResolvedHint if h.hints.strategy.contains(BROADCAST) =>
       h.child
     }.map(t => GraftDatasetBridge.ofRows(spark, t).count())
+
+  /** Each `Tables.fanout`-shaped node — a one-key repartition to exactly
+    * defaultParallelism — that is not directly on a file relation keyed
+    * on that relation's first output column. */
+  private def fanoutBreaches(plan: LogicalPlan): Seq[String] = {
+    val par = spark.sparkContext.defaultParallelism
+    plan.collect {
+      case RepartitionByExpression(Seq(key), child, Some(n), _) if n == par =>
+        child match {
+          case l: LogicalRelation if l.relation.isInstanceOf[HadoopFsRelation] &&
+              key.semanticEquals(l.output.head) => None
+          case _ =>
+            val cols = child.output.map(_.name).mkString(", ")
+            Some(s"repartition($n, ${key.sql}) over ${child.nodeName}[$cols]")
+        }
+    }.flatten
+  }
 
   /** Conservative upper bound on a plan's row count, or None. */
   private def est(p: LogicalPlan): Option[Long] = p match {
@@ -273,6 +293,20 @@ class RegistrySweepSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"cartesian products in: ${offenders.mkString(", ")}")
   }
 
+  /** `Tables.fanout` hashes on its input's LEADING column, so it must
+    * wrap a base-table scan, whose first column is the high-cardinality
+    * key: fanout over a projection that leads with a flag or a label
+    * hashes into as many non-empty partitions as that column has values
+    * and silently defeats the spread. */
+  test("every fanout sits directly on a file scan and keys on its first column") {
+    val bad = readings(_.fanouts, "failed to build").flatMap { case (q, breaches) =>
+      breaches.map(b => s"${q.name}: $b")
+    }
+    assert(bad.isEmpty,
+      "fanout must wrap a base-table scan and key on its first column; " +
+        s"project AFTER fanout:\n${bad.mkString("\n")}")
+  }
+
   test("whitelist names stay in sync with the registry") {
     val names = Registry.all.map(_.name).toSet
     val stale = (broadcastWhitelist.keys ++ crossJoinWhitelist.keys).filterNot(names)
@@ -292,6 +326,7 @@ object RegistrySweepSpec {
       schema: Try[StructType],
       hintedCounts: Try[Seq[Long]],
       crossJoins: Try[Seq[CrossJoin]],
+      fanouts: Try[Seq[String]],
       cartesian: Try[Boolean],
       count: Try[Long],
       confChanges: Map[String, (Option[String], Option[String])])

@@ -28,27 +28,48 @@ class ScaleSeamSpec extends AnyFunSuite {
     assert(spread.count() == 1000L)
   }
 
+  /** Testdata root, one subdirectory per scale factor. */
+  private val testdata = s"${sys.props("user.home")}/testdata"
+
   test("sizedFor returns the parent at the width cap") {
-    // an input big enough that rows/50k + 1 >= the session width: the
-    // PARENT session itself must come back — no child, no conf change
-    val s = Sessions.sizedFor(spark, "scaleseam-cap", 100L * 1000L * 1000L)
+    // lineitem @sf0.1 is ~10.8 MB, so bytes/1 MB + 1 >= the 4-core
+    // session width: the PARENT session itself must come back — no
+    // child, no conf change
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val sf = s"$testdata/sf0.1"
+    val s = Sessions.sizedFor(spark, sf, "lineitem")
     assert(s eq spark)
     // and the adaptive flag must be irrelevant on that path
-    val s2 = Sessions.sizedFor(spark, "scaleseam-cap2",
-      100L * 1000L * 1000L, adaptive = false)
+    val s2 = Sessions.sizedFor(spark, sf, "lineitem", adaptive = false)
     assert(s2 eq spark)
     assert(spark.conf.get("spark.sql.adaptive.enabled", "true") != "false",
       "the parent session's AQE conf must never be touched")
   }
 
   test("sizedFor narrows small inputs; adaptive=false applies to the child only") {
-    val c = Sessions.sizedFor(spark, "scaleseam-narrow", 10L, adaptive = false)
+    val sf = s"$testdata/sf0.001"
+    val c = Sessions.sizedFor(spark, sf, "documents", adaptive = false)
     assert(c ne spark)
     assert(c.conf.get("spark.sql.shuffle.partitions") == "1")
     assert(c.conf.get("spark.sql.adaptive.enabled") == "false")
     assert(spark.conf.get("spark.sql.adaptive.enabled", "true") != "false")
-    val c2 = Sessions.sizedFor(spark, "scaleseam-narrow2", 10L)
+    val c2 = Sessions.sizedFor(spark, sf, "documents")
     assert(c2.conf.get("spark.sql.adaptive.enabled", "true") != "false",
       "the default (adaptive = true) child keeps AQE on")
+  }
+
+  /** The byte rule gives the widths the earlier rows/50k rule gave, for
+    * every sized table at every testdata scale, at 4 cores. */
+  test("sizedFor widths per sized table and scale at 4 cores") {
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val expected = Seq(
+      ("documents", "sf0.001", 1), ("documents", "sf0.01", 1), ("documents", "sf0.1", 1),
+      ("embeddings", "sf0.001", 1), ("embeddings", "sf0.01", 1), ("embeddings", "sf0.1", 1),
+      ("lineitem", "sf0.001", 1), ("lineitem", "sf0.01", 2), ("lineitem", "sf0.1", 4))
+    val got = expected.map { case (table, sf, _) =>
+      (table, sf, Sessions.sizedFor(spark, s"$testdata/$sf", table)
+        .conf.get("spark.sql.shuffle.partitions").toInt)
+    }
+    assert(got == expected)
   }
 }
