@@ -1,7 +1,8 @@
 package graft.mr
 
-import graft.sources.{Corpus, PathPredicate}
+import graft.sources.{Corpus, MultiGlob, PathPredicate}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
@@ -12,19 +13,23 @@ import org.apache.spark.storage.StorageLevel
   * `(path, parents, content) → 0..n records` (reference
   * `interfaces.go:17-27` — strictly a flatMap, covering projection,
   * filtering and record splitting), and a distributive reduction
-  * `(zero, fold, merge)`.
+  * `(zero, fold, merge)`; `zero` must be an identity of `merge`.
   *
   * Departures from the reference, by design (SURVEY.md §7.3):
   *  - the goroutine pipeline / batching / backpressure machinery
-  *    (mapreduce.go:39-129,356-399) is replaced by Spark's scheduler;
+  *    (mapreduce.go:39-129,356-399) is replaced by one Spark pass
+  *    ([[MapReduceRunner]]);
   *  - reduction is partial-per-partition then merged — the
   *    distributed reduction the reference left as a TODO
   *    (readme.md:44); its `Sorter` per-batch sort semantic
-  *    (mapreduce.go:461-477) maps to an optional partition-local sort
-  *    before folding (`sortWithinPartitions`);
+  *    (mapreduce.go:461-477) maps to sorting one partition's mapped
+  *    records by `sortKey` in the task before folding them;
   *  - errors fail the whole run via Spark task failure → exception,
   *    matching the reference's first-error-cancels-everything
   *    (mapreduce.go:215-220).
+  *
+  * The job is shipped to every task of the pass; `finish` runs on the
+  * driver only and is not shipped.
   */
 final case class MapReduceJob[M, R](
     name: String,
@@ -35,72 +40,82 @@ final case class MapReduceJob[M, R](
     merge: (R, R) => R,
     directoryFiles: Option[PathPredicate] = None,
     sortKey: Option[M => Long] = None,
-    finish: R => Unit = (_: R) => ())(
+    @transient finish: R => Unit = (_: R) => ())(
     implicit val enc: Encoder[M], val rct: scala.reflect.ClassTag[R])
   extends CorpusJob {
+  type Acc = R
+
+  /** The mapper on one file, its failure wrapped with the job and path
+    * (reference errors.go:5-33: every error is wrapped with the job and
+    * path that produced it) — a million-file run must say WHERE it died,
+    * not just surface the raw mapper exception. */
+  private def mapFile(path: String, parents: Seq[Array[Byte]],
+      content: Array[Byte]): IterableOnce[M] =
+    try mapper(path, parents, content)
+    catch { case e: Exception => throw GraftJobException(name, path, e) }
 
   /** Run the map phase only, as a typed Dataset (composable with the
     * whole relational surface). */
   def mapped(files: DataFrame): Dataset[M] = {
-    val pred = filter
-    val parentsFor = ParentStacks.resolver(files, directoryFiles)
-    val m = mapper
-    val jobName = name
+    val parentsFor = ParentStacks.resolvers(files, Seq(directoryFiles)).head
     files
       .filter(col("path").isNotNull)
       .flatMap { row =>
         val path = row.getAs[String]("path")
-        if (pred.matches(path))
-          try m(path, parentsFor(path), row.getAs[Array[Byte]]("content"))
-          catch {
-            // typed failure context (reference errors.go:5-33: every
-            // error is wrapped with the job and path that produced
-            // it) — a million-file run must say WHERE it died, not
-            // just surface the raw mapper exception
-            case e: Exception => throw GraftJobException(jobName, path, e)
-          }
+        if (filter.matches(path))
+          mapFile(path, parentsFor(path), row.getAs[Array[Byte]]("content"))
         else Iterator.empty
       }(enc)
   }
 
-  def run(files: DataFrame): Any = {
-    val ds = mapped(files)
-    val sorted = sortKey match {
-      case Some(k) =>
-        // Reference Sorter semantics: sort is per delivered batch, not
-        // global (interfaces.go:54). Partition-local sort is the
-        // faithful distributed equivalent.
-        import org.apache.spark.sql.Encoders
-        ds.map(v => (k(v), v))(Encoders.tuple(Encoders.scalaLong, enc))
-          .sortWithinPartitions(col("_1"))
-          .map(_._2)(enc)
-      case None => ds
+  def folder(): CorpusJob.Folder[R] = sortKey match {
+    case None => new CorpusJob.Folder[R] {
+      private var acc = zero
+      def add(path: String, parents: Seq[Array[Byte]], content: Array[Byte]): Unit =
+        mapFile(path, parents, content).iterator.foreach(v => acc = fold(acc, v))
+      def result(): R = acc
     }
-    val (z, f, mg) = (zero, fold, merge)
-    // Partial fold per partition, then merge: partial+final aggregation
-    // — the distributed reduction the reference TODO'd. The merge tier
-    // is config-selected: the default collects ONE partial per
-    // partition to the driver (fine to ~10³ partitions — the partials,
-    // not the data, move), while `spark.graft.mr.mergeDepth` ≥ 2 opts
-    // into a treeAggregate whose intermediate levels merge
-    // executor-side in √P-ish groups — the shape for 10⁵-partition
-    // corpora with non-trivial reduction state, where a single driver
-    // merge pass is both a memory spike and a serial hotspot.
-    val partials = sorted.rdd
-      .mapPartitions(it => Iterator.single(it.foldLeft(z)(f)))
-    val depth = files.sparkSession.conf
-      .get("spark.graft.mr.mergeDepth", "1").toInt
-    val result =
-      if (depth <= 1) partials.collect().foldLeft(z)(mg)
-      else partials.treeAggregate(z)(mg, mg, depth)
-    finish(result)
-    result
+    case Some(key) => new CorpusJob.Folder[R] {
+      private val buf = scala.collection.mutable.ArrayBuffer.empty[M]
+      def add(path: String, parents: Seq[Array[Byte]], content: Array[Byte]): Unit = {
+        buf ++= mapFile(path, parents, content); ()
+      }
+      // Reference Sorter semantics: the sort is per delivered batch, not
+      // global (interfaces.go:54); the batch here is the task's partition.
+      def result(): R = buf.sortBy(key).foldLeft(zero)(fold)
+    }
   }
+
+  def run(files: DataFrame): Any =
+    MapReduceRunner.run(files.sparkSession, files, Seq(this))(name)
 }
 
+/** What [[MapReduceRunner]] needs of a job: which files it reads, a
+  * fresh fold state per task, and the driver-side merge and finish. */
 trait CorpusJob extends Serializable {
+  type Acc
   def name: String
-  def run(files: DataFrame): Any
+  def filter: PathPredicate
+  def directoryFiles: Option[PathPredicate]
+  /** A new fold state, made inside the task that uses it. */
+  def folder(): CorpusJob.Folder[Acc]
+  def zero: Acc
+  def merge: (Acc, Acc) => Acc
+  def finish: Acc => Unit
+
+  // the runner holds the K partials of different types as `Any`
+  private[mr] final def mergeAny(a: Any, b: Any): Any =
+    merge(a.asInstanceOf[Acc], b.asInstanceOf[Acc])
+  private[mr] final def finishAny(r: Any): Unit = finish(r.asInstanceOf[Acc])
+}
+
+object CorpusJob {
+  /** One task's fold of one job: `add` each file the job's filter
+    * passes, in partition order, then `result` is the task's partial. */
+  trait Folder[A] {
+    def add(path: String, parents: Seq[Array[Byte]], content: Array[Byte]): Unit
+    def result(): A
+  }
 }
 
 /** Mapper failure wrapped with its job and path (reference
@@ -147,32 +162,41 @@ object ParentStacks {
     files.select(col("path")).filter(matchesPath(col("path")))
   }
 
-  def resolver(files: DataFrame, dirFilter: Option[PathPredicate])
-      : String => Seq[Array[Byte]] =
-    dirFilter match {
-      case None => _ => Nil
+  /** One resolver per entry of `dirFilters`, found by ONE discovery
+    * for all of them: a path-only scan over the disjunction of every
+    * job's filter, then one content fetch for the discovered paths — two
+    * Spark jobs per run however many jobs use directory files, none when
+    * no job does. Each job's stack is the driver-side subset its own
+    * filter matches. */
+  def resolvers(files: DataFrame, dirFilters: Seq[Option[PathPredicate]])
+      : IndexedSeq[String => Seq[Array[Byte]]] = {
+    val preds = dirFilters.flatten.distinct
+    // phase 1: path-only discovery (column-pruned scan, no content)
+    val dirPaths = if (preds.isEmpty) Array.empty[String]
+      else discoveryPlan(files, MultiGlob(preds)).collect().map(_.getString(0))
+    // phase 2: fetch content for ONLY the discovered paths. The `isin`
+    // compiles to an In filter a columnar source pushes down (row-group
+    // skipping), so the content bytes of non-directory files are never
+    // materialized.
+    val dirRows = (if (dirPaths.isEmpty)
+      Array.empty[(String, Int, String, Array[Byte])]
+    else files
+      .filter(col("path").isin(dirPaths.toIndexedSeq: _*))
+      .select(col("dir"), col("depth"), col("path"), col("content"))
+      .collect() // only the few matching directory files reach the driver
+      .map(r => (r.getAs[String]("dir"), r.getAs[Int]("depth"),
+        r.getAs[String]("path"), r.getAs[Array[Byte]]("content"))))
+      .sortBy(t => (t._2, t._3)) // root→leaf, stable within a folder
+    dirFilters.toIndexedSeq.map {
+      case None => (_: String) => Nil
       case Some(pred) =>
-        // phase 1: path-only discovery (column-pruned scan, no content)
-        val dirPaths = discoveryPlan(files, pred).collect().map(_.getString(0))
-        // phase 2: fetch content for ONLY the discovered paths. The
-        // `isin` compiles to an In filter a columnar source pushes
-        // down (row-group skipping), so the content bytes of
-        // non-directory files are never materialized.
-        val dirRows = (if (dirPaths.isEmpty)
-          Array.empty[(String, Int, String, Array[Byte])]
-        else files
-          .filter(col("path").isin(dirPaths.toIndexedSeq: _*))
-          .select(col("dir"), col("depth"), col("path"), col("content"))
-          .collect() // only the few matching directory files reach the driver
-          .map(r => (r.getAs[String]("dir"), r.getAs[Int]("depth"),
-            r.getAs[String]("path"), r.getAs[Array[Byte]]("content"))))
-          .sortBy(t => (t._2, t._3)) // root→leaf, stable within a folder
-        path => {
+        val mine = dirRows.filter(t => pred.matches(t._3))
+        (path: String) => {
           val fileDir = path.lastIndexOf('/') match {
             case -1 => ""
             case i  => path.substring(0, i)
           }
-          dirRows.collect {
+          mine.collect {
             case (dfDir, _, _, content)
                 if dfDir != fileDir &&
                   (dfDir.isEmpty || fileDir.startsWith(dfDir + "/")) =>
@@ -180,75 +204,93 @@ object ParentStacks {
           }.toSeq
         }
     }
+  }
 }
 
 /** Multi-job executor (reference `MapReduce(filesystem, jobs)`,
   * mapreduce.go:12-221): N jobs over ONE traversal. The reference
-  * pays listing+open+parse once and fans results out to each job's
-  * pipeline; here the corpus DataFrame is materialized once
-  * (MEMORY_AND_DISK) and every job's plan reads the cached copy —
-  * the multi-query optimization Catalyst doesn't do across actions
-  * (SURVEY.md §4).
+  * reads each file once and hands it to every job's pipeline; here the
+  * corpus is persisted (MEMORY_AND_DISK), directory files are found
+  * once for all jobs, and then ONE Spark job folds every job: each task
+  * reads its partition's `(path, content)` rows once, feeds each row to
+  * every job's filter and mapper, and returns the K partials, which the
+  * driver merges job by job before calling each `finish`.
+  *
+  * A corpus with fewer partitions P than cores would leave cores idle,
+  * so the pass reads the persisted corpus g = min(K, ⌈cores / P⌉) times
+  * within the same stage, copy i folding only the jobs whose index is
+  * i (mod g): tasks = P × g. Each task holds the fold states of its
+  * jobs at once, and a `sortKey` job buffers its partition's mapped
+  * records in task memory.
+  *
+  * First error cancels everything (reference mapreduce.go:215-220): a
+  * failed task fails the pass, whose job group interrupts the tasks
+  * still running. The merge is a driver-side collect of one partial
+  * per task, or, with `spark.graft.mr.mergeDepth` ≥ 2, a treeAggregate
+  * whose intermediate levels merge executor-side — the shape for 10⁵
+  * partitions with non-trivial reduction state, where one driver merge
+  * pass is both a memory spike and a serial hotspot.
   */
 object MapReduceRunner {
+  // the thread-local properties `setJobGroup` writes, restored afterwards
+  private val GroupProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
-  /** Jobs run CONCURRENTLY by default, like the reference's per-job
-    * goroutine pipelines (mapreduce.go:41-93): each job's action is
-    * submitted from its own thread, so a job that underutilizes the
-    * cluster (small filtered subset, driver-side merge) leaves cores
-    * for the others instead of idling them. Each submitting thread
-    * sets its own `spark.scheduler.pool`, so a FAIR-mode context
-    * (`spark.scheduler.mode=FAIR`) interleaves jobs fairly; under the
-    * default FIFO mode concurrent jobs still overlap whenever cores
-    * are free. `spark.graft.mr.concurrency` bounds the pool (≤1 →
-    * serial, the pre-round-9 behavior; results are identical either
-    * way — MapReduceSpec asserts both overlap and equality).
-    *
-    * First error cancels everything (reference mapreduce.go:215-220):
-    * all actions share one Spark job group; the first failure cancels
-    * the group, interrupting the surviving jobs' tasks. */
   def run(spark: SparkSession, corpus: DataFrame, jobs: Seq[CorpusJob])
       : Map[String, Any] = {
-    val cached = corpus.persist(StorageLevel.MEMORY_AND_DISK)
+    if (jobs.isEmpty) return Map.empty
+    val js = jobs.toIndexedSeq
+    // a corpus the caller cached stays cached: only what the run persists
+    // is unpersisted
+    val owned = corpus.storageLevel == StorageLevel.NONE
+    val cached = if (owned) corpus.persist(StorageLevel.MEMORY_AND_DISK) else corpus
     try {
-      cached.count() // materialize once, before any job reads it
-      val par = spark.conf.get("spark.graft.mr.concurrency", "8")
-        .toInt.min(jobs.size)
-      if (par <= 1) jobs.map(j => j.name -> j.run(cached)).toMap
-      else runConcurrent(spark, cached, jobs, par)
-    } finally { cached.unpersist(); () }
+      val parents = ParentStacks.resolvers(cached, js.map(_.directoryFiles))
+      val rows = cached.filter(col("path").isNotNull)
+        .select(col("path"), col("content")).queryExecution.toRdd
+      val sc = spark.sparkContext
+      val nParts = rows.getNumPartitions.max(1)
+      val g = js.size.min((sc.defaultParallelism + nParts - 1) / nParts)
+      val copies = (0 until g).map { c =>
+        val mine = js.indices.filter(_ % g == c)
+        rows.mapPartitions(it => Iterator.single(foldPartition(it, js, mine, parents)))
+      }
+      val partials = if (g == 1) copies.head else sc.union(copies)
+      val add = (acc: Array[Any], part: Array[(Int, Any)]) => {
+        part.foreach { case (i, p) => acc(i) = js(i).mergeAny(acc(i), p) }
+        acc
+      }
+      val zeros = js.map(j => j.zero: Any).toArray
+      val depth = spark.conf.get("spark.graft.mr.mergeDepth", "1").toInt
+      val saved = GroupProps.map(k => k -> sc.getLocalProperty(k))
+      sc.setJobGroup(s"graft-mr-${java.util.UUID.randomUUID()}",
+        s"graft mr job pass[${js.size}]", interruptOnCancel = true)
+      val result =
+        try {
+          if (depth <= 1) partials.collect().foldLeft(zeros)(add)
+          else partials.treeAggregate(zeros)(add, (a, b) => {
+            a.indices.foreach(i => a(i) = js(i).mergeAny(a(i), b(i))); a
+          }, depth)
+        } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      js.indices.foreach(i => js(i).finishAny(result(i)))
+      js.map(_.name).zip(result).toMap
+    } finally if (owned) { cached.unpersist(); () }
   }
 
-  private def runConcurrent(spark: SparkSession, cached: DataFrame,
-      jobs: Seq[CorpusJob], par: Int): Map[String, Any] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val sc = spark.sparkContext
-    val groupId = s"graft-mr-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      val futs = jobs.map { j =>
-        Future {
-          // per-thread local properties: shared cancel group, per-job
-          // FAIR pool. Cleared afterwards — the pool thread is reused.
-          sc.setJobGroup(groupId, s"graft mr job ${j.name}",
-            interruptOnCancel = true)
-          sc.setLocalProperty("spark.scheduler.pool", s"graft-mr-${j.name}")
-          try j.name -> j.run(cached)
-          finally {
-            sc.clearJobGroup()
-            sc.setLocalProperty("spark.scheduler.pool", null)
-          }
-        }
+  /** One task: each row of the partition once, through every job in
+    * `mine`; returns (job index, partial) for those jobs. */
+  private def foldPartition(rows: Iterator[InternalRow], jobs: IndexedSeq[CorpusJob],
+      mine: Seq[Int], parents: IndexedSeq[String => Seq[Array[Byte]]])
+      : Array[(Int, Any)] = {
+    val folders = mine.map(i => (i, jobs(i).filter, parents(i), jobs(i).folder())).toArray
+    rows.foreach { row =>
+      val path = row.getUTF8String(0).toString
+      lazy val content = row.getBinary(1) // read once, only if a job wants it
+      folders.foreach { case (_, filter, parentsFor, f) =>
+        if (filter.matches(path)) f.add(path, parentsFor(path), content)
       }
-      try Await.result(Future.sequence(futs), Duration.Inf).toMap
-      catch {
-        case e: Throwable =>
-          sc.cancelJobGroup(groupId) // first error cancels everything
-          throw e
-      }
-    } finally pool.shutdown()
+    }
+    folders.map { case (i, _, _, f) => (i, f.result(): Any) }
   }
 
   def runOnDirectory(spark: SparkSession, root: String, jobs: Seq[CorpusJob])

@@ -295,12 +295,108 @@ class MapReduceSpec extends AnyFunSuite {
     assert(res.toSet == (1 to 100).toSet)
   }
 
+  test("sortKey sorts each partition before its fold: keep-last/max is the global max, keep-first/min the global min") {
+    // a shuffled 400-file corpus in 8 partitions: without the sort, a
+    // partition's last (first) record is its max (min) only by chance
+    val ids = new scala.util.Random(7).shuffle((0 until 400).toVector)
+    val corpus = Corpus.fromRecords(spark, ids.map(i => s"f$i.txt" -> s"$i".getBytes))
+      .repartition(8)
+    def job(n: String, fold: (Int, Int) => Int, merge: (Int, Int) => Int) =
+      MapReduceJob[Int, Int](
+        name = n,
+        filter = PathGlob("*.txt"),
+        mapper = (_, _, c) => Iterator.single(new String(c, "UTF-8").toInt),
+        zero = -1, fold = fold, merge = merge,
+        sortKey = Some((v: Int) => v.toLong))
+    // and, by construction rather than chance: every partition's stream
+    // arrives non-decreasing
+    val ascending = MapReduceJob[Int, (Boolean, Int)](
+      name = "ascending",
+      filter = PathGlob("*.txt"),
+      mapper = (_, _, c) => Iterator.single(new String(c, "UTF-8").toInt),
+      zero = (true, -1),
+      fold = (s, v) => (s._1 && v >= s._2, v),
+      merge = (a, b) => (a._1 && b._1, -1),
+      sortKey = Some((v: Int) => v.toLong))
+    val res = MapReduceRunner.run(spark, corpus, Seq(
+      job("max", (_, v) => v, math.max),
+      job("min", (acc, v) => if (acc < 0) v else acc,
+        (a, b) => if (a < 0) b else if (b < 0) a else math.min(a, b)),
+      ascending))
+    assert(res == Map("max" -> 399, "min" -> 0, "ascending" -> (true, -1)))
+  }
+
+  /** Spark jobs `body` launches from this thread: a listener counts the
+    * jobs that carry this call's scope property, then waits until every
+    * counted job has ended and the counts hold still. */
+  private def jobsLaunched(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val scope = java.util.UUID.randomUUID().toString
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.scope") == scope)) {
+          started.add(e.jobId); ()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.scope", scope)
+    try {
+      body
+      var stable, waited = 0
+      var last = -1
+      while (stable < 2 && waited < 10000) {
+        Thread.sleep(100); waited += 100
+        val n = started.size
+        if (n == last && ended.containsAll(started)) stable += 1 else { stable = 0; last = n }
+      }
+      started.size
+    } finally {
+      sc.setLocalProperty("graft.test.scope", null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("one pass: 6 jobs launch discovery, fetch and the pass; with no directory files, the pass alone") {
+    val corpus = Corpus.fromRecords(spark, virtualTree)
+    def jobs(withDirs: Boolean) = (0 until 6).map { n =>
+      MapReduceJob[Int, Int](
+        name = s"j$n",
+        filter = PathGlob("**/*.txt"),
+        directoryFiles =
+          if (withDirs && n < 2) Some(PathGlob(if (n == 0) "file.txt" else "*/file.txt"))
+          else None,
+        mapper = (_, parents, _) => Iterator.single(parents.size),
+        zero = 0, fold = _ + _, merge = _ + _)
+    }
+    assert(jobsLaunched(MapReduceRunner.run(spark, corpus, jobs(withDirs = true))) == 3)
+    assert(jobsLaunched(MapReduceRunner.run(spark, corpus, jobs(withDirs = false))) == 1)
+  }
+
+  test("a corpus the caller cached is still cached after a run") {
+    val corpus = Corpus.fromRecords(spark, virtualTree).persist()
+    try {
+      corpus.count()
+      val job = MapReduceJob[Int, Int](
+        name = "files", filter = PathGlob("**/*.txt"),
+        mapper = (_, _, _) => Iterator.single(1),
+        zero = 0, fold = _ + _, merge = _ + _)
+      assert(MapReduceRunner.run(spark, corpus, Seq(job)) == Map("files" -> 4))
+      assert(job.run(corpus) == 4)
+      assert(corpus.storageLevel.useMemory, "the run dropped the caller's cache")
+    } finally { corpus.unpersist(); () }
+  }
+
   test("concurrent multi-job: jobs overlap AND match serial results (mapreduce.go:41-93)") {
     // 4 jobs over a ONE-file corpus, each with a 500ms mapper stall:
-    // every job is a single sleeping task, so serial submission is
-    // bounded below by 4 × 500ms = 2.0s while concurrent submission
-    // runs the 4 stalls at once on local[4] (~500ms) — an
-    // underutilizing job is exactly the shape concurrency rescues.
+    // running the jobs one after another is bounded below by
+    // 4 × 500ms = 2.0s, while the one pass reads the 1-partition corpus
+    // once per job in the same stage and runs the 4 stalls at once on
+    // local[4] (~500ms) — an underutilizing job is exactly the shape
+    // the split rescues.
     val corpus = Corpus.fromRecords(spark, Seq("f0.txt" -> "7".getBytes))
     def job(n: Int) = MapReduceJob[Int, Int](
       name = s"slow$n",
@@ -312,14 +408,11 @@ class MapReduceSpec extends AnyFunSuite {
     val jobs = (0 until 4).map(job)
     val expect = (0 until 4).map(n => s"slow$n" -> (7 + n)).toMap
 
-    spark.conf.set("spark.graft.mr.concurrency", "1")
-    val serial =
-      try MapReduceRunner.run(spark, corpus, jobs)
-      finally spark.conf.unset("spark.graft.mr.concurrency")
+    val serial = jobs.map(j => MapReduceRunner.run(spark, corpus, Seq(j))).reduce(_ ++ _)
     assert(serial == expect)
 
     val t0 = System.nanoTime()
-    val conc = MapReduceRunner.run(spark, corpus, jobs) // default: concurrent
+    val conc = MapReduceRunner.run(spark, corpus, jobs)
     val elapsedMs = (System.nanoTime() - t0) / 1e6
     assert(conc == expect)
     assert(conc == serial)
