@@ -142,13 +142,11 @@ object Tables {
   *
   * Scales are chosen so chained decimal arithmetic never exceeds
   * precision 38 in either engine (Spark: p1+p2+1; DuckDB: w1+w2):
-  * prices decimal(12,2), rates decimal(9,4).
+  * prices decimal(12,2); multiply chains take the tighter casts below.
   */
 object Det {
   /** price-like column (|x| < 1e10, 2dp) as exact decimal */
   def dec2(c: Column): Column = c.cast(DecimalType(12, 2))
-  /** rate-like column (|x| < 1e5, ≤4dp) as exact decimal */
-  def dec4(c: Column): Column = c.cast(DecimalType(9, 4))
   /** deterministic SUM(double) — exact decimal sum, then one cast */
   def dsum(c: Column): Column = sum(dec2(c)).cast(DoubleType)
   /** deterministic AVG(double) — exact sum / exact count, one fp divide */
@@ -165,7 +163,6 @@ object Det {
   def sqlDec2(e: String): String = s"CAST($e AS DECIMAL(12,2))"
   def sqlPrice(e: String): String = s"CAST($e AS DECIMAL(9,2))"
   def sqlRate(e: String): String = s"CAST($e AS DECIMAL(3,2))"
-  def sqlDec4(e: String): String = s"CAST($e AS DECIMAL(9,4))"
   def sqlDsum(e: String): String = s"CAST(SUM(CAST($e AS DECIMAL(12,2))) AS DOUBLE)"
   def sqlDavg(e: String): String =
     s"CAST(SUM(CAST($e AS DECIMAL(12,2))) AS DOUBLE) / COUNT(*)"
@@ -194,45 +191,24 @@ object Scratch {
   }
 }
 
-/** Pluggable mid-query materialization for multi-pass and iterative
-  * operators (selection passes, LSH label propagation, PageRank/BFS
-  * rounds, k-means iterations).
+/** Mid-query materialization for multi-pass and iterative operators
+  * (selection passes, LSH label propagation, PageRank/BFS rounds,
+  * k-means iterations).
   *
-  * `localCheckpoint` — the local[*] fast path — stores blocks WITHOUT
-  * lineage on the executors that computed them: on a real cluster one
-  * executor loss makes every consumer of the pinned frame fail
-  * unrecoverably. The cluster-safe default is therefore
   * `persist(MEMORY_AND_DISK)`: the FIRST action over the pinned frame
   * populates the cache, every later pass reads it, and an evicted or
   * lost block silently recomputes from lineage (all pinned plans here
-  * are deterministic — see [[Det]]). Deliberately NO eager
-  * materialization in this mode — persist is semantically transparent,
-  * and an eager count() is one wasted full evaluation whenever the
-  * frame feeds a single downstream action (measured 1.4–2.6× per-query
-  * overhead across the iterative graph/rank/ivf family at sf0.1).
-  * Long iterative chains at real scale should opt into `checkpoint`:
-  * reliable, lineage-TRUNCATING (keeps round-N plans round-sized and
-  * stops recovery cascading to round 0), at the price of a
-  * checkpoint-dir write per round — requires
-  * `SparkContext.setCheckpointDir`.
-  *
-  * Mode per session via `spark.graft.materialize`:
-  * `persist` (default) | `checkpoint` | `local` (pre-round-6 behavior).
+  * are deterministic — see [[Det]]). `localCheckpoint` would store
+  * blocks WITHOUT lineage, so on a real cluster one executor loss
+  * would fail every consumer. Deliberately NO eager materialization —
+  * persist is semantically transparent, and an eager count() is one
+  * wasted full evaluation whenever the frame feeds a single downstream
+  * action (measured 1.4–2.6× per-query overhead across the iterative
+  * graph/rank/ivf family at sf0.1).
   */
 object Pin {
-  def apply(df: DataFrame): DataFrame = pin(df, eager = true)
-  /** Lazy variant — for frames consumed exactly once per loop round,
-    * where pinning only guards against cross-round lineage growth. */
-  def lazily(df: DataFrame): DataFrame = pin(df, eager = false)
-
-  private def pin(df: DataFrame, eager: Boolean): DataFrame =
-    df.sparkSession.conf.get("spark.graft.materialize", "persist") match {
-      case "local"      => df.localCheckpoint(eager)
-      case "checkpoint" => df.checkpoint(eager)
-      // persist is get-or-compute at first use; eager would only add a
-      // count() pass, so the flag is intentionally ignored here
-      case _ => df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+  def apply(df: DataFrame): DataFrame =
+    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Lineage-CUTTING eager materialization for write-over-self paths
     * (a dynamic partition overwrite refuses a plan that reads the
@@ -278,10 +254,9 @@ object Pin {
       finally { cached.unpersist(blocking = false); () }
     } else df.localCheckpoint(eager = true)
 
-  /** Postfix syntax at call sites: `df.pinned` / `df.pinnedLazily`. */
+  /** Postfix syntax at call sites: `df.pinned`. */
   implicit class PinOps(private val df: DataFrame) extends AnyVal {
     def pinned: DataFrame = Pin(df)
-    def pinnedLazily: DataFrame = Pin.lazily(df)
   }
 }
 
@@ -367,8 +342,7 @@ object Sessions {
     val pc = parent.conf.getAll
     // removals must propagate too: a key UNSET on the parent (a test's
     // guard/probe conf restored in its finally) would otherwise stay
-    // live in a memoized child forever — observed as a stale hn05
-    // deltaMod tripping the oracle pin a suite later
+    // live in a memoized child forever
     c.conf.getAll.keys.filterNot(pc.contains).foreach { k =>
       try c.conf.unset(k)
       catch { case _: org.apache.spark.sql.AnalysisException => () }

@@ -15,10 +15,6 @@ object TextFunctions {
   /** Whitespace tokens. */
   def tokens(text: Column): Column = split(text, " ")
 
-  /** BPE-style pre-tokenizer: letter runs, digit runs, single marks. */
-  def bpeTokens(text: Column): Column =
-    regexp_extract_all(text, lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), lit(0))
-
   def tokenCount(text: Column): Column = size(tokens(text)).cast(LongType)
 
   /** Char-trigram array with a byte-indexed fast path. `substr` on a
@@ -65,10 +61,6 @@ object TextFunctions {
   def minhash(text: Column, j: Int): Column =
     array_min(transform(array_distinct(tokens(text)),
       w => md5(concat(lit(s"$j:"), w))))
-
-  /** k-component MinHash signature as an array column. */
-  def minhashSignature(text: Column, k: Int): Column =
-    array((0 until k).map(minhash(text, _)): _*)
 
   /** LSH band key over signature components [from, until). */
   def lshBand(text: Column, from: Int, until: Int): Column =

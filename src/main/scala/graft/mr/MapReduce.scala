@@ -226,10 +226,7 @@ object ParentStacks {
   * First error cancels everything (reference mapreduce.go:215-220): a
   * failed task fails the pass, whose job group interrupts the tasks
   * still running. The merge is a driver-side collect of one partial
-  * per task, or, with `spark.graft.mr.mergeDepth` ≥ 2, a treeAggregate
-  * whose intermediate levels merge executor-side — the shape for 10⁵
-  * partitions with non-trivial reduction state, where one driver merge
-  * pass is both a memory spike and a serial hotspot.
+  * per task.
   */
 object MapReduceRunner {
   // the thread-local properties `setJobGroup` writes, restored afterwards
@@ -261,17 +258,12 @@ object MapReduceRunner {
         acc
       }
       val zeros = js.map(j => j.zero: Any).toArray
-      val depth = spark.conf.get("spark.graft.mr.mergeDepth", "1").toInt
       val saved = GroupProps.map(k => k -> sc.getLocalProperty(k))
       sc.setJobGroup(s"graft-mr-${java.util.UUID.randomUUID()}",
         s"graft mr job pass[${js.size}]", interruptOnCancel = true)
       val result =
-        try {
-          if (depth <= 1) partials.collect().foldLeft(zeros)(add)
-          else partials.treeAggregate(zeros)(add, (a, b) => {
-            a.indices.foreach(i => a(i) = js(i).mergeAny(a(i), b(i))); a
-          }, depth)
-        } finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+        try partials.collect().foldLeft(zeros)(add)
+        finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
       js.indices.foreach(i => js(i).finishAny(result(i)))
       js.map(_.name).zip(result).toMap
     } finally if (owned) { cached.unpersist(); () }

@@ -246,10 +246,9 @@ object DedupQueries {
     * set): each round folds labels doc→bucket→doc through two min
     * aggregations, covering two graph hops, and [[graft.Pin]]
     * materializes each round's labels so later rounds read cached
-    * blocks instead of recomputing the chain (persist mode does NOT
-    * truncate lineage — the plan still grows one round per iteration;
-    * `spark.graft.materialize=checkpoint` is the opt-in that truncates
-    * when round counts get large). Convergence is detected from the label sum, which
+    * blocks instead of recomputing the chain (persist does NOT
+    * truncate lineage — the plan still grows one round per iteration).
+    * Convergence is detected from the label sum, which
     * strictly decreases until fixpoint — one scalar action per round,
     * no old-vs-new join. Rounds = half the component diameter; at
     * cluster scale the same loop stands (or large-star/small-star for
@@ -319,10 +318,10 @@ object DedupQueries {
     while (!converged && rounds < 30) {
       val bucketMin = inc.join(labels, "doc_id")
         .groupBy("bucket").agg(min("lbl").as("blbl"))
-      // lazy checkpoint: labelSum's action materializes it, so each
-      // round pays ONE job instead of checkpoint-then-sum paying two
+      // persisted, not counted: labelSum's action fills the cache, so
+      // each round pays ONE job
       val next = inc.join(bucketMin, "bucket")
-        .groupBy("doc_id").agg(min("blbl").as("lbl")).pinnedLazily
+        .groupBy("doc_id").agg(min("blbl").as("lbl")).pinned
       val s2 = labelSum(next)
       converged = s2 == prevSum
       prevSum = s2

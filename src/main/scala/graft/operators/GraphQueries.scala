@@ -22,22 +22,17 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: each round is one shuffle (groupBy dst) joined against
   * the static edge list; ranks are pinned ([[graft.Pin]]) per round so
-  * later rounds read materialized blocks instead of recomputing the
-  * whole chain (persist does NOT truncate lineage — the logical plan
-  * still grows by one round per iteration; opt into
-  * `spark.graft.materialize=checkpoint` when round counts are large
-  * enough for that to matter). The edge list with out-degrees is
+  * later rounds read cached blocks instead of recomputing the whole
+  * chain (persist does NOT truncate lineage — the logical plan still
+  * grows by one round per iteration). The edge list with out-degrees is
   * computed once and reused by every round. At cluster scale the edge
   * list would be bucketed by src so the per-round join never
   * reshuffles the big side.
   *
   * Per-round node-state joins (rank / hub / authority / frontier
-  * tables — all O(|V|)) are governed by `spark.graft.graph.join`:
-  * `shuffle` (default) leaves them as plain equi-joins — scale-safe at
-  * web-graph |V|, and AQE still converts to a runtime broadcast while
-  * the state fits the threshold; `broadcast` pins the pre-AQE hint,
-  * for bounded graphs (this corpus's supplier/customer graph) where
-  * skipping the exchange is worth it. Output is identical either way.
+  * tables — all O(|V|)) are plain equi-joins: scale-safe at web-graph
+  * |V|, and AQE still converts them to a runtime broadcast while the
+  * state fits the threshold.
   */
 object GraphQueries {
   private def q(name: String, doc: String, sql: String,
@@ -52,13 +47,6 @@ object GraphQueries {
     * sf0.1). AQE off: its per-stage driver barrier is pure latency at
     * the sized width (r17 min-of-5: gr06 0.88×, gr05/gr07 neutral). */
   private val ByLineitem = Sizing.Input("lineitem", adaptive = false)
-
-  /** Join-mode switch for O(|V|) per-round node-state frames. */
-  private def vside(df: DataFrame): DataFrame =
-    df.sparkSession.conf.get("spark.graft.graph.join", "shuffle") match {
-      case "broadcast" => broadcast(df)
-      case _           => df
-    }
 
   private val SCALE = 1000000000000L // 10^12 fixed-point
   private val ITERS = 3
@@ -118,18 +106,16 @@ object GraphQueries {
         .select(col("node"), expr(s"$SCALE div n").as("r"))
         .pinned
       for (_ <- 1 to ITERS) {
-        // |V| ≪ |E|, but |V| still grows with the graph: the rank-table
-        // join mode is config-selected (vside) — shuffle by default
-        // (edges bucketed by src at cluster scale keep the big side
-        // stationary), broadcast opt-in for bounded graphs. The only
-        // per-round shuffle on the default path beyond the rank join is
-        // the partial+final contribution sum on dst.
+        // |V| ≪ |E|, but |V| still grows with the graph: the rank table
+        // joins by shuffle (edges bucketed by src at cluster scale keep
+        // the big side stationary). The only per-round shuffle beyond
+        // the rank join is the partial+final contribution sum on dst.
         val contribs = edgeDeg
-          .join(vside(ranks), col("src") === col("node"))
+          .join(ranks, col("src") === col("node"))
           .select(col("dst"), expr("r div deg").as("cb"))
           .groupBy("dst").agg(sum(col("cb")).as("s"))
         ranks = nodes.crossJoin(broadcast(params))
-          .join(vside(contribs), col("node") === col("dst"), "left")
+          .join(contribs, col("node") === col("dst"), "left")
           .select(col("node"),
             (expr(s"($SCALE div n) * 15 div 100") +
               expr("85 * coalesce(s, 0) div 100")).as("r"))
@@ -196,12 +182,12 @@ object GraphQueries {
       var h = eb.select(col("c")).distinct().withColumn("h", lit(S))
       var a: DataFrame = null
       for (_ <- 1 to 2) {
-        val ar = eb.join(vside(h), Seq("c")).groupBy("sp")
+        val ar = eb.join(h, Seq("c")).groupBy("sp")
           .agg(sum(col("h")).as("ar"))
         a = ar.crossJoin(broadcast(ar.agg(sum(col("ar")).as("t"))))
           .select(col("sp"), expr(s"ar * $S div t").as("a"))
           .pinned
-        val hr = eb.join(vside(a), Seq("sp")).groupBy("c")
+        val hr = eb.join(a, Seq("sp")).groupBy("c")
           .agg(sum(col("a")).as("hr"))
         h = hr.crossJoin(broadcast(hr.agg(sum(col("hr")).as("t"))))
           .select(col("c"), expr(s"hr * $S div t").as("h"))
@@ -275,7 +261,7 @@ object GraphQueries {
       for (r <- 1 to ROUNDS) {
         val frontier = visited.filter(col("d") === (r - 1))
         val next = edges
-          .join(vside(frontier.select(col("node"))), col("src") === col("node"))
+          .join(frontier.select(col("node")), col("src") === col("node"))
           .select(col("dst").as("node")).distinct()
           .join(visited.select(col("node")).withColumnRenamed("node", "vn"),
             col("node") === col("vn"), "left_anti")

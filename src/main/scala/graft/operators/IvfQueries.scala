@@ -1133,7 +1133,7 @@ object IvfQueries {
       // run: load index, beam-search, join the persisted truth.
       val s = searchSession(s0)
       val dir = hnIndexDir(s0, d, trigger = "hn01_graph_ann")
-      val edges = s.read.parquet(s"$dir/edges").pinnedLazily // read HnH times
+      val edges = s.read.parquet(s"$dir/edges").pinned // read HnH times
       val hubs = s.read.parquet(s"$dir/hubs")
       val vecs = s.read.parquet(s"$dir/vecs")
       val visited = hnBeamSearch(vecs, hubs, edges)
@@ -1229,7 +1229,7 @@ object IvfQueries {
        |ORDER BY query_id, rank""".stripMargin) { (s0, d) =>
     val s = searchSession(s0)
     val dir = hnIndexDir(s0, d)
-    val edges = s.read.parquet(s"$dir/edges").pinnedLazily // read HnH times
+    val edges = s.read.parquet(s"$dir/edges").pinned // read HnH times
     val hubs = s.read.parquet(s"$dir/hubs")
     val vecs = s.read.parquet(s"$dir/vecs")
     val visited = hnBeamSearch(vecs, hubs, edges)
@@ -1548,7 +1548,7 @@ object IvfQueries {
       import s.implicits._
       val dir = h3IndexDir(s0, d)
       val lmax = h3Lmax(dynCells(s0, d))
-      val vecs = s.read.parquet(s"$dir/vecs").pinnedLazily
+      val vecs = s.read.parquet(s"$dir/vecs").pinned
       // The whole search (descent + beam + recall readout) builds as
       // ONE ZERO-ACTION plan chain: no per-round collect or manual
       // broadcast job — each round's expansion rides a broadcast HINT
@@ -1647,7 +1647,7 @@ object IvfQueries {
       // base beam over layer ≤ 1 edges (layer-1 union = the cross-cell
       // escape hatch), seeded with everything the descent scored
       val se = s.read.parquet(s"$dir/edges").filter(col("layer") <= 1)
-        .pinnedLazily
+        .pinned
       visited = truncate(visited.distinct())
       var beam = topOf(visited, H3B).join(broadcast(qeDf), Seq("query_id"))
       for (_ <- 1 to HnH) {
@@ -1877,39 +1877,10 @@ object IvfQueries {
   // layer — ∝ the ingest batch, never the corpus — which is what
   // stops a daily-ingest corpus from re-paying hn03's 18-minute
   // 1000× ladder build (BENCH_1000X_hn05_r13.json is the receipt).
-  // The delta selector rides `spark.graft.hn05.deltaMod` (default
-  // 211, the oracle's fixed split — the growth probes, where only
-  // Bench runs, override it to model sparser ingest batches).
-  // keyed by (session, dir, deltaMod): the BASE SPLIT depends on the
-  // delta selector, so a mid-session mod change (the sparse-ingest
-  // probes) must rebuild rather than reuse a base built for another
-  // split - a vector in neither base nor delta would silently vanish
+  // The delta is the oracle's fixed split, vec_id % 211 == 0; base
+  // ladders are memoized per (session, sf dir).
   private val h5Dirs =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Long), (String, Int)]
-
-  private val H5ModConf = "spark.graft.hn05.deltaMod"
-
-  private def h5Mod(s: SparkSession): Long =
-    s.conf.get(H5ModConf, "211").toLong
-
-  /** Growth probes (Bench-only sessions, never oracle-compared) must
-    * declare themselves to override the delta split — see [[h5OraclePin]]. */
-  private val H5ProbeConf = "spark.graft.hn05.probeMode"
-
-  /** Oracle pin (the hn03 LMAX idiom): the hn05/hn06 census SQL
-    * hard-codes the `% 211` split, so a [[H5ModConf]] override on an
-    * oracle-compared path must fail loudly HERE, not downstream as an
-    * opaque hash mismatch. The sparse-ingest growth probes (where only
-    * Bench runs) ride the override legitimately and declare it with
-    * `spark.graft.hn05.probeMode=true`. */
-  private def h5OraclePin(s: SparkSession): Long = {
-    val mod = h5Mod(s)
-    require(mod == 211L || s.conf.get(H5ProbeConf, "false").toBoolean,
-      s"$H5ModConf=$mod diverges from the oracle's fixed %211 split; " +
-        s"set $H5ProbeConf=true for Bench-only growth probes, or unset " +
-        "the mod for oracle-compared runs")
-    mod
-  }
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, Int)]
 
   /** The ONE hash-geometric level rule every ladder shares (oracle
     * CASE-chain twin): largest l <= lmax with h = 0 (mod 4^l), built
@@ -2264,7 +2235,7 @@ object IvfQueries {
     pmod(bkt, lit(H5EdgeGroups.toLong)).cast(IntegerType)
 
   /** Build + persist the production-shape BASE ladder once per
-    * (session, sf dir, delta-mod): the frozen dense-keyed codebook,
+    * (session, sf dir): the frozen dense-keyed codebook,
     * base nodes (id, embedding, cell, level), per-layer bucketed edges
     * partitioned by (layer, bucket-group) for O(delta) incremental
     * overwrites, per-(layer, bucket) node/edge SUMMARIES (counts +
@@ -2277,14 +2248,13 @@ object IvfQueries {
     * from the BASE count. */
   def h5IndexDir(s: SparkSession, d: String): (String, Int) =
     h5Dirs.synchronized {
-      h5Dirs.getOrElseUpdate((s, d, h5Mod(s)), {
+      h5Dirs.getOrElseUpdate((s, d), {
         val dir = graft.Scratch.dir("graft_hn05_")
         var lmax = 0
         graft.Phases.timed("hn05_ladder_upsert", "setup") {
           VectorExpressions.register(s)
-          val mod = h5Mod(s)
           val base = Tables.embeddings(s, d)
-            .filter(col("vec_id") % mod =!= 0)
+            .filter(col("vec_id") % 211 =!= 0)
             .select(col("vec_id"), col("embedding"))
           val nBase = base.count()
           val ncells = math.max(16L, (nBase + 127L) / 128L)
@@ -2333,7 +2303,7 @@ object IvfQueries {
                 % lit(1000000007L)).cast(LongType).as("chk"))
             .write.mode("overwrite").parquet(s"$dir/esum")
           // the staged ingest batch the timed path admits
-          Tables.embeddings(s, d).filter(col("vec_id") % mod === 0)
+          Tables.embeddings(s, d).filter(col("vec_id") % 211 === 0)
             .select(col("vec_id"), col("embedding"))
             .write.mode("overwrite").parquet(s"$dir/delta_src")
         }
@@ -2400,7 +2370,6 @@ object IvfQueries {
          |  UNION ALL SELECT * FROM c2)
          |ORDER BY layer""".stripMargin, sizing = LadderByEmbeddings) { (s, d) =>
       VectorExpressions.register(s)
-      h5OraclePin(s)
       val (dir, lmax) = h5IndexDir(s, d)
       // the genuinely-new work: hierarchically assign + level the
       // DELTA under the persisted frozen codebook — the timed path
@@ -2531,7 +2500,6 @@ object IvfQueries {
          |  UNION ALL SELECT * FROM c2)
          |ORDER BY layer""".stripMargin, sizing = LadderByEmbeddings) { (s, d) =>
       VectorExpressions.register(s)
-      h5OraclePin(s)
       val (dir, lmax) = h5IndexDir(s, d)
       val nodes = s.read.parquet(s"$dir/nodes")
       // the deletion names INDEXED ids: both the deleted rows (with

@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * materialized blocks instead of re-evaluating the input lineage,
   * which matters when the input is itself a window/join pipeline
   * (ev09's per-user lag). The tiny frames (`ext`, `hits`) are
-  * checkpointed too so broadcast builds don't re-trigger a pass per
+  * pinned too so broadcast builds don't re-trigger a pass per
   * reference. Zero fact shuffles throughout.
   */
 object Rank {
@@ -86,8 +86,7 @@ object Rank {
     // materialize the narrow (g, v) projection ONCE so the input
     // lineage (which may itself be an expensive window/join pipeline,
     // e.g. ev09's per-user lag) is evaluated once, not once per pass.
-    // Pin materializes it (persist+count by default — recomputable on
-    // executor loss; see graft.Pin for the checkpoint/local modes).
+    // Pin persists it (recomputable on executor loss; see graft.Pin).
     // At scale this is the temp table any selection pass keeps, priced
     // at one write of two columns instead of three re-evaluations.
     // (no fanout here: spreading the narrow (g, v) projection before

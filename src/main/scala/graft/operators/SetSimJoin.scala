@@ -75,6 +75,37 @@ object SetSimJoin {
       tNum = 3, tDen = 5, guardAs = "ss01_setsim_join")
   }
 
+  /** Rarity rank over the shingle VOCAB (never the corpus stream),
+    * chosen by size:
+    *
+    *  - window (below `globalRankBytes`): no-partition `row_number` —
+    *    one in-task sort of the vocab. MEASURED 2.4× faster than the
+    *    global form at harness scales (r16 probe: three extra
+    *    vocab-frame evaluations + an RDD Row round-trip vs one
+    *    in-task sort over a small vocab).
+    *  - global: [[Rank.globalRowNumber]] (range partition +
+    *    partition-local sort + zipWithIndex, the dd15 machinery) —
+    *    no single-task sort anywhere; the form a corpus whose shingle
+    *    vocab outgrows one task's sort must run.
+    *
+    * Ranks are IDENTICAL by construction: both rank the same strict
+    * total order (tf, tok) — SetSimSpec pins branch equality. The size
+    * is the ANALYZED plan's estimate of the frequency table's input
+    * (file-scan bytes propagated by the size-only visitor): plan
+    * metadata, no count job and no optimizer pass on the hot path. */
+  private def vocabRank(tf: DataFrame, globalRankBytes: Long): DataFrame =
+    if (tf.queryExecution.analyzed.stats.sizeInBytes > BigInt(globalRankBytes))
+      graft.operators.Rank.globalRowNumber(
+          tf, Seq(col("tf"), col("tok")), "srank")
+        .select(col("tok"), col("srank"))
+    else
+      tf.withColumn("srank",
+        row_number().over(Window.orderBy(col("tf"), col("tok"))).cast(LongType))
+        .select("tok", "srank")
+
+  /** Raw-text volume whose vocab could plausibly outgrow one task. */
+  private[graft] val GlobalRankBytes: Long = 8L << 30
+
   /** Each document collapsed to ONE row: its rare-first-sorted rank
     * array (srank ↔ shingle is a bijection, so every set operation
     * downstream runs on packed longs, never strings), size, and safe
@@ -85,58 +116,13 @@ object SetSimJoin {
     * row_number window over the exploded shingle stream. Per-row
     * state is bounded by document length, the same bound the corpus
     * already imposes. */
-  /** Rarity rank over the shingle VOCAB (never the corpus stream) —
-    * MECHANICAL size-conditional switch (r17, closing the r16 verdict
-    * item that left the cluster escape hatch as a comment):
-    *
-    *  - `window` (harness default): no-partition `row_number` — one
-    *    in-task sort of the vocab. MEASURED 2.4× faster than the
-    *    global form at harness scales (r16 probe: three extra
-    *    vocab-frame evaluations + an RDD Row round-trip vs one
-    *    in-task sort over a small vocab).
-    *  - `global`: [[Rank.globalRowNumber]] (range partition +
-    *    partition-local sort + zipWithIndex, the dd15 machinery) —
-    *    no single-task sort anywhere; the form a corpus whose shingle
-    *    vocab outgrows one task's sort must run.
-    *
-    * Ranks are IDENTICAL by construction: both rank the same strict
-    * total order (tf, tok) — SetSimSpec pins branch equality. The
-    * switch: `spark.graft.setsim.rankPath` = auto (default) | window |
-    * global; `auto` engages the global path when the optimizer's size
-    * estimate of the frequency table's input exceeds
-    * `spark.graft.setsim.globalRankBytes` (default 8 GiB — raw-text
-    * volume whose vocab could plausibly outgrow one task). The
-    * estimate is plan metadata (file-scan bytes), not an extra count
-    * job on the hot path — and it reads the ANALYZED plan's stats
-    * (scan sizeInBytes propagated by the size-only visitor), not the
-    * optimized plan's: forcing the optimizer over the tf subtree just
-    * to read a size was a measurable driver-side tax per build, and
-    * the explicit window/global modes skip the estimate entirely
-    * (lazy). */
-  private def vocabRank(tf: DataFrame): DataFrame = {
-    val conf = tf.sparkSession.conf
-    val mode = conf.get("spark.graft.setsim.rankPath", "auto")
-    val thresholdBytes = scala.util.Try(
-      conf.get("spark.graft.setsim.globalRankBytes").toLong)
-      .getOrElse(8L * 1024 * 1024 * 1024)
-    lazy val big = tf.queryExecution.analyzed.stats.sizeInBytes >
-      BigInt(thresholdBytes)
-    if (mode == "global" || (mode != "window" && big))
-      graft.operators.Rank.globalRowNumber(
-          tf, Seq(col("tf"), col("tok")), "srank")
-        .select(col("tok"), col("srank"))
-    else
-      tf.withColumn("srank",
-        row_number().over(Window.orderBy(col("tf"), col("tok"))).cast(LongType))
-        .select("tok", "srank")
-  }
-
-  private def rankedDocs(elements: DataFrame, tNum: Int, tDen: Int): DataFrame = {
+  private def rankedDocs(elements: DataFrame, tNum: Int, tDen: Int,
+      globalRankBytes: Long): DataFrame = {
     // the exploded shingle stream feeds BOTH the frequency table and
     // the rank-attach join — pin it or it is recomputed from the scan
     val tok = elements.pinned
     val tf = tok.groupBy("tok").agg(count(lit(1)).as("tf"))
-    val ord = vocabRank(tf)
+    val ord = vocabRank(tf, globalRankBytes)
     tok.join(ord, Seq("tok"))
       .groupBy("doc_id")
       .agg(sort_array(collect_list(col("srank"))).as("ranks"))
@@ -151,15 +137,17 @@ object SetSimJoin {
   /** Prefix-filtered exact Jaccard ≥ tNum/tDen self-join over an
     * element table (doc_id, tok) — tok multiplicities must already be
     * deduplicated per doc. Factored from ss01 so specs can drive it
-    * with crafted sets (threshold edges, containment pairs). */
+    * with crafted sets (threshold edges, containment pairs) and force
+    * either vocab-rank branch through `globalRankBytes`. */
   def setsimJoin(elements: DataFrame, tNum: Int, tDen: Int,
       guardAs: String = "setsimJoin",
-      guardAlt: String = "ss03_setsim_representatives"): DataFrame = {
+      guardAlt: String = "ss03_setsim_representatives",
+      globalRankBytes: Long = GlobalRankBytes): DataFrame = {
     // per-doc array form read 3× (candidates + both verify sides)
     // (r17 probe: eager byDoc.count() measured 1.09-1.15x WORSE
     // min-of-5 across ss01/ss02 — block-level locking already
     // serializes concurrent first readers; reverted)
-    val byDoc = rankedDocs(elements, tNum, tDen).pinned
+    val byDoc = rankedDocs(elements, tNum, tDen, globalRankBytes).pinned
     // prefix entries with their 1-based rare-first position (for the
     // positional filter) and the doc size (for the length filter)
     val pref = byDoc.select(col("doc_id"), col("sz"),
@@ -287,7 +275,7 @@ object SetSimJoin {
     * subset pairs. */
   def containmentJoin(elements: DataFrame, tNum: Int, tDen: Int): DataFrame = {
     // per-doc array form read 3× (A-prefix, B-probe, both verify sides)
-    val byDoc = rankedDocs(elements, tNum, tDen).pinned
+    val byDoc = rankedDocs(elements, tNum, tDen, GlobalRankBytes).pinned
     // asymmetric candidates: A's prefix against B's FULL ranked set,
     // pruned by the containment forms of the lossless filters —
     //  length: inter ≥ ⌈τ·|A|⌉ and inter ≤ |B| force |B|·tDen ≥ |A|·tNum;

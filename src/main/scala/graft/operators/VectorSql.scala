@@ -31,10 +31,6 @@ private[operators] object VectorSql {
       s"CAST($a.embedding[$i] AS DOUBLE) * CAST($a.embedding[$i] AS DOUBLE)")
       .mkString("(", " + ", ")")
 
-  /** SQL cosine from the two above. */
-  def sqlCosine(a: String, b: String): String =
-    s"${sqlDot(a, b)} / (SQRT(${sqlNorm2(a)}) * SQRT(${sqlNorm2(b)}))"
-
   /** SQL sign-bit LSH bucket over coordinate hyperplanes 1,9,…,57. */
   def sqlBucket(a: String): String =
     (0 until Planes).map(j =>

@@ -126,8 +126,6 @@ object PathGlob {
   private[sources] final case class Exact(s: String) extends Segment
   private[sources] final case class RegexSeg(p: Pattern) extends Segment
 
-  val Wildcard = "*"
-  val RecursiveWildcard = "**"
   def apply(patterns: Seq[String]): PathPredicate =
     if (patterns.size == 1) PathGlob(patterns.head)
     else MultiGlob(patterns.map(PathGlob(_)))

@@ -144,10 +144,6 @@ object EventStreams {
       .select(col("doc_id"), size(col("cands")).cast("long").as("n_cand"),
         (size(col("cands")) === 0).as("admitted"))
 
-  /** Per-type running counts in update mode (no watermark needed). */
-  def typeCounts(events: DataFrame): DataFrame =
-    events.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-
   /** Streaming cardinality: the [[graft.operators.Hll]] register table
     * built INCREMENTALLY by the streaming engine itself. The sketch's
     * merge operation is register-wise max, and max is a streaming

@@ -23,34 +23,6 @@ class GraphSpec extends AnyFunSuite {
     assert(rows.length >= 3, "BFS should reach at least distance 2")
   }
 
-  test("graph join mode (spark.graft.graph.join) changes the plan, never the answer") {
-    // The per-round node-state joins are config-selected: `shuffle`
-    // (default — scale-safe at web-graph |V|) vs `broadcast` (opt-in
-    // for bounded graphs). Integer fixed-point arithmetic makes every
-    // round exact, so the two modes must agree bit-for-bit.
-    val conf = spark.conf
-    def inMode[A](m: String)(body: => A): A = {
-      conf.set("spark.graft.graph.join", m)
-      try body finally conf.unset("spark.graft.graph.join")
-    }
-    for (name <- Seq("gr01_pagerank", "gr02_hits", "gr03_bfs")) {
-      val gq = Registry.all.find(_.name == name).get
-      val shuffled = inMode("shuffle") { gq.build(spark, sf).collect().toSeq }
-      val broadcasted = inMode("broadcast") { gq.build(spark, sf).collect().toSeq }
-      assert(shuffled == broadcasted, s"$name diverges across join modes")
-    }
-    // and the broadcast mode really does hint: the analyzed plan grows
-    // ResolvedHint nodes that the default mode must not have
-    def hintCount(m: String) = inMode(m) {
-      Registry.all.find(_.name == "gr01_pagerank").get
-        .build(spark, sf).queryExecution.analyzed.collect {
-          case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
-        }.size
-    }
-    assert(hintCount("broadcast") > hintCount("shuffle"),
-      "broadcast mode must add rank/contrib hints over the default")
-  }
-
   test("pagerank top-25 is positive, descending, and deterministic across runs") {
     val a = gr01.build(spark, sf).collect().toSeq
     val b = gr01.build(spark, sf).collect().toSeq

@@ -1,9 +1,31 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
-/** The one harness session and its probe-conf parser. */
+/** The one harness session, its probe-conf parser and the engine's
+  * option set. */
 class HarnessSpec extends AnyFunSuite {
+  /** Every `spark.graft.*` key the engine reads, with why it is an
+    * option: two workloads need different values, or it is a fail-fast
+    * budget a deployment sizes. A new key earns its line here. */
+  private val graftOptions: Map[String, String] = Map(
+    "spark.graft.mv.registry" -> "MvSpec and the streaming faces register different views",
+    "spark.graft.approxDistinct" -> "ad01 runs exact, ad02 runs approximate",
+    "spark.graft.pairGuard.maxPairs" -> "fail-fast budget on quadratic pair joins",
+    "spark.graft.ladder.maxAffectedFrac" -> "fail-fast budget on incremental ladder admission")
+
+  test("the engine reads exactly the allow-listed spark.graft options") {
+    val key = """spark\.graft\.[a-zA-Z][a-zA-Z0-9_.]*""".r
+    val sources = Files.walk(Paths.get("src/main/scala"))
+    val found =
+      try sources.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .flatMap((f: Path) => key.findAllIn(Files.readString(f))).toSet
+      finally sources.close()
+    assert(found == graftOptions.keySet)
+  }
+
   test("the harness session carries every bench conf and injects the graft extensions") {
     // a fresh session: defaults only, nothing another spec set or registered
     val s = TestSpark.spark.newSession()

@@ -363,19 +363,6 @@ class IvfSpec extends AnyFunSuite {
     }
   }
 
-  test("hn05 oracle mod pin: a deltaMod override fails loudly unless probeMode is declared") {
-    // the census SQL hard-codes the %211 split; a conf override on an
-    // oracle-compared path must fail at build, not as a hash mismatch
-    spark.conf.set("spark.graft.hn05.deltaMod", "7")
-    try {
-      val ex = intercept[IllegalArgumentException] {
-        SparkEntry.queries("hn05_ladder_upsert")(spark, sf)
-      }
-      assert(ex.getMessage.contains("probeMode"),
-        s"diagnostic must name the probe-mode escape hatch: ${ex.getMessage}")
-    } finally spark.conf.unset("spark.graft.hn05.deltaMod")
-  }
-
   test("LadderGuard: admits a delta below the mass threshold, refuses one above, names the rebuild") {
     val key = graft.operators.LadderGuard.ConfKey
     try {

@@ -186,13 +186,11 @@ class MapReduceSpec extends AnyFunSuite {
     assert(MapReduceRunner.run(spark, corpus, Seq(job))("count1000") == 1000)
   }
 
-  test("tree merge (spark.graft.mr.mergeDepth=2) ≡ driver merge under a forced high partition count") {
-    // At 10⁵ partitions the default one-partial-per-partition driver
-    // collect is a memory spike + serial merge hotspot; mergeDepth ≥ 2
-    // runs treeAggregate's intermediate merges executor-side. Same
-    // (zero, fold, merge) algebra → identical result, here pinned on a
-    // 64-partition corpus with a NON-commutative-looking state (sum +
-    // count + min/max) to catch any merge-order assumption.
+  test("driver merge folds one partial per task over 64 partitions") {
+    // One partial per task reaches the driver and merges there with the
+    // job's (zero, fold, merge) algebra, pinned on a 64-partition
+    // corpus with a NON-commutative-looking state (sum + count +
+    // min/max) to catch any merge-order assumption.
     val corpus = Corpus.fromRecords(spark,
       (0 until 1000).map(i => s"dir$i/f$i.txt" -> s"$i".getBytes))
       .repartition(64)
@@ -206,9 +204,6 @@ class MapReduceSpec extends AnyFunSuite {
         math.min(a._3, b._3), math.max(a._4, b._4)))
     val expected = (499500L, 1000L, 0, 999)
     assert(MapReduceRunner.run(spark, corpus, Seq(job))("stats") == expected)
-    spark.conf.set("spark.graft.mr.mergeDepth", "2")
-    try assert(MapReduceRunner.run(spark, corpus, Seq(job))("stats") == expected)
-    finally spark.conf.unset("spark.graft.mr.mergeDepth")
   }
 
   test("TestMapperError: first error fails the run (mapreduce_test.go:195-274)") {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.GraftDatasetBridge
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.Cross
 import org.apache.spark.sql.catalyst.plans.logical._
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,9 +16,9 @@ import scala.util.Try
   * that single build: the conf snapshot around it, its schema, the
   * analyzed plan's broadcast-hinted subtrees (counted before release)
   * and fanout-shaped repartitions, the optimized plan's cross joins, the
-  * executed plan's CartesianProduct grep and a `count()`. Only hinted
-  * queries are rebuilt, at sf0.01, for the broadcast guard's scale
-  * comparison.
+  * executed plan's CartesianProduct grep and file scans per table, and
+  * a `count()`. Only hinted queries are rebuilt, at sf0.01, for the
+  * broadcast guard's scale comparison.
   * Build failures are collected by name; every lint that needs the
   * failed reading fails on them. */
 class RegistrySweepSpec extends AnyFunSuite {
@@ -101,13 +103,15 @@ class RegistrySweepSpec extends AnyFunSuite {
         }
       }
       val fanouts = df.map(d => fanoutBreaches(d.queryExecution.analyzed))
-      val cartesian = df.map(_.queryExecution.executedPlan.toString.contains("CartesianProduct"))
+      val executed = df.map(_.queryExecution.executedPlan)
+      val cartesian = executed.map(_.toString.contains("CartesianProduct"))
+      val scans = executed.map(duplicateScans)
       val count = df.map(_.count())
       val after = spark.conf.getAll
       val changed = (before.keySet ++ after.keySet)
         .filter(k => before.get(k) != after.get(k))
         .map(k => k -> (before.get(k), after.get(k))).toMap
-      Reading(q, schema, hinted, crossJoins, fanouts, cartesian, count, changed)
+      Reading(q, schema, hinted, crossJoins, fanouts, cartesian, scans, count, changed)
     } finally Harness.release(spark)
   }
 
@@ -147,6 +151,20 @@ class RegistrySweepSpec extends AnyFunSuite {
         }
     }.flatten
   }
+
+  /** "<table> xN" for each root path the plan's file scans read N > 1
+    * times, unwrapping the top-level AQE wrapper's initial plan. Scans
+    * inside subquery expressions, nested AQE wrappers or beneath an
+    * InMemoryTableScan are not traversed, so an empty result does not
+    * prove zero duplicate scans; a non-empty one is always real. */
+  private def duplicateScans(plan: SparkPlan): Seq[String] =
+    plan.flatMap {
+      case a: AdaptiveSparkPlanExec => a.initialPlan.collect { case f: FileSourceScanExec => f }
+      case f: FileSourceScanExec => Seq(f)
+      case _ => Nil
+    }.flatMap(_.relation.location.rootPaths.map(_.getName))
+      .groupBy(identity).collect { case (p, o) if o.size > 1 => s"$p x${o.size}" }
+      .toSeq.sorted
 
   /** Conservative upper bound on a plan's row count, or None. */
   private def est(p: LogicalPlan): Option[Long] = p match {
@@ -293,6 +311,18 @@ class RegistrySweepSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"cartesian products in: ${offenders.mkString(", ")}")
   }
 
+  /** Triage, not a gate: queries whose physical plan scans one table
+    * more than once — the cm01 shape (one frame consumed by two
+    * subtrees without a Pin, so the scan and everything above it runs
+    * twice). Self-joins legitimately scan twice; a pinned frame shows
+    * as one InMemoryTableScan. */
+  test("report registry queries that scan one table more than once") {
+    readings(_.duplicateScans, "failed to plan").foreach {
+      case (q, dups) if dups.nonEmpty => info(s"${q.name}: ${dups.mkString(", ")}")
+      case _ =>
+    }
+  }
+
   /** `Tables.fanout` hashes on its input's LEADING column, so it must
     * wrap a base-table scan, whose first column is the high-cardinality
     * key: fanout over a projection that leads with a flag or a label
@@ -328,6 +358,7 @@ object RegistrySweepSpec {
       crossJoins: Try[Seq[CrossJoin]],
       fanouts: Try[Seq[String]],
       cartesian: Try[Boolean],
+      duplicateScans: Try[Seq[String]],
       count: Try[Long],
       confChanges: Map[String, (Option[String], Option[String])])
 }

@@ -31,8 +31,9 @@ class SetSimSpec extends AnyFunSuite {
       .toSet
   }
 
-  private def run(tok: DataFrame, tNum: Int, tDen: Int): Set[(Long, Long, Long, Long)] =
-    SetSimJoin.setsimJoin(tok, tNum, tDen)
+  private def run(tok: DataFrame, tNum: Int, tDen: Int,
+      globalRankBytes: Long = SetSimJoin.GlobalRankBytes): Set[(Long, Long, Long, Long)] =
+    SetSimJoin.setsimJoin(tok, tNum, tDen, globalRankBytes = globalRankBytes)
       .select("a_id", "b_id", "inter", "union_sz")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSet
@@ -146,26 +147,23 @@ class SetSimSpec extends AnyFunSuite {
       .filter(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"),
         explode(TextFunctions.shingles(col("text"), 3)).as("tok"))
-    def inMode[A](mode: Option[String])(body: => A): A = {
-      mode.foreach(m => spark.conf.set("spark.graft.setsim.rankPath", m))
-      try body finally spark.conf.unset("spark.graft.setsim.rankPath")
-    }
-    // both rank branches rank the same strict total order (tf, tok),
-    // so the JOIN OUTPUT must be identical — the mechanical guarantee
-    // that lets a deployment flip the conf without re-validating
-    val win = inMode(Some("window"))(run(tok, 3, 5))
-    val glob = inMode(Some("global"))(run(tok, 3, 5))
+    // the threshold forces a branch: every size exceeds -1 (global),
+    // none exceeds Long.MaxValue at this scale (window). Both rank the
+    // same strict total order (tf, tok), so the JOIN OUTPUT must be
+    // identical
+    val win = run(tok, 3, 5, globalRankBytes = Long.MaxValue)
+    val glob = run(tok, 3, 5, globalRankBytes = -1L)
     assert(win == glob, "window and global vocab-rank branches must agree")
-    // auto at harness input sizes resolves to the window branch (the
-    // measured-faster local constant); forced global must drop the
-    // single-task window sort from the plan
-    val autoPlan = inMode(None)(
-      SetSimJoin.setsimJoin(tok, 3, 5).queryExecution.optimizedPlan.toString)
+    // the default threshold at harness input sizes resolves to the
+    // window branch (the measured-faster local constant); forced
+    // global must drop the single-task window sort from the plan
+    val autoPlan = SetSimJoin.setsimJoin(tok, 3, 5)
+      .queryExecution.optimizedPlan.toString
     assert(autoPlan.contains("row_number"),
-      "auto mode at harness scale must keep the in-task window rank")
-    val globPlan = inMode(Some("global"))(
-      SetSimJoin.setsimJoin(tok, 3, 5).queryExecution.optimizedPlan.toString)
+      "the default threshold at harness scale must keep the in-task window rank")
+    val globPlan = SetSimJoin.setsimJoin(tok, 3, 5, globalRankBytes = -1L)
+      .queryExecution.optimizedPlan.toString
     assert(!globPlan.contains("row_number"),
-      "global mode must not contain the single-task window rank")
+      "the global branch must not contain the single-task window rank")
   }
 }

@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main (graft.Verify / graft.Bench / graft.PlanDump /
-# graft.JobProbe / graft.ScanAudit / graft.ScaleUp) on the
+# graft.JobProbe / graft.ScaleUp) on the
 # sbt runtime classpath WITHOUT sbt's per-invocation startup cost,
 # with the same JVM module-opens build.sbt gives forked runs (raw
 # `java -cp` otherwise dies in Kryo on java.nio access — pc01).
