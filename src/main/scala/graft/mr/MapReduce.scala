@@ -136,8 +136,10 @@ final case class GraftJobException(jobName: String, path: String,
   *
   * Directory files are few and small by contract (the reference holds
   * them all in one in-process map, mapreduce.go:187), so this is a
-  * hand-rolled broadcast join: collect the matching rows, broadcast
-  * the sorted stack table, resolve per row map-side. No shuffle.
+  * hand-rolled broadcast join: the matching rows reach the driver
+  * ([[resolvers]] finds them with Spark, [[MapReduceRunner.runOnDirectory]]
+  * in the tree's listing), [[stacks]] sorts them into the stack table the
+  * pass ships to its tasks, and each row resolves map-side. No shuffle.
   *
   * Intentional divergence: when SEVERAL files in one folder match
   * `directoryFiles`, ALL are kept as context, path-ordered within the
@@ -166,8 +168,7 @@ object ParentStacks {
     * for all of them: a path-only scan over the disjunction of every
     * job's filter, then one content fetch for the discovered paths — two
     * Spark jobs per run however many jobs use directory files, none when
-    * no job does. Each job's stack is the driver-side subset its own
-    * filter matches. */
+    * no job does. */
   def resolvers(files: DataFrame, dirFilters: Seq[Option[PathPredicate]])
       : IndexedSeq[String => Seq[Array[Byte]]] = {
     val preds = dirFilters.flatten.distinct
@@ -178,50 +179,73 @@ object ParentStacks {
     // compiles to an In filter a columnar source pushes down (row-group
     // skipping), so the content bytes of non-directory files are never
     // materialized.
-    val dirRows = (if (dirPaths.isEmpty)
-      Array.empty[(String, Int, String, Array[Byte])]
-    else files
-      .filter(col("path").isin(dirPaths.toIndexedSeq: _*))
-      .select(col("dir"), col("depth"), col("path"), col("content"))
-      .collect() // only the few matching directory files reach the driver
-      .map(r => (r.getAs[String]("dir"), r.getAs[Int]("depth"),
-        r.getAs[String]("path"), r.getAs[Array[Byte]]("content"))))
-      .sortBy(t => (t._2, t._3)) // root→leaf, stable within a folder
+    val dirRows = if (dirPaths.isEmpty) Seq.empty[(String, Array[Byte])]
+      else files
+        .filter(col("path").isin(dirPaths.toIndexedSeq: _*))
+        .select(col("path"), col("content"))
+        .collect() // only the few matching directory files reach the driver
+        .map(r => (r.getString(0), r.getAs[Array[Byte]](1))).toSeq
+    stacks(dirRows, dirFilters)
+  }
+
+  /** One resolver per entry of `dirFilters` over the discovered
+    * directory files `dirRows` (root-relative path, content): each job's
+    * stack is the subset its own filter matches, ordered root→leaf and
+    * by path within a folder. */
+  def stacks(dirRows: Seq[(String, Array[Byte])], dirFilters: Seq[Option[PathPredicate]])
+      : IndexedSeq[String => Seq[Array[Byte]]] = {
+    val sorted = dirRows.map { case (path, content) => (dirOf(path), path, content) }
+      .sortBy { case (_, path, _) => (path.count(_ == '/'), path) }
     dirFilters.toIndexedSeq.map {
       case None => (_: String) => Nil
       case Some(pred) =>
-        val mine = dirRows.filter(t => pred.matches(t._3))
+        val mine = sorted.filter(t => pred.matches(t._2))
         (path: String) => {
-          val fileDir = path.lastIndexOf('/') match {
-            case -1 => ""
-            case i  => path.substring(0, i)
-          }
+          val fileDir = dirOf(path)
           mine.collect {
-            case (dfDir, _, _, content)
+            case (dfDir, _, content)
                 if dfDir != fileDir &&
                   (dfDir.isEmpty || fileDir.startsWith(dfDir + "/")) =>
               content
-          }.toSeq
+          }
         }
     }
+  }
+
+  /** The folder of a root-relative path, '' at the root. */
+  private def dirOf(path: String): String = path.lastIndexOf('/') match {
+    case -1 => ""
+    case i  => path.substring(0, i)
   }
 }
 
 /** Multi-job executor (reference `MapReduce(filesystem, jobs)`,
   * mapreduce.go:12-221): N jobs over ONE traversal. The reference
-  * reads each file once and hands it to every job's pipeline; here the
-  * corpus is persisted (MEMORY_AND_DISK), directory files are found
-  * once for all jobs, and then ONE Spark job folds every job: each task
-  * reads its partition's `(path, content)` rows once, feeds each row to
-  * every job's filter and mapper, and returns the K partials, which the
-  * driver merges job by job before calling each `finish`.
+  * reads each file once and hands it to every job's pipeline, and finds
+  * directory files during that same traversal (mapreduce.go:152-204).
+  * Here directory files are found once for all jobs, and then ONE Spark
+  * job folds every job: each task reads its partition's `(path, content)`
+  * rows once, feeds each row to every job's filter and mapper, and
+  * returns the K partials, which the driver merges job by job before
+  * calling each `finish`.
+  *
+  * Discovery has two sources:
+  *  - [[runOnDirectory]] filters the listing [[Corpus.read]] already
+  *    holds with the jobs' directory-file globs and reads the few
+  *    matches on the driver through Hadoop's `FileSystem`, so the pass
+  *    is the only Spark job and nothing is persisted;
+  *  - [[run]] takes any corpus frame (a table has no tree listing) and
+  *    discovers with Spark: a path-only scan and a content fetch. It
+  *    persists the corpus (MEMORY_AND_DISK) for the run only when some
+  *    job declares `directoryFiles`, so those two jobs and the pass
+  *    share one read; a corpus the caller cached stays cached.
   *
   * A corpus with fewer partitions P than cores would leave cores idle,
-  * so the pass reads the persisted corpus g = min(K, ⌈cores / P⌉) times
-  * within the same stage, copy i folding only the jobs whose index is
-  * i (mod g): tasks = P × g. Each task holds the fold states of its
-  * jobs at once, and a `sortKey` job buffers its partition's mapped
-  * records in task memory.
+  * so the pass reads the corpus g = min(K, ⌈cores / P⌉) times within the
+  * same stage, copy i folding only the jobs whose index is i (mod g):
+  * tasks = P × g. Each task holds the fold states of its jobs at once,
+  * and a `sortKey` job buffers its partition's mapped records in task
+  * memory.
   *
   * First error cancels everything (reference mapreduce.go:215-220): a
   * failed task fails the pass, whose job group interrupts the tasks
@@ -237,36 +261,63 @@ object MapReduceRunner {
       : Map[String, Any] = {
     if (jobs.isEmpty) return Map.empty
     val js = jobs.toIndexedSeq
-    // a corpus the caller cached stays cached: only what the run persists
-    // is unpersisted
-    val owned = corpus.storageLevel == StorageLevel.NONE
+    // without discovery the pass is the only read, so a cache would only
+    // cost its fill; a corpus the caller cached stays cached: only what
+    // the run persists is unpersisted
+    val owned = js.exists(_.directoryFiles.isDefined) &&
+      corpus.storageLevel == StorageLevel.NONE
     val cached = if (owned) corpus.persist(StorageLevel.MEMORY_AND_DISK) else corpus
-    try {
-      val parents = ParentStacks.resolvers(cached, js.map(_.directoryFiles))
-      val rows = cached.filter(col("path").isNotNull)
-        .select(col("path"), col("content")).queryExecution.toRdd
-      val sc = spark.sparkContext
-      val nParts = rows.getNumPartitions.max(1)
-      val g = js.size.min((sc.defaultParallelism + nParts - 1) / nParts)
-      val copies = (0 until g).map { c =>
-        val mine = js.indices.filter(_ % g == c)
-        rows.mapPartitions(it => Iterator.single(foldPartition(it, js, mine, parents)))
+    try pass(spark, cached, js, ParentStacks.resolvers(cached, js.map(_.directoryFiles)))
+    finally if (owned) { cached.unpersist(); () }
+  }
+
+  /** [[run]] over the tree at `root`, with directory files found in the
+    * read's own listing: one Spark job, no persist. */
+  def runOnDirectory(spark: SparkSession, root: String, jobs: Seq[CorpusJob])
+      : Map[String, Any] = {
+    if (jobs.isEmpty) return Map.empty
+    val js = jobs.toIndexedSeq
+    val corpus = Corpus.read(spark, root)
+    val preds = js.flatMap(_.directoryFiles).distinct
+    val dirRows = if (preds.isEmpty) Nil else {
+      val any = MultiGlob(preds)
+      val conf = spark.sessionState.newHadoopConf()
+      Corpus.listing(corpus, root).collect {
+        case (path, file) if any.matches(path) =>
+          val in = file.getFileSystem(conf).open(file)
+          try (path, in.readAllBytes()) finally in.close()
       }
-      val partials = if (g == 1) copies.head else sc.union(copies)
-      val add = (acc: Array[Any], part: Array[(Int, Any)]) => {
-        part.foreach { case (i, p) => acc(i) = js(i).mergeAny(acc(i), p) }
-        acc
-      }
-      val zeros = js.map(j => j.zero: Any).toArray
-      val saved = GroupProps.map(k => k -> sc.getLocalProperty(k))
-      sc.setJobGroup(s"graft-mr-${java.util.UUID.randomUUID()}",
-        s"graft mr job pass[${js.size}]", interruptOnCancel = true)
-      val result =
-        try partials.collect().foldLeft(zeros)(add)
-        finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
-      js.indices.foreach(i => js(i).finishAny(result(i)))
-      js.map(_.name).zip(result).toMap
-    } finally if (owned) { cached.unpersist(); () }
+    }
+    pass(spark, corpus, js, ParentStacks.stacks(dirRows, js.map(_.directoryFiles)))
+  }
+
+  /** The one Spark job: every job folded over `corpus`, partials merged
+    * and finished on the driver. */
+  private def pass(spark: SparkSession, corpus: DataFrame, js: IndexedSeq[CorpusJob],
+      parents: IndexedSeq[String => Seq[Array[Byte]]]): Map[String, Any] = {
+    val rows = corpus.filter(col("path").isNotNull)
+      .select(col("path"), col("content")).queryExecution.toRdd
+    val sc = spark.sparkContext
+    val nParts = rows.getNumPartitions.max(1)
+    val g = js.size.min((sc.defaultParallelism + nParts - 1) / nParts)
+    val copies = (0 until g).map { c =>
+      val mine = js.indices.filter(_ % g == c)
+      rows.mapPartitions(it => Iterator.single(foldPartition(it, js, mine, parents)))
+    }
+    val partials = if (g == 1) copies.head else sc.union(copies)
+    val add = (acc: Array[Any], part: Array[(Int, Any)]) => {
+      part.foreach { case (i, p) => acc(i) = js(i).mergeAny(acc(i), p) }
+      acc
+    }
+    val zeros = js.map(j => j.zero: Any).toArray
+    val saved = GroupProps.map(k => k -> sc.getLocalProperty(k))
+    sc.setJobGroup(s"graft-mr-${java.util.UUID.randomUUID()}",
+      s"graft mr job pass[${js.size}]", interruptOnCancel = true)
+    val result =
+      try partials.collect().foldLeft(zeros)(add)
+      finally saved.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    js.indices.foreach(i => js(i).finishAny(result(i)))
+    js.map(_.name).zip(result).toMap
   }
 
   /** One task: each row of the partition once, through every job in
@@ -284,8 +335,4 @@ object MapReduceRunner {
     }
     folders.map { case (i, _, _, f) => (i, f.result(): Any) }
   }
-
-  def runOnDirectory(spark: SparkSession, root: String, jobs: Seq[CorpusJob])
-      : Map[String, Any] =
-    run(spark, Corpus.read(spark, root), jobs)
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -19,6 +20,15 @@ import org.apache.spark.sql.types._
   * `pathGlobFilter` when it is a simple one-segment suffix pattern, and
   * always re-checked post-scan, mirroring the reference's
   * CouldMatch-prune + Match-confirm split (work.go:19-37).
+  *
+  * Split sizing: Spark packs a file scan by charging every file
+  * `spark.sql.files.openCostInBytes` (4 MB), so a tree of ~300-byte
+  * files reads as one partition per ~32 files and every pass over it
+  * runs that many tasks. When the listed bytes are below
+  * `defaultParallelism × spark.sql.files.maxPartitionBytes` the scan is
+  * coalesced to `defaultParallelism` partitions (one per core); a larger
+  * tree keeps Spark's packing. The bytes come from the listing the read
+  * already holds, so sizing launches no job.
   *
   * Known divergence from the reference's raw directory walk: Hadoop's
   * listing applies its hidden-file filter — basenames starting with
@@ -57,7 +67,6 @@ object Corpus {
     */
   def readFiltered(spark: SparkSession, root: String,
       predicate: Option[PathPredicate]): DataFrame = {
-    val rootUri = "file:" + new java.io.File(root).getAbsolutePath
     val prefix = predicate.map(_.staticPrefix).getOrElse(Nil)
     val loadRoot = (root +: prefix).mkString("/")
     // a restricted root may simply not exist — that's "no matches",
@@ -88,8 +97,8 @@ object Corpus {
       case _ => reader
     }
     val base = withDerivedColumns(
-      pushed.load(loadRoot).select(
-        regexp_replace(col("path"), java.util.regex.Pattern.quote(rootUri + "/"), "")
+      sized(pushed.load(loadRoot)).select(
+        regexp_replace(col("path"), java.util.regex.Pattern.quote(rootUri(root) + "/"), "")
           .as("path"),
         col("length"), col("content")))
     predicate match {
@@ -102,6 +111,35 @@ object Corpus {
       case None => base
     }
   }
+
+  /** `scan` coalesced to one partition per core when its listed bytes
+    * fit in `defaultParallelism` splits of `maxPartitionBytes`, else
+    * `scan` itself. */
+  private def sized(scan: DataFrame): DataFrame = {
+    val spark = scan.sparkSession
+    val cores = spark.sparkContext.defaultParallelism
+    val bytes = scan.queryExecution.analyzed.stats.sizeInBytes
+    if (bytes < BigInt(cores) * spark.sessionState.conf.filesMaxPartitionBytes)
+      scan.coalesce(cores)
+    else scan
+  }
+
+  /** The files of a corpus [[read]] returned for `root`, from the listing
+    * the read already holds (no job, no second listing): each file's
+    * root-relative path, as the `path` column spells it, with its Hadoop
+    * path. */
+  def listing(corpus: DataFrame, root: String): Seq[(String, Path)] = {
+    val prefix = rootUri(root) + "/"
+    // inputFiles are URI strings (a space reads `%20`); the `path` column
+    // holds the decoded Hadoop path string, which `Path.toString` gives
+    corpus.inputFiles.toSeq.map { f =>
+      val p = new Path(new java.net.URI(f))
+      (p.toString.stripPrefix(prefix), p)
+    }
+  }
+
+  private def rootUri(root: String): String =
+    "file:" + new java.io.File(root).getAbsolutePath
 
   /** In-memory corpus (the reference's StaticVirtualFileSystem,
     * virtualFileSystem.go:9-42) — for tests and small synthetic trees. */

@@ -10,9 +10,9 @@ import org.apache.spark.sql.types.{DataType, StringType}
   *
   * Where the reference runs one Go closure per file and shares the
   * parsed value across jobs, here the parse is a Catalyst expression
-  * over the shared (persisted) corpus: `MapReduceRunner` materializes
-  * the loaded frame once and its one pass hands each row to every job — same
-  * parse-once-share-many economics, but codegen'd and spillable.
+  * over the corpus frame, and `MapReduceRunner`'s one pass hands each
+  * row to every job — same parse-once-share-many economics, but
+  * codegen'd and spillable.
   */
 object Loaders {
 

@@ -2,12 +2,34 @@ package graft
 
 import graft.mr.{MapReduceJob, MapReduceRunner}
 import graft.sources.{Corpus, MultiGlob, PathGlob}
+import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 object TestSpark {
   // fixed width: partition-count and plan assertions are written for 4 cores
   lazy val spark: SparkSession = Harness.session(cpus = 4)
+}
+
+/** Small file trees on disk for the corpus and runner specs. */
+object TestTree {
+  /** Runs `body` on the absolute root of a new temporary tree holding
+    * `files` (root-relative path → content), then deletes the tree. */
+  def withTree[A](files: Seq[(String, Array[Byte])])(body: String => A): A = {
+    val root = java.nio.file.Files.createTempDirectory("graft-tree").toFile
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    try {
+      files.foreach { case (rel, content) =>
+        val f = new java.io.File(root, rel)
+        f.getParentFile.mkdirs()
+        java.nio.file.Files.write(f.toPath, content)
+      }
+      body(root.getAbsolutePath)
+    } finally rm(root)
+  }
 }
 
 /** Ports of the reference's end-to-end semantic tests
@@ -321,19 +343,20 @@ class MapReduceSpec extends AnyFunSuite {
     assert(res == Map("max" -> 399, "min" -> 0, "ascending" -> (true, -1)))
   }
 
-  /** Spark jobs `body` launches from this thread: a listener counts the
-    * jobs that carry this call's scope property, then waits until every
-    * counted job has ended and the counts hold still. */
-  private def jobsLaunched(body: => Any): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+  /** The start events of the Spark jobs `body` launches from this
+    * thread: a listener records the jobs that carry this call's scope
+    * property, then waits until every recorded job has ended and the
+    * records hold still. */
+  private def jobsStarted(body: => Any): Seq[SparkListenerJobStart] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
     val sc = spark.sparkContext
     val scope = java.util.UUID.randomUUID().toString
-    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, SparkListenerJobStart]()
     val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("graft.test.scope") == scope)) {
-          started.add(e.jobId); ()
+          started.put(e.jobId, e); ()
         }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
     }
@@ -346,14 +369,20 @@ class MapReduceSpec extends AnyFunSuite {
       while (stable < 2 && waited < 10000) {
         Thread.sleep(100); waited += 100
         val n = started.size
-        if (n == last && ended.containsAll(started)) stable += 1 else { stable = 0; last = n }
+        if (n == last && ended.containsAll(started.keySet)) stable += 1
+        else { stable = 0; last = n }
       }
-      started.size
+      import scala.jdk.CollectionConverters._
+      started.values.asScala.toSeq
     } finally {
       sc.setLocalProperty("graft.test.scope", null)
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Whether any stage of `jobs` reads a persisted RDD. */
+  private def persists(jobs: Seq[SparkListenerJobStart]): Boolean =
+    jobs.exists(_.stageInfos.exists(_.rddInfos.exists(_.storageLevel != StorageLevel.NONE)))
 
   test("one pass: 6 jobs launch discovery, fetch and the pass; with no directory files, the pass alone") {
     val corpus = Corpus.fromRecords(spark, virtualTree)
@@ -367,8 +396,68 @@ class MapReduceSpec extends AnyFunSuite {
         mapper = (_, parents, _) => Iterator.single(parents.size),
         zero = 0, fold = _ + _, merge = _ + _)
     }
-    assert(jobsLaunched(MapReduceRunner.run(spark, corpus, jobs(withDirs = true))) == 3)
-    assert(jobsLaunched(MapReduceRunner.run(spark, corpus, jobs(withDirs = false))) == 1)
+    assert(jobsStarted(MapReduceRunner.run(spark, corpus, jobs(withDirs = true))).size == 3)
+    assert(jobsStarted(MapReduceRunner.run(spark, corpus, jobs(withDirs = false))).size == 1)
+    // on a tree, discovery reads the listing: the pass is the only job,
+    // and nothing is persisted
+    TestTree.withTree(virtualTree) { root =>
+      Seq(true, false).foreach { withDirs =>
+        val onTree = jobsStarted(MapReduceRunner.runOnDirectory(spark, root, jobs(withDirs)))
+        assert(onTree.size == 1, s"withDirs=$withDirs")
+        assert(!persists(onTree), s"withDirs=$withDirs")
+      }
+    }
+  }
+
+  test("a run with no directory-file job persists nothing") {
+    val corpus = Corpus.fromRecords(spark, virtualTree)
+    val job = MapReduceJob[Int, Int](
+      name = "files", filter = PathGlob("**/*.txt"),
+      mapper = (_, _, _) => Iterator.single(1),
+      zero = 0, fold = _ + _, merge = _ + _)
+    val launched = jobsStarted(
+      assert(MapReduceRunner.run(spark, corpus, Seq(job)) == Map("files" -> 4)))
+    assert(launched.size == 1)
+    assert(!persists(launched), "the run persisted a corpus only the pass reads")
+  }
+
+  /** Jobs whose results record every mapped file with its decoded
+    * parents, under three directory-file globs, plus one job without
+    * directory files: equal results mean the same files were mapped with
+    * the same stacks. */
+  private def stackJobs(ctx: String) = Seq("**", "**/*.json", ctx).zipWithIndex.map {
+    case (dirs, i) => MapReduceJob[(String, Seq[String]), Map[String, Seq[String]]](
+      name = s"stacks$i",
+      filter = PathGlob("**"),
+      directoryFiles = Some(PathGlob(dirs)),
+      mapper = (path, parents, _) =>
+        Iterator.single(path -> parents.map(new String(_, "UTF-8"))),
+      zero = Map.empty, fold = _ + _, merge = _ ++ _)
+  } :+ MapReduceJob[Long, Long](
+    name = "bytes", filter = PathGlob("**"),
+    mapper = (_, _, content) => Iterator.single(content.length.toLong),
+    zero = 0L, fold = _ + _, merge = _ + _)
+
+  test("runOnDirectory equals run over Corpus.read, names with a space and non-ASCII included") {
+    Seq(s"$fixtures/a", s"$fixtures/json", s"$fixtures/example", fixtures).foreach { root =>
+      val jobs = stackJobs("**/parent.json")
+      assert(MapReduceRunner.runOnDirectory(spark, root, jobs) ==
+        MapReduceRunner.run(spark, Corpus.read(spark, root), jobs), root)
+    }
+    val ctx = "ctx \u00e9.txt"
+    TestTree.withTree(Seq(
+      ctx -> "root".getBytes,
+      s"sub d\u00efr/$ctx" -> "sub".getBytes,
+      "sub d\u00efr/d\u00e4t\u00e4 1.txt" -> "d1".getBytes,
+      "sub d\u00efr/deep/d\u00e4t\u00e4 2.json" -> "d2".getBytes)) { root =>
+      val jobs = stackJobs(s"**/$ctx")
+      val listed = MapReduceRunner.runOnDirectory(spark, root, jobs)
+      assert(listed == MapReduceRunner.run(spark, Corpus.read(spark, root), jobs))
+      // the listing found both directory files: the deepest file sees
+      // them root→leaf
+      assert(listed("stacks2").asInstanceOf[Map[String, Seq[String]]].values.toSet
+        .contains(Seq("root", "sub")))
+    }
   }
 
   test("a corpus the caller cached is still cached after a run") {

@@ -143,6 +143,7 @@ class RankSpec extends AnyFunSuite {
               df, "g", "v", pcts, buckets = 8, refineLevels = levels)
             .collect().map(r => r.getString(0) ->
               pcts.indices.map(i => r.getDouble(i + 1)).toSeq).toMap
+          Harness.release(spark)
           assert(got.keySet == expected.keySet, s"levels=$levels")
           expected.foreach { case (g, exp) =>
             assert(got(g) == exp, s"levels=$levels group=$g")

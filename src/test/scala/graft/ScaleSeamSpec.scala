@@ -72,4 +72,50 @@ class ScaleSeamSpec extends AnyFunSuite {
     }
     assert(got == expected)
   }
+
+  /** 20 files of 100 bytes in three folders. */
+  private val smallTree =
+    (0 until 20).map(i => s"d${i % 3}/f$i.txt" -> Array.fill[Byte](100)('x'.toByte))
+
+  /** Spark's own packing of the tree at `root`, with no sizing. */
+  private def packed(s: org.apache.spark.sql.SparkSession, root: String): Int =
+    s.read.format("binaryFile").option("recursiveFileLookup", "true").load(root)
+      .queryExecution.toRdd.getNumPartitions
+
+  test("a small corpus tree reads as min(packed partitions, cores)") {
+    val s = spark.newSession()
+    // a 64 MB open cost packs two files per partition, so Spark's packing
+    // alone gives more partitions than cores
+    s.conf.set("spark.sql.files.openCostInBytes", (64L << 20).toString)
+    TestTree.withTree(smallTree) { root =>
+      val cores = s.sparkContext.defaultParallelism
+      val p = packed(s, root)
+      assert(p > cores)
+      assert(sources.Corpus.read(s, root).queryExecution.toRdd.getNumPartitions ==
+        math.min(p, cores))
+    }
+  }
+
+  test("a corpus tree above cores x maxPartitionBytes keeps Spark's packing") {
+    val s = spark.newSession()
+    // 2,000 bytes of files against a 4 x 100-byte threshold
+    s.conf.set("spark.sql.files.maxPartitionBytes", "100")
+    TestTree.withTree(smallTree) { root =>
+      val corpus = sources.Corpus.read(s, root)
+      val plan = corpus.queryExecution.executedPlan.toString
+      assert(!plan.contains("Coalesce"), plan)
+      assert(corpus.queryExecution.toRdd.getNumPartitions == packed(s, root))
+    }
+  }
+
+  test("a path-only projection of a sized corpus reads no content") {
+    TestTree.withTree(smallTree) { root =>
+      val p = sources.Corpus.read(spark, root).select("path")
+        .queryExecution.executedPlan.toString
+      assert(p.contains("Coalesce"), p)
+      val readSchema = "ReadSchema: [^\\n]*".r.findFirstIn(p).getOrElse("")
+      assert(readSchema.contains("path"), p)
+      assert(!readSchema.contains("content"), readSchema)
+    }
+  }
 }
