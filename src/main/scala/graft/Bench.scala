@@ -53,9 +53,10 @@ object Bench {
     val phases = results.flatMap { case (k, v, _) =>
       if (v < 0) None
       else {
-        // memoized one-time builders (index/MV/base-contraction
-        // caches) record an explicit "setup" phase: it ran during
-        // warm-up only, so the timed elapsed excludes it. A query may
+        // one-time fixtures ([[Fixtures]]: indexes, MVs, base labels,
+        // staged tables) record a "setup" phase under the query that
+        // first built them for this corpus dir: it ran during warm-up
+        // only, so the timed elapsed excludes it. A query may
         // ALSO record a per-timed-run "write" phase — both keys are
         // emitted then (folding write into "read" because a setup key
         // exists would silently mis-attribute the artifact).

@@ -25,6 +25,12 @@ final case class GraftQuery(
   val build: (SparkSession, String) => DataFrame =
     (s, d) => body(sizing.session(s, d), d)
 }
+object GraftQuery {
+  /** The registry modules' constructor: an oracle-checked query. */
+  def q(name: String, doc: String, sql: String, sizing: Sizing = Sizing.Session)(
+      build: (SparkSession, String) => DataFrame): GraftQuery =
+    GraftQuery(name, build, Some(sql), doc, sizing)
+}
 
 /** The shuffle width a query's span runs at: the session's own, or one
   * derived from a single input table's size ([[Sessions.sizedFor]]) for
@@ -305,10 +311,10 @@ object Sessions {
     if (parts >= cur) parent else narrowed(parent, s"$table@$dir", parts, adaptive)
   }
 
-  /** ONE child per (parent, key, adaptive), memoized: builders that
-    * memoize per-session state (index dirs, collected fixtures — all
-    * keyed by session) need the SAME session across a bench's timed
-    * runs or every run would rebuild its setup state. The parent's
+  /** ONE child per (parent, key, adaptive), memoized, so a bench's
+    * timed runs of a sized query share one session instead of making a
+    * new one per build (one-time state lives in [[Fixtures]], keyed by
+    * corpus dir, so it does not depend on this memo). The parent's
     * runtime confs are RE-COPIED on every access (then the width
     * override re-applied): a conf set on the parent after the child
     * was created — a guard key, a probe override — must still reach
@@ -371,6 +377,38 @@ object Phases {
   }
   def get(query: String, phase: String): Option[Double] =
     Option(t.get(s"$query.$phase"))
+}
+
+/** One-time per-corpus state: persisted indexes, MVs, staged tables and
+  * corpus constants collected on the driver. Each is built once per
+  * (SparkContext, corpus dir, name), never per SparkSession: a fixture
+  * is files under [[Scratch]], data read from the dir, or tables in the
+  * catalog the whole context shares, so every session of the context
+  * gets the same answer and a fresh `newSession()` rebuilds nothing.
+  *
+  * The outermost build's wall time is recorded as the `trigger` query's
+  * "setup" [[Phases]] value (a nested build is part of the outer one's
+  * time). Builds run under one reentrant lock, so a build may ask for
+  * another fixture and concurrent callers of one key build it once; a
+  * build that throws is not memoized. */
+object Fixtures {
+  private val built = scala.collection.mutable.Map.empty[(String, String, String), Any]
+  private var depth = 0 // builds in progress on the lock holder's stack
+
+  def once[T](s: SparkSession, dir: String, name: String, trigger: String)(
+      build: => T): T = built.synchronized {
+    val key = (s.sparkContext.applicationId, dir, name)
+    built.get(key) match {
+      case Some(v) => v.asInstanceOf[T]
+      case None =>
+        depth += 1
+        val v =
+          try if (depth == 1) Phases.timed(trigger, "setup")(build) else build
+          finally depth -= 1
+        built(key) = v
+        v
+    }
+  }
 }
 
 /** Single registry the driver contract ([[SparkEntry]]) is generated

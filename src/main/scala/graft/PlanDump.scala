@@ -117,7 +117,7 @@ object PlanDump {
     "rr02_mmr_rerank" ->
       "MMR diversity re-rank: the pool build is the only corpus-side work (broadcast-queries scan + k-bounded TopK); the 5 greedy rounds join query-count-sized frames (pool <=20/query, selected <=round/query) with the per-round argmax through the TopK operator - selection-step iteration, not data iteration.",
     "hn02_graph_serving" ->
-      "Graph-ANN serving: the NSW index (edges repartitioned by src, hubs with embeddings, id->vector fetch table) persists ONCE per session/dir (bench reports it as setup_write) and the timed plan is pure search — hub entry scan x broadcast(queries), HnH beam rounds whose every join broadcasts only beam-bounded candidate lists against storage-side fetch joins. The serving fleet shape: index offline, answer online.",
+      "Graph-ANN serving: the NSW index (edges repartitioned by src, hubs with embeddings, id->vector fetch table) persists ONCE per corpus dir (bench reports it as setup_write) and the timed plan is pure search — hub entry scan x broadcast(queries), HnH beam rounds whose every join broadcasts only beam-bounded candidate lists against storage-side fetch joins. The serving fleet shape: index offline, answer online.",
     "hn03_hnsw_ann" ->
       "Multi-layer HNSW serving: the ladder's edges persist partitioned BY LAYER, so every descent round's scan is one layer partition (partition pruning on `layer`); each of the log₄(cells) descent rounds joins that slice against a BROADCAST front of ≤ NQ·E candidates and scores via storage-side fetch joins (vecs looked up by id, the corpus is never rescanned); per-round frames are LogicalRDD-truncated so round-N plans stay round-sized (skipped when the ladder is too shallow to blow up). Every SHUFFLED frame here is query-count-bounded, so the search runs on one memoized child session at width 1 with AQE off (shared with hn01/hn02) — at the session default each of ~18 micro-stages fanned into near-empty tasks with an AQE driver barrier apiece, and AQE's parallelism-first coalescer never shrinks below core count (round-14, width 4: 4.9 → 2.3 s min-of-5 at sf0.1; r17, width 1 and AQE off: 2.69 → 2.09 s). Search cost follows ladder depth, not corpus size — measured 6.2 → 13.7 s across a 1000× corpus growth (BENCH_1000X_hn03_r12.json).",
     "hn04_hnsw_upsert" ->

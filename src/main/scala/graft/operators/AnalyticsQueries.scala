@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Det, GraftQuery, Tables}
+import graft.GraftQuery.q
 import graft.Pin.PinOps
 import graft.Det._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -19,10 +20,6 @@ import org.apache.spark.sql.types._
   * join; none materializes anything driver-side.
   */
 object AnalyticsQueries {
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Calendar densification: daily revenue over a fixed quarter with
     * zero-filled rows for days that have no orders. The generated

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.GraftQuery.q
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -114,10 +115,6 @@ object AsofJoin {
         when(unix_micros(col(leftTime).cast(TimestampType)) -
           unix_micros(col(s"__asof.$rightTime").cast(TimestampType)) <= toleranceMicros,
           col("__asof")))
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Each event joined to the user's latest order as of the event time
     * (user_id ≡ customer key in the synthetic corpus). */

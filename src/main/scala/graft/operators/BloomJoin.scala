@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.GraftQuery.q
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, SparkSession}
@@ -96,10 +97,6 @@ object BloomJoin {
       .filter(mightContain(col("__bits"), col(probeKey), mBits, K))
       .drop("__bits")
   }
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Revenue of lineitems belonging to urgent orders: Bloom-pruned
     * probe side, then the exact semi-join discards false positives.

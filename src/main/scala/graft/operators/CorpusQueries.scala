@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.GraftQuery.q
 import graft.Pin.PinOps
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -24,10 +25,6 @@ import org.apache.spark.sql.types._
   * are broadcast (an eval benchmark is KBs even when the corpus is TBs).
   */
 object CorpusQueries {
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Top-3 TF-IDF terms per document (docs 0-29). `df` is computed over
     * the FULL corpus, `tf` only for the reported docs — the usual

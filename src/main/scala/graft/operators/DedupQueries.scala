@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Sizing, Tables}
+import graft.GraftQuery.q
 import graft.Pin.PinOps
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -21,11 +22,6 @@ import org.apache.spark.sql.types._
   * in the DuckDB oracle.
   */
 object DedupQueries {
-  private def q(name: String, doc: String, sql: String,
-      sizing: Sizing = Sizing.Session)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc, sizing)
-
   /** dd08/dd20's loop spans are bounded by the doc-bucket incidence, so
     * their width derives from `documents`; AQE off because its
     * per-stage driver barrier is pure latency at the sized width (r17

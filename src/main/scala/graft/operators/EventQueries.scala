@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Det, GraftQuery, Tables}
+import graft.GraftQuery.q
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,10 +17,6 @@ import org.apache.spark.sql.types._
   */
 object EventQueries {
   import Det._
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Tumbling 1-hour windows per event type — the batch face of the
     * streaming `window(ts, "1 hour")` aggregation. */

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Det, GraftQuery, Tables}
+import graft.GraftQuery.q
 import graft.Det._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -33,10 +34,6 @@ import org.apache.spark.sql.functions._
   * key.
   */
 object ManifestSkipping {
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Range-clustered write → manifest build → manifest-pruned read.
     * Returns (prunedFrame, filesSelected, filesTotal) so the spec can

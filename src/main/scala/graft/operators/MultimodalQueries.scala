@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.GraftQuery.q
 import graft.Pin.PinOps
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -101,10 +102,6 @@ object MultimodalQueries {
       }
     }
   }
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Metadata projection over the binary column — schema plumbing. */
   val mm01BinaryMeta: GraftQuery = q(

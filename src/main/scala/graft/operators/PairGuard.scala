@@ -31,7 +31,7 @@ object PairGuard {
   val ConfKey = "spark.graft.pairGuard.maxPairs"
   val Default = 20000000L
 
-  /** PASSED verdicts, keyed by (session, caller, input-plan
+  /** PASSED verdicts, keyed by (context, caller, input-plan
     * digest, budget): the bound is a pure function of the input
     * frame, so a frame that passed once cannot fail later — re-running
     * the eager aggregate on every DataFrame build made the guard the
@@ -49,13 +49,12 @@ object PairGuard {
     * under it, so a caller scanning a mutable scratch dir whose
     * contents change under an unchanged path must not rely on the
     * memo — no registry caller does; every guarded input is a fixture
-    * of the static testdata corpus. Keying by the session object
-    * retains sessions for the JVM lifetime — the same bounded
-    * retention as every memoized index/MV builder in this engine
-    * (h3Dirs et al.), and sessions here number in the tens per
-    * process. */
+    * of the static testdata corpus. The context's application id, not
+    * the session, scopes the key: a verdict holds for every session of
+    * the context (plan digests name RDDs by their context-wide id), and
+    * a session key would keep every session reachable. */
   private val passed =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(org.apache.spark.sql.SparkSession, String, String, Long)]()
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, String, Long)]()
 
   /** 128-bit hex digest of the canonicalized analyzed plan PLUS the
     * plan's file-source root paths — the collision-proof replacement
@@ -103,7 +102,8 @@ object PairGuard {
       alternative: String): Unit = {
     val budget = keyed.sparkSession.conf.get(ConfKey, Default.toString).toLong
     if (budget <= 0) return
-    val memoKey = (keyed.sparkSession, query, planDigest(keyed), budget)
+    val memoKey = (keyed.sparkSession.sparkContext.applicationId, query,
+      planDigest(keyed), budget)
     if (passed.contains(memoKey)) return
     val est = keyed.groupBy(keys: _*).agg(count(lit(1)).as("c"))
       .agg(coalesce(sum(col("c") * (col("c") - 1)), lit(0L)).as("p2"))
@@ -131,7 +131,7 @@ object PairGuard {
     // same pass-memo as check(): both input plans key the verdict —
     // the two digests concatenate, so distinct (left, right) pairs
     // can never collide
-    val memoKey = (left.sparkSession, query,
+    val memoKey = (left.sparkSession.sparkContext.applicationId, query,
       planDigest(left) + planDigest(right), budget)
     if (passed.contains(memoKey)) return
     val est = BigInt(left.count()) * BigInt(right.count())

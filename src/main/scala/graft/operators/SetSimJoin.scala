@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.GraftQuery.q
 import graft.Pin.PinOps
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -38,10 +39,6 @@ import org.apache.spark.sql.types._
   * pairs are engine-identical.
   */
 object SetSimJoin {
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** τ = 3/5: pairs with shingle-Jaccard ≥ 0.6, exact via prefix
     * filtering. Docs under 3 words carry no 3-shingles and drop out

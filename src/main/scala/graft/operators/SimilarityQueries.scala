@@ -33,8 +33,7 @@ object SimilarityQueries {
   private def q(name: String, doc: String, sql: String,
       sizing: Sizing = Sizing.Session)(
       build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, (s, d) => { VectorExpressions.register(s); build(s, d) },
-      Some(sql), doc, sizing)
+    GraftQuery.q(name, doc, sql, sizing)((s, d) => { VectorExpressions.register(s); build(s, d) })
 
   /** Width for the embeddings-bounded sm/kn/rp/rr queries — the
     * IvfQueries serving-family rule. r16 quiet probe at width 1

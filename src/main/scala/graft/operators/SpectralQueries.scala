@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Sizing, Tables}
+import graft.GraftQuery.q
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -58,11 +59,6 @@ object SpectralQueries {
   private val SHIFT = 65536L
   private val WSCALE = 1048576L // 2^20 — loading resolution ~1e-6
   private val RSCALE = 16L // Rayleigh vector bound: terms ≤ 16²·|G|·Dim²
-
-  private def q(name: String, doc: String, sql: String,
-      sizing: Sizing = Sizing.Session)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc, sizing)
 
   /** int64-quantized embedding rows (the ivf03 quantizer). */
   private def quantized(s: SparkSession, d: String): DataFrame =

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.GraftQuery.q
 import graft.Pin.PinOps
 import graft.functions.TextFunctions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -16,10 +17,6 @@ import org.apache.spark.sql.types._
   * so each scales linearly with zero extra shuffles.
   */
 object TextQueries {
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Token/char statistics per language. Whitespace tokenization; all
     * integer arithmetic until one final division. */

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Tables}
+import graft.GraftQuery.q
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -30,10 +31,6 @@ object TypedQueries {
     def bufferEncoder = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
     def outputEncoder = Encoders.scalaDouble
   }
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Aggregator registered as a UDAF and used per group. */
   val ua01TypedAggregator: GraftQuery = q(

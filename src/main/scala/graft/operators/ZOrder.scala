@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{Det, GraftQuery, Tables}
+import graft.GraftQuery.q
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,10 +40,6 @@ object ZOrder {
     (0 until BITS).map { i =>
       s"((($xe) >> $i) & 1) * ${1L << (2 * i)} + ((($ye) >> $i) & 1) * ${1L << (2 * i + 1)}"
     }.mkString(" + ")
-
-  private def q(name: String, doc: String, sql: String)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery(name, build, Some(sql), doc)
 
   /** Write orders z-ordered on (custkey mod 256, orderkey mod 256),
     * read back through a 2-D box predicate, and aggregate — plus a

@@ -26,6 +26,23 @@ class HarnessSpec extends AnyFunSuite {
     assert(found == graftOptions.keySet)
   }
 
+  test("no map or cache in the engine is keyed on a SparkSession outside Sessions.children") {
+    // a val bound to a Map/Set/Cache whose key type (the first type
+    // argument, or the whole tuple) names SparkSession: such a memo
+    // keeps every session it has seen reachable for the JVM's life
+    val memo = ("""(?:val|var)\s+(\w+)\s*[:=]\s*(?:new\s+)?[\w.]*(?:Map|Set|Cache)\b""" +
+      """[\w.\s]*\[\s*(\([^)]*\)|[^,\]]*)""").r
+    val sources = Files.walk(Paths.get("src/main/scala"))
+    val found =
+      try sources.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+        .flatMap((f: Path) => memo.findAllMatchIn(Files.readString(f))
+          .filter(_.group(2).contains("SparkSession"))
+          .map(m => s"${f.getFileName}:${m.group(1)}"))
+        .toSet
+      finally sources.close()
+    assert(found == Set("Core.scala:children"))
+  }
+
   test("the harness session carries every bench conf and injects the graft extensions") {
     // a fresh session: defaults only, nothing another spec set or registered
     val s = TestSpark.spark.newSession()
