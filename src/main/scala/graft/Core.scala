@@ -307,9 +307,16 @@ object Sessions {
     val cur = scala.util.Try(
       parent.conf.get("spark.sql.shuffle.partitions").toLong)
       .getOrElse(parent.sparkContext.defaultParallelism.toLong)
-    val parts = math.min(cur, Tables.bytes(parent, dir, table) / 1000000L + 1L)
+    val parts = math.min(cur, inputWidth(parent, dir, table))
     if (parts >= cur) parent else narrowed(parent, s"$table@$dir", parts, adaptive)
   }
+
+  /** The width `table` alone asks for, before the session's cap:
+    * data-file bytes / 1 MB + 1. A span that may finish in one task
+    * tests this for 1, not the capped width, so a one-core session
+    * never sends a large input to one task. */
+  def inputWidth(spark: SparkSession, dir: String, table: String): Long =
+    Tables.bytes(spark, dir, table) / 1000000L + 1L
 
   /** ONE child per (parent, key, adaptive), memoized, so a bench's
     * timed runs of a sized query share one session instead of making a

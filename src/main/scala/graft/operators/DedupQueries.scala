@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{GraftQuery, Sizing, Tables}
+import graft.{GraftQuery, Sessions, Sizing, Tables}
 import graft.GraftQuery.q
 import graft.Pin.PinOps
 import graft.functions.TextFunctions
@@ -239,23 +239,25 @@ object DedupQueries {
     * ~c (band 2) lands in ONE cluster even though a and c share no
     * bucket. Components are computed on the bipartite doc↔bucket
     * incidence (never materializing the per-bucket quadratic edge
-    * set): each round folds labels doc→bucket→doc through two min
-    * aggregations, covering two graph hops, and [[graft.Pin]]
-    * materializes each round's labels so later rounds read cached
-    * blocks instead of recomputing the chain (persist does NOT
-    * truncate lineage — the plan still grows one round per iteration).
-    * Convergence is detected from the label sum, which
-    * strictly decreases until fixpoint — one scalar action per round,
-    * no old-vs-new join. Rounds = half the component diameter; at
-    * cluster scale the same loop stands (or large-star/small-star for
-    * O(log n) rounds on adversarial graphs) — per-round shuffle
-    * structure is unchanged. Oracle: recursive-CTE transitive closure
-    * over the equivalent pair edges, min reachable doc_id — the oracle
-    * (not the operator) is quadratic in component size, which is
-    * tractable at the driver's sf0.01 gate scale; the Spark side runs
-    * the full corpus at any scale precisely because it never builds
-    * those pair edges (20M+ implied pairs at sf0.1 on this
-    * high-collision synthetic corpus). */
+    * set), in one of two ways chosen by the input-sized width
+    * ([[graft.Sessions.inputWidth]] of `documents`, a file listing, no
+    * job):
+    *  - width 1 (under 1 MB of documents, every testdata SF): one
+    *    union-find task over the raw incidence ([[bucketComponents]]),
+    *    so the LSH bands are computed once and the build starts no
+    *    job beyond the parquet schema read;
+    *  - wider: [[labelFold]], the distributed doc→bucket→doc min fold,
+    *    one job per round, rounds = half the component diameter plus
+    *    a confirming round (5, 4 and 4 at sf0.001, sf0.01 and sf0.1).
+    *    At cluster scale the same loop stands (dd20's
+    *    large-star/small-star for O(log n) rounds on adversarial
+    *    graphs).
+    * Both give the exact min-reachable-doc fixpoint; the fold refuses
+    * to return labels it has not seen converge within 30 rounds.
+    * Oracle: min-label propagation over the same incidence, 30 rounds
+    * unrolled — the Spark side runs the full corpus at any scale
+    * precisely because it never builds the pair edges (20M+ implied
+    * pairs at sf0.1 on this high-collision synthetic corpus). */
   val dd08DupClusters: GraftQuery = q(
     "dd08_dup_clusters",
     "connected-component near-dup clusters over 2-band LSH candidates",
@@ -267,7 +269,7 @@ object DedupQueries {
     // never a pair set), unrolled to the same 30-round cap as the
     // Spark loop. Labels only ever decrease, so rounds after
     // convergence are identity — a fixed 30 rounds is EQUIVALENT to
-    // the engine's stop-early-or-30, whichever round it converges in.
+    // the engine's fixpoint when it converges within 30 rounds.
     // Every CTE carries AS MATERIALIZED: DuckDB otherwise INLINES the
     // single-reference round CTEs into one exponentially-nested plan
     // (observed: 0.6 s materialized vs >120 s inlined at sf0.01).
@@ -295,15 +297,55 @@ object DedupQueries {
       + s"""
        |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin,
     sizing = ByDocuments) { (s, d) =>
-    val inc0 = Tables.documents(s, d)
+    val inc0 = incidence(s, d)
+    val labels =
+      if (Sessions.inputWidth(s, d, "documents") == 1L) bucketComponents(inc0)
+      else labelFold(shared(inc0).pinned)
+    labels.orderBy("doc_id")
+  }
+
+  /** dd08/dd20's doc↔bucket incidence: each doc's two LSH band buckets. */
+  private[graft] def incidence(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
       .select(col("doc_id"), explode(array(
         concat(lit("1:"), TextFunctions.lshBand(col("text"), 0, 2)),
         concat(lit("2:"), TextFunctions.lshBand(col("text"), 2, 4)))).as("bucket"))
-    // only buckets with ≥ 2 docs carry edges; solo incidences drop out
-    val shared = inc0.groupBy("bucket").agg(count(lit(1)).as("nb"))
+
+  /** The incidence rows of buckets with ≥ 2 docs: only those carry
+    * edges, so solo incidences drop out. */
+  private[graft] def shared(inc0: DataFrame): DataFrame = {
+    val sh = inc0.groupBy("bucket").agg(count(lit(1)).as("nb"))
       .filter(col("nb") > 1).select("bucket")
-    val inc = inc0.join(shared, "bucket")
-      .select(col("doc_id"), col("bucket")).pinned
+    inc0.join(sh, "bucket").select(col("doc_id"), col("bucket"))
+  }
+
+  /** dd08's one-task path: (doc_id, cluster_id) from union-find over
+    * the raw incidence. Each bucket links its members to the first doc
+    * seen in it (the bucket-star reduction, in memory), so a doc whose
+    * buckets are all solo joins no edge and drops out, as in
+    * [[shared]]. */
+  private def bucketComponents(inc0: DataFrame): DataFrame = {
+    import inc0.sparkSession.implicits._
+    inc0.as[(Long, String)].repartition(1).mapPartitions { rows =>
+      val first = scala.collection.mutable.HashMap.empty[String, Long]
+      Components.unionFind(rows.flatMap { case (doc, bucket) =>
+        first.get(bucket) match {
+          case Some(f) => Iterator.single((doc, f))
+          case None => first(bucket) = doc; Iterator.empty
+        }
+      })
+    }.toDF("doc_id", "cluster_id")
+  }
+
+  /** dd08's distributed path: the doc→bucket→doc min-label fold over
+    * the shared incidence, at the session's width, to
+    * (doc_id, cluster_id). [[graft.Pin]] keeps each round's
+    * labels so later rounds read cached blocks (persist does NOT
+    * truncate lineage — the plan grows one round per iteration).
+    * Convergence is detected from the label sum, which strictly
+    * decreases until the fixpoint: one scalar action per round, no
+    * old-vs-new join. */
+  private[graft] def labelFold(inc: DataFrame): DataFrame = {
     var labels = inc.select(col("doc_id")).distinct()
       .withColumn("lbl", col("doc_id")).pinned
     def labelSum(df: DataFrame): Long =
@@ -324,8 +366,12 @@ object DedupQueries {
       labels = next
       rounds += 1
     }
+    // labels short of the fixpoint would differ from the one-task
+    // path's exact components and from the oracle's 30 rounds
+    require(converged,
+      s"dd08_dup_clusters: the label fold did not converge in $rounds rounds; " +
+        "refusing to return unconverged cluster labels")
     labels.select(col("doc_id"), col("lbl").as("cluster_id"))
-      .orderBy("doc_id")
   }
 
   /** Keep-best dedup policy: per candidate bucket keep the longest doc
@@ -1398,7 +1444,10 @@ object DedupQueries {
     * shuffles instead. Same answer, different fixpoint procedure;
     * SCALING.md carries the measured trade (dd08 is the cheaper
     * constant on today's blob-shaped corpus, dd20 the bounded-round
-    * guarantee — GraphSpec's path-graph law is the shape that flips it). */
+    * guarantee — GraphSpec's path-graph law is the shape that flips it).
+    * That trade holds only at width > 1: under 50k edges (every
+    * testdata SF) [[GraphQueries.starContraction]] finishes in one
+    * union-find task, after this query's edge build and count. */
   val dd20StarComponents: GraftQuery = q(
     "dd20_star_components",
     "near-dup clusters via large-star/small-star over the doc-bucket incidence",
@@ -1429,24 +1478,20 @@ object DedupQueries {
       + s"""
        |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin,
     sizing = ByDocuments) { (s, d) =>
-    val docs = Tables.documents(s, d)
-    val inc0 = docs
-      .select(col("doc_id"), explode(array(
-        concat(lit("1:"), TextFunctions.lshBand(col("text"), 0, 2)),
-        concat(lit("2:"), TextFunctions.lshBand(col("text"), 2, 4)))).as("bucket"))
-    val shared = inc0.groupBy("bucket").agg(count(lit(1)).as("nb"))
-      .filter(col("nb") > 1).select("bucket")
-    val inc = inc0.join(shared, "bucket").select(col("doc_id"), col("bucket"))
-    // bucket-star reduction: every member hangs off the bucket's min
-    // member; edges are born canonical (u = member > v = bucket min)
+    GraphQueries.starContraction(bucketStarEdges(shared(incidence(s, d))).pinned)
+      .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
+      .orderBy("doc_id")
+  }
+
+  /** dd20's bucket-star reduction of the shared incidence: every member
+    * hangs off its bucket's min member, so edges are born canonical
+    * (u = member > v = bucket min). */
+  private[graft] def bucketStarEdges(inc: DataFrame): DataFrame = {
     val bmin = inc.groupBy("bucket").agg(min("doc_id").as("m"))
-    val edges = inc.join(bmin, "bucket")
+    inc.join(bmin, "bucket")
       .filter(col("doc_id") =!= col("m"))
       .select(col("doc_id").as("u"), col("m").as("v"))
-      .distinct().pinned
-    val (labels, _) = GraphQueries.starContraction(edges)
-    labels.select(col("node").as("doc_id"), col("comp").as("cluster_id"))
-      .orderBy("doc_id")
+      .distinct()
   }
 
   val all: Seq[GraftQuery] = Seq(

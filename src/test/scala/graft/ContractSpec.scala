@@ -49,7 +49,9 @@ class ContractSpec extends AnyFunSuite {
         // round-8 shapes: distributed rank, sketch-filtered exact
         // verify, order-independent checksum, closed-form water level
         "dd15_sorted_neighborhood", "cm03_heavy_hitters",
-        "q53_table_checksum", "mx03_budget_mix", "sy02_agg_pushdown")
+        "q53_table_checksum", "mx03_budget_mix", "sy02_agg_pushdown",
+        // one-task union-find components next to dd08's
+        "dd20_star_components", "gr07_incremental_components")
     names.foreach { name =>
       val build = SparkEntry.queries(name)
       val a = build(spark, sf).collect().toSeq

@@ -90,8 +90,10 @@ class GraphSpec extends AnyFunSuite {
     val e1 = spark.range(127).select((col("id") + 1).as("u"), col("id").as("v"))
     val e2 = spark.range(63)
       .select((col("id") + 1001).as("u"), (col("id") + 1000).as("v"))
+    // the loop itself, at width 4: starContraction would finish these
+    // 190 edges in one union-find task
     val (labels, rounds) =
-      graft.operators.GraphQueries.starContraction(e1.unionAll(e2))
+      graft.operators.GraphQueries.starLoop(e1.unionAll(e2), 4)
     val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.size == 128 + 64, s"every vertex labeled once, got ${got.size}")
     (0L to 127L).foreach(n => assert(got(n) == 0L, s"node $n -> ${got(n)}"))
@@ -105,12 +107,13 @@ class GraphSpec extends AnyFunSuite {
     val full = spark.range(63).select((col("id") + 1).as("u"), col("id").as("v"))
     val base = full.filter((col("u") + col("v")) % 3 =!= 0)
     val delta = full.filter((col("u") + col("v")) % 3 === 0)
-    val (bl, _) = graft.operators.GraphQueries.starContraction(base)
+    // the loop itself, at width 4 (see the path-graph test)
+    val (bl, _) = graft.operators.GraphQueries.starLoop(base, 4)
     val warm = bl.filter(col("node") =!= col("comp"))
       .select(col("node").as("u"), col("comp").as("v"))
       .unionAll(delta).distinct()
-    val (wl, warmRounds) = graft.operators.GraphQueries.starContraction(warm)
-    val (cl, _) = graft.operators.GraphQueries.starContraction(full)
+    val (wl, warmRounds) = graft.operators.GraphQueries.starLoop(warm, 4)
+    val (cl, _) = graft.operators.GraphQueries.starLoop(full, 4)
     val got = wl.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val want = cl.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == want, "warm-start labels must equal the cold recompute")

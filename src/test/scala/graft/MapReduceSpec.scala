@@ -10,6 +10,43 @@ import org.scalatest.funsuite.AnyFunSuite
 object TestSpark {
   // fixed width: partition-count and plan assertions are written for 4 cores
   lazy val spark: SparkSession = Harness.session(cpus = 4)
+
+  /** The start events of the Spark jobs `body` launches from this
+    * thread: a listener records the jobs that carry this call's scope
+    * property, then waits until every recorded job has ended and the
+    * records hold still. */
+  def jobsStarted(body: => Any): Seq[SparkListenerJobStart] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+    val sc = spark.sparkContext
+    val scope = java.util.UUID.randomUUID().toString
+    val started = new java.util.concurrent.ConcurrentHashMap[Int, SparkListenerJobStart]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.test.scope") == scope)) {
+          started.put(e.jobId, e); ()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty("graft.test.scope", scope)
+    try {
+      body
+      var stable, waited = 0
+      var last = -1
+      while (stable < 2 && waited < 10000) {
+        Thread.sleep(100); waited += 100
+        val n = started.size
+        if (n == last && ended.containsAll(started.keySet)) stable += 1
+        else { stable = 0; last = n }
+      }
+      import scala.jdk.CollectionConverters._
+      started.values.asScala.toSeq
+    } finally {
+      sc.setLocalProperty("graft.test.scope", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }
 
 /** Small file trees on disk for the corpus and runner specs. */
@@ -47,6 +84,7 @@ object MrTestFns extends Serializable {
 class MapReduceSpec extends AnyFunSuite {
   import TestSpark.spark.implicits._
   import MrTestFns.parseValue
+  import TestSpark.jobsStarted
   private def spark = TestSpark.spark
   private val fixtures = "src/test/resources/refFixtures"
 
@@ -341,43 +379,6 @@ class MapReduceSpec extends AnyFunSuite {
         (a, b) => if (a < 0) b else if (b < 0) a else math.min(a, b)),
       ascending))
     assert(res == Map("max" -> 399, "min" -> 0, "ascending" -> (true, -1)))
-  }
-
-  /** The start events of the Spark jobs `body` launches from this
-    * thread: a listener records the jobs that carry this call's scope
-    * property, then waits until every recorded job has ended and the
-    * records hold still. */
-  private def jobsStarted(body: => Any): Seq[SparkListenerJobStart] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
-    val sc = spark.sparkContext
-    val scope = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.ConcurrentHashMap[Int, SparkListenerJobStart]()
-    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.scope") == scope)) {
-          started.put(e.jobId, e); ()
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.scope", scope)
-    try {
-      body
-      var stable, waited = 0
-      var last = -1
-      while (stable < 2 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        val n = started.size
-        if (n == last && ended.containsAll(started.keySet)) stable += 1
-        else { stable = 0; last = n }
-      }
-      import scala.jdk.CollectionConverters._
-      started.values.asScala.toSeq
-    } finally {
-      sc.setLocalProperty("graft.test.scope", null)
-      sc.removeSparkListener(listener)
-    }
   }
 
   /** Whether any stage of `jobs` reads a persisted RDD. */
