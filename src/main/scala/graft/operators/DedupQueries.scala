@@ -4,7 +4,7 @@ import graft.{GraftQuery, Sessions, Sizing, Tables}
 import graft.GraftQuery.q
 import graft.Pin.PinOps
 import graft.functions.TextFunctions
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -197,31 +197,34 @@ object DedupQueries {
     * occurrence-weighted sum of words' md5-derived bits — one explode +
     * one groupBy, all integer arithmetic, reproducible in any engine
     * with md5 and bitwise AND. */
-  val dd07Simhash: GraftQuery = {
-    def sqlBitSum(j: Int) =
-      s"SUM(CASE WHEN ((strpos('0123456789abcdef', substr(md5(w), ${1 + j / 4}, 1)) - 1) & ${1 << (j % 4)}) > 0 THEN 1 ELSE -1 END)"
-    val sqlHash = (0 until 8).map(j =>
-      s"(CASE WHEN ${sqlBitSum(j)} > 0 THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-      .mkString(" + ")
-    q("dd07_simhash",
-      "8-bit SimHash document fingerprint",
-      s"""WITH tok AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
-         |SELECT doc_id, $sqlHash AS simhash
-         |FROM tok GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
-      def hexVal(j: Int) =
-        conv(substring(md5(col("w")), 1 + j / 4, 1), 16, 10).cast(LongType)
-      def bitSum(j: Int) =
-        sum(when(hexVal(j).bitwiseAND(lit(1L << (j % 4))) > 0, 1).otherwise(-1))
-      val hashExpr = (0 until 8).map(j =>
-        when(bitSum(j) > 0, lit(1L << j)).otherwise(lit(0L))).reduceLeft(_ + _)
-      Tables.documents(s, d)
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
-        .groupBy("doc_id")
-        .agg(hashExpr.as("simhash"))
-        .orderBy("doc_id")
-    }
+  val dd07Simhash: GraftQuery = q(
+    "dd07_simhash",
+    "8-bit SimHash document fingerprint",
+    s"""WITH tok AS (
+       |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)
+       |SELECT doc_id, ${sqlSimhash(8)} AS simhash
+       |FROM tok GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
+    Tables.documents(s, d)
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
+      .groupBy("doc_id")
+      .agg(simhash(8).as("simhash"))
+      .orderBy("doc_id")
   }
+
+  /** dd07/dd17's `bits`-bit SimHash of the words `w` of a group, as a
+    * DuckDB aggregate: bit j is set when more words have bit j of their
+    * md5 set than not. */
+  private def sqlSimhash(bits: Int): String = (0 until bits).map { j =>
+    val bitSum = s"SUM(CASE WHEN ((strpos('0123456789abcdef', substr(md5(w), ${1 + j / 4}, 1)) - 1) & ${1 << (j % 4)}) > 0 THEN 1 ELSE -1 END)"
+    s"(CASE WHEN $bitSum > 0 THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+  }.mkString(" + ")
+
+  /** [[sqlSimhash]] as a Spark aggregate over column `w`. */
+  private def simhash(bits: Int): Column = (0 until bits).map { j =>
+    val hexVal = conv(substring(md5(col("w")), 1 + j / 4, 1), 16, 10).cast(LongType)
+    val bitSum = sum(when(hexVal.bitwiseAND(lit(1L << (j % 4))) > 0, 1).otherwise(-1))
+    when(bitSum > 0, lit(1L << j)).otherwise(lit(0L))
+  }.reduceLeft(_ + _)
 
   /** Shared SQL prefix: doc → LSH band-1 bucket (as dd05). */
   private val sqlBkt =
@@ -232,6 +235,44 @@ object DedupQueries {
       |  SELECT doc_id, MIN(md5('0:' || w)) AS s0, MIN(md5('1:' || w)) AS s1
       |  FROM tok GROUP BY doc_id),
       |bkt AS (SELECT doc_id, md5(s0 || s1) AS bucket FROM sig)""".stripMargin
+
+  /** dd08/dd20's oracle: min-label propagation over the shared-bucket
+    * incidence. An earlier oracle materialized doc-doc edges (Σ bucket²
+    * pairs — 15M at sf0.1, one mega-bucket) and ran a recursive
+    * transitive closure over them; DuckDB timed out. This form mirrors
+    * the engine's algorithm instead: min-label propagation over the
+    * doc↔bucket INCIDENCE (≤ 2 rows per doc, never a pair set),
+    * unrolled to the same 30-round cap as the Spark loop. Labels only
+    * ever decrease, so rounds after convergence are identity — a fixed
+    * 30 rounds is EQUIVALENT to the engine's fixpoint when it converges
+    * within 30 rounds. Every CTE carries AS MATERIALIZED: DuckDB
+    * otherwise INLINES the single-reference round CTEs into one
+    * exponentially-nested plan (observed: 0.6 s materialized vs >120 s
+    * inlined at sf0.01). */
+  private val incidenceFoldSql: String =
+    (s"""WITH tok AS MATERIALIZED (
+       |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w
+       |  FROM documents),
+       |sig AS MATERIALIZED (
+       |  SELECT doc_id,
+       |    MIN(md5('0:' || w)) AS s0, MIN(md5('1:' || w)) AS s1,
+       |    MIN(md5('2:' || w)) AS s2, MIN(md5('3:' || w)) AS s3
+       |  FROM tok GROUP BY doc_id),
+       |inc0 AS MATERIALIZED (
+       |  SELECT doc_id, '1:' || md5(s0 || s1) AS bucket FROM sig
+       |  UNION ALL
+       |  SELECT doc_id, '2:' || md5(s2 || s3) AS bucket FROM sig),
+       |shared AS MATERIALIZED (SELECT bucket FROM inc0 GROUP BY bucket HAVING COUNT(*) > 1),
+       |inc AS MATERIALIZED (SELECT i.doc_id, i.bucket FROM inc0 i JOIN shared USING (bucket)),
+       |l0 AS MATERIALIZED (SELECT DISTINCT doc_id, doc_id AS lbl FROM inc)"""
+      + (1 to 30).map(k =>
+        s""",
+       |b$k AS MATERIALIZED (SELECT i.bucket, MIN(l.lbl) AS blbl
+       |  FROM inc i JOIN l${k - 1} l USING (doc_id) GROUP BY i.bucket),
+       |l$k AS MATERIALIZED (SELECT i.doc_id, MIN(b.blbl) AS lbl
+       |  FROM inc i JOIN b$k b USING (bucket) GROUP BY i.doc_id)""").mkString
+      + s"""
+       |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin
 
   /** Transitive near-dup clusters: connected components over the LSH
     * candidate graph with TWO band keys per doc (candidate ⇔ ANY band
@@ -261,46 +302,20 @@ object DedupQueries {
   val dd08DupClusters: GraftQuery = q(
     "dd08_dup_clusters",
     "connected-component near-dup clusters over 2-band LSH candidates",
-    // Oracle cost note: an earlier oracle materialized doc-doc edges
-    // (Σ bucket² pairs — 15M at sf0.1, one mega-bucket) and ran a
-    // recursive transitive closure over them; DuckDB timed out. This
-    // form mirrors the engine's algorithm instead: min-label
-    // propagation over the doc↔bucket INCIDENCE (≤ 2 rows per doc,
-    // never a pair set), unrolled to the same 30-round cap as the
-    // Spark loop. Labels only ever decrease, so rounds after
-    // convergence are identity — a fixed 30 rounds is EQUIVALENT to
-    // the engine's fixpoint when it converges within 30 rounds.
-    // Every CTE carries AS MATERIALIZED: DuckDB otherwise INLINES the
-    // single-reference round CTEs into one exponentially-nested plan
-    // (observed: 0.6 s materialized vs >120 s inlined at sf0.01).
-    (s"""WITH tok AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w
-       |  FROM documents),
-       |sig AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    MIN(md5('0:' || w)) AS s0, MIN(md5('1:' || w)) AS s1,
-       |    MIN(md5('2:' || w)) AS s2, MIN(md5('3:' || w)) AS s3
-       |  FROM tok GROUP BY doc_id),
-       |inc0 AS MATERIALIZED (
-       |  SELECT doc_id, '1:' || md5(s0 || s1) AS bucket FROM sig
-       |  UNION ALL
-       |  SELECT doc_id, '2:' || md5(s2 || s3) AS bucket FROM sig),
-       |shared AS MATERIALIZED (SELECT bucket FROM inc0 GROUP BY bucket HAVING COUNT(*) > 1),
-       |inc AS MATERIALIZED (SELECT i.doc_id, i.bucket FROM inc0 i JOIN shared USING (bucket)),
-       |l0 AS MATERIALIZED (SELECT DISTINCT doc_id, doc_id AS lbl FROM inc)"""
-      + (1 to 30).map(k =>
-        s""",
-       |b$k AS MATERIALIZED (SELECT i.bucket, MIN(l.lbl) AS blbl
-       |  FROM inc i JOIN l${k - 1} l USING (doc_id) GROUP BY i.bucket),
-       |l$k AS MATERIALIZED (SELECT i.doc_id, MIN(b.blbl) AS lbl
-       |  FROM inc i JOIN b$k b USING (bucket) GROUP BY i.doc_id)""").mkString
-      + s"""
-       |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin,
-    sizing = ByDocuments) { (s, d) =>
+    incidenceFoldSql, sizing = ByDocuments) { (s, d) =>
+    clusters(s, d)(inc0 => labelFold(shared(inc0).pinned))
+  }
+
+  /** dd08/dd20's builder: (doc_id, cluster_id) over the [[incidence]],
+    * ordered by doc_id. When `documents` sizes to width 1 it is one
+    * union-find task ([[bucketComponents]]), else the query's own
+    * distributed loop `wide` over the raw incidence. */
+  private def clusters(s: SparkSession, d: String)(
+      wide: DataFrame => DataFrame): DataFrame = {
     val inc0 = incidence(s, d)
     val labels =
       if (Sessions.inputWidth(s, d, "documents") == 1L) bucketComponents(inc0)
-      else labelFold(shared(inc0).pinned)
+      else wide(inc0)
     labels.orderBy("doc_id")
   }
 
@@ -319,7 +334,7 @@ object DedupQueries {
     inc0.join(sh, "bucket").select(col("doc_id"), col("bucket"))
   }
 
-  /** dd08's one-task path: (doc_id, cluster_id) from union-find over
+  /** dd08/dd20's one-task path: (doc_id, cluster_id) from union-find over
     * the raw incidence. Each bucket links its members to the first doc
     * seen in it (the bucket-star reduction, in memory), so a doc whose
     * buckets are all solo joins no edge and drops out, as in
@@ -1349,11 +1364,6 @@ object DedupQueries {
     val Bits = 60
     val BlockBits = 15
     val Radius = 3
-    def sqlBitSum(j: Int) =
-      s"SUM(CASE WHEN ((strpos('0123456789abcdef', substr(md5(w), ${1 + j / 4}, 1)) - 1) & ${1 << (j % 4)}) > 0 THEN 1 ELSE -1 END)"
-    val sqlHash = (0 until Bits).map(j =>
-      s"(CASE WHEN ${sqlBitSum(j)} > 0 THEN CAST(${1L << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END)")
-      .mkString(" + ")
     val sqlShift = (0 until 4).map(b =>
       s"WHEN $b THEN CAST(${1L << (b * BlockBits)} AS BIGINT)")
       .mkString("CASE b ", " ", s" ELSE CAST(${1L << (3 * BlockBits)} AS BIGINT) END")
@@ -1361,7 +1371,7 @@ object DedupQueries {
       s"SimHash hamming<=$Radius near-dup join: 4x$BlockBits-bit block keys make it an equi-join",
       s"""WITH tok AS (
          |  SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-         |sh AS (SELECT doc_id, $sqlHash AS h FROM tok GROUP BY doc_id),
+         |sh AS (SELECT doc_id, ${sqlSimhash(Bits)} AS h FROM tok GROUP BY doc_id),
          |fam AS (
          |  SELECT h, MIN(doc_id) AS rep, COUNT(*) AS n_copies
          |  FROM sh GROUP BY h),
@@ -1379,16 +1389,10 @@ object DedupQueries {
          |  a_copies, b_copies
          |FROM cand WHERE bit_count(xor(ha, hb)) <= $Radius
          |ORDER BY a_id, b_id""".stripMargin) { (s, d) =>
-      def hexVal(j: Int) =
-        conv(substring(md5(col("w")), 1 + j / 4, 1), 16, 10).cast(LongType)
-      def bitSum(j: Int) =
-        sum(when(hexVal(j).bitwiseAND(lit(1L << (j % 4))) > 0, 1).otherwise(-1))
-      val hashExpr = (0 until Bits).map(j =>
-        when(bitSum(j) > 0, lit(1L << j)).otherwise(lit(0L))).reduceLeft(_ + _)
       val fam = Tables.documents(s, d)
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .groupBy("doc_id")
-        .agg(hashExpr.as("h"))
+        .agg(simhash(Bits).as("h"))
         .groupBy("h")
         .agg(min(col("doc_id")).as("rep"), count(lit(1)).as("n_copies"))
       val blocks = fam.select(col("rep"), col("h"), col("n_copies"),
@@ -1445,47 +1449,23 @@ object DedupQueries {
     * SCALING.md carries the measured trade (dd08 is the cheaper
     * constant on today's blob-shaped corpus, dd20 the bounded-round
     * guarantee — GraphSpec's path-graph law is the shape that flips it).
-    * That trade holds only at width > 1: under 50k edges (every
-    * testdata SF) [[GraphQueries.starContraction]] finishes in one
-    * union-find task, after this query's edge build and count. */
+    * That trade holds only at width > 1: when `documents` sizes to
+    * width 1 (every testdata SF) dd20 takes dd08's one union-find task
+    * over the raw incidence ([[clusters]]), so the edges are never
+    * built in Spark. */
   val dd20StarComponents: GraftQuery = q(
     "dd20_star_components",
     "near-dup clusters via large-star/small-star over the doc-bucket incidence",
-    // identical semantics to dd08's oracle: min-label propagation over
-    // the shared-bucket incidence, 30 unrolled rounds, MATERIALIZED
-    // CTEs (see dd08's oracle-cost note)
-    (s"""WITH tok AS MATERIALIZED (
-       |  SELECT DISTINCT doc_id, unnest(string_split(text, ' ')) AS w
-       |  FROM documents),
-       |sig AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    MIN(md5('0:' || w)) AS s0, MIN(md5('1:' || w)) AS s1,
-       |    MIN(md5('2:' || w)) AS s2, MIN(md5('3:' || w)) AS s3
-       |  FROM tok GROUP BY doc_id),
-       |inc0 AS MATERIALIZED (
-       |  SELECT doc_id, '1:' || md5(s0 || s1) AS bucket FROM sig
-       |  UNION ALL
-       |  SELECT doc_id, '2:' || md5(s2 || s3) AS bucket FROM sig),
-       |shared AS MATERIALIZED (SELECT bucket FROM inc0 GROUP BY bucket HAVING COUNT(*) > 1),
-       |inc AS MATERIALIZED (SELECT i.doc_id, i.bucket FROM inc0 i JOIN shared USING (bucket)),
-       |l0 AS MATERIALIZED (SELECT DISTINCT doc_id, doc_id AS lbl FROM inc)"""
-      + (1 to 30).map(k =>
-        s""",
-       |b$k AS MATERIALIZED (SELECT i.bucket, MIN(l.lbl) AS blbl
-       |  FROM inc i JOIN l${k - 1} l USING (doc_id) GROUP BY i.bucket),
-       |l$k AS MATERIALIZED (SELECT i.doc_id, MIN(b.blbl) AS lbl
-       |  FROM inc i JOIN b$k b USING (bucket) GROUP BY i.doc_id)""").mkString
-      + s"""
-       |SELECT doc_id, lbl AS cluster_id FROM l30 ORDER BY doc_id""").stripMargin,
-    sizing = ByDocuments) { (s, d) =>
-    GraphQueries.starContraction(bucketStarEdges(shared(incidence(s, d))).pinned)
-      .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
-      .orderBy("doc_id")
+    incidenceFoldSql, sizing = ByDocuments) { (s, d) =>
+    clusters(s, d)(inc0 =>
+      GraphQueries.starContraction(bucketStarEdges(inc0).pinned)
+        .select(col("node").as("doc_id"), col("comp").as("cluster_id")))
   }
 
-  /** dd20's bucket-star reduction of the shared incidence: every member
-    * hangs off its bucket's min member, so edges are born canonical
-    * (u = member > v = bucket min). */
+  /** dd20's bucket-star reduction of the incidence: every member hangs
+    * off its bucket's min member, so edges are born canonical
+    * (u = member > v = bucket min) and a solo bucket, whose one member
+    * is its min, gives no edge. */
   private[graft] def bucketStarEdges(inc: DataFrame): DataFrame = {
     val bmin = inc.groupBy("bucket").agg(min("doc_id").as("m"))
     inc.join(bmin, "bucket")

@@ -457,6 +457,43 @@ object GraphQueries {
       .orderBy("rn")
   }
 
+  /** gr06/gr07's oracle: min-label propagation over gr06's sparsified
+    * edge set, unrolled 40 single-hop rounds (see gr06). */
+  private val componentsOracleSql: String = {
+    val ROUNDS = 40
+    def lblSql(k: Int): String =
+      s""",
+         |l$k AS MATERIALIZED (
+         |  SELECT node, MIN(lbl) AS lbl FROM (
+         |    SELECT node, lbl FROM l${k - 1}
+         |    UNION ALL
+         |    SELECT und.u AS node, l.lbl FROM und JOIN l${k - 1} l ON und.v = l.node
+         |  ) t GROUP BY node)""".stripMargin
+    s"""WITH items AS MATERIALIZED (
+       |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+       |e0 AS MATERIALIZED (
+       |  SELECT a.l_partkey AS a, b.l_partkey AS b, COUNT(*) AS n
+       |  FROM items a JOIN items b
+       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+       |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
+       |undw AS (
+       |  SELECT a AS src, b AS dst, n FROM e0
+       |  UNION ALL SELECT b, a, n FROM e0),
+       |topd AS (
+       |  SELECT src, dst FROM (
+       |    SELECT src, dst,
+       |      ROW_NUMBER() OVER (PARTITION BY src ORDER BY n DESC, dst) AS rk
+       |    FROM undw) t WHERE rk <= 20),
+       |e AS MATERIALIZED (
+       |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
+       |  FROM topd),
+       |und AS MATERIALIZED (
+       |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
+       |l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM und)
+       |${(1 to ROUNDS).map(lblSql).mkString}
+       |SELECT node AS part, lbl AS comp FROM l$ROUNDS ORDER BY part""".stripMargin
+  }
+
   /** CONNECTED COMPONENTS via alternating large-star/small-star
     * (Kiveris et al., "Connected Components in MapReduce and Beyond",
     * SoCC'14) — the O(log² n)-round algorithm dd08's scaladoc names as
@@ -496,45 +533,12 @@ object GraphQueries {
     * rounds are identity) — the oracle mirrors the SEMANTICS (min
     * reachable id), not the algorithm, which is the point: two
     * different fixpoint procedures agreeing on the answer. */
-  val gr06ConnectedComponents: GraftQuery = {
-    val ROUNDS = 40
-    def lblSql(k: Int): String =
-      s""",
-         |l$k AS MATERIALIZED (
-         |  SELECT node, MIN(lbl) AS lbl FROM (
-         |    SELECT node, lbl FROM l${k - 1}
-         |    UNION ALL
-         |    SELECT und.u AS node, l.lbl FROM und JOIN l${k - 1} l ON und.v = l.node
-         |  ) t GROUP BY node)""".stripMargin
-    q("gr06_connected_components",
-      "large-star/small-star connected components on the sparsified co-purchase graph",
-      s"""WITH items AS MATERIALIZED (
-         |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         |e0 AS MATERIALIZED (
-         |  SELECT a.l_partkey AS a, b.l_partkey AS b, COUNT(*) AS n
-         |  FROM items a JOIN items b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |undw AS (
-         |  SELECT a AS src, b AS dst, n FROM e0
-         |  UNION ALL SELECT b, a, n FROM e0),
-         |topd AS (
-         |  SELECT src, dst FROM (
-         |    SELECT src, dst,
-         |      ROW_NUMBER() OVER (PARTITION BY src ORDER BY n DESC, dst) AS rk
-         |    FROM undw) t WHERE rk <= 20),
-         |e AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM topd),
-         |und AS MATERIALIZED (
-         |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-         |l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM und)
-         |${(1 to ROUNDS).map(lblSql).mkString}
-         |SELECT node AS part, lbl AS comp FROM l$ROUNDS ORDER BY part""".stripMargin,
-      sizing = ByLineitem) { (s, d) =>
-      starContraction(sparsifiedEdges(s, d).pinned)
-        .select(col("node").as("part"), col("comp")).orderBy("part")
-    }
+  val gr06ConnectedComponents: GraftQuery = q(
+    "gr06_connected_components",
+    "large-star/small-star connected components on the sparsified co-purchase graph",
+    componentsOracleSql, sizing = ByLineitem) { (s, d) =>
+    starContraction(sparsifiedEdges(s, d).pinned)
+      .select(col("node").as("part"), col("comp")).orderBy("part")
   }
 
   /** gr04/gr06's top-D-sparsified co-purchase edge list, CANONICAL
@@ -592,56 +596,24 @@ object GraphQueries {
     * table + delta, stitch, contract the warm star set (one union-find
     * task under 50k warm edges, as at every testdata SF; above that,
     * a few alternation rounds, since the input is already stars). */
-  val gr07IncrementalComponents: GraftQuery = {
-    val ROUNDS = 40
-    def lblSql(k: Int): String =
-      s""",
-         |l$k AS MATERIALIZED (
-         |  SELECT node, MIN(lbl) AS lbl FROM (
-         |    SELECT node, lbl FROM l${k - 1}
-         |    UNION ALL
-         |    SELECT und.u AS node, l.lbl FROM und JOIN l${k - 1} l ON und.v = l.node
-         |  ) t GROUP BY node)""".stripMargin
-    q("gr07_incremental_components",
-      "incremental CC maintenance: warm-start star contraction from base labels + delta edges",
-      s"""WITH items AS MATERIALIZED (
-         |  SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         |e0 AS MATERIALIZED (
-         |  SELECT a.l_partkey AS a, b.l_partkey AS b, COUNT(*) AS n
-         |  FROM items a JOIN items b
-         |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 2),
-         |undw AS (
-         |  SELECT a AS src, b AS dst, n FROM e0
-         |  UNION ALL SELECT b, a, n FROM e0),
-         |topd AS (
-         |  SELECT src, dst FROM (
-         |    SELECT src, dst,
-         |      ROW_NUMBER() OVER (PARTITION BY src ORDER BY n DESC, dst) AS rk
-         |    FROM undw) t WHERE rk <= 20),
-         |e AS MATERIALIZED (
-         |  SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b
-         |  FROM topd),
-         |und AS MATERIALIZED (
-         |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-         |l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS lbl FROM und)
-         |${(1 to ROUNDS).map(lblSql).mkString}
-         |SELECT node AS part, lbl AS comp FROM l$ROUNDS ORDER BY part""".stripMargin) { (s0, d) =>
-      val dir = gr07BaseDir(s0, d) // base state builds under the parent
-      // the warm span alone runs at gr06's sized width
-      val s = ByLineitem.session(s0, d)
-      val baseLabels = s.read.parquet(s"$dir/base_labels")
-      val delta = s.read.parquet(s"$dir/delta")
-      // warm start: base labels as canonical star edges (roots' (x,x)
-      // self-rows drop), stitched by the delta
-      val warm = baseLabels.filter(col("node") =!= col("comp"))
-        .select(col("node").as("u"), col("comp").as("v"))
-        .unionAll(delta)
-        .distinct()
-        .pinned
-      starContraction(warm)
-        .select(col("node").as("part"), col("comp")).orderBy("part")
-    }
+  val gr07IncrementalComponents: GraftQuery = q(
+    "gr07_incremental_components",
+    "incremental CC maintenance: warm-start star contraction from base labels + delta edges",
+    componentsOracleSql) { (s0, d) =>
+    val dir = gr07BaseDir(s0, d) // base state builds under the parent
+    // the warm span alone runs at gr06's sized width
+    val s = ByLineitem.session(s0, d)
+    val baseLabels = s.read.parquet(s"$dir/base_labels")
+    val delta = s.read.parquet(s"$dir/delta")
+    // warm start: base labels as canonical star edges (roots' (x,x)
+    // self-rows drop), stitched by the delta
+    val warm = baseLabels.filter(col("node") =!= col("comp"))
+      .select(col("node").as("u"), col("comp").as("v"))
+      .unionAll(delta)
+      .distinct()
+      .pinned
+    starContraction(warm)
+      .select(col("node").as("part"), col("comp")).orderBy("part")
   }
 
   /** gr07's base state: one base contraction + delta split per corpus

@@ -105,8 +105,7 @@ class ComponentsSpec extends AnyFunSuite {
     test(s"dd20 at $at: the one-task path equals star contraction at width 4") {
       val wide = Sessions.child(spark, "spark.sql.shuffle.partitions" -> "4")
       try {
-        val edges = DedupQueries.bucketStarEdges(
-          DedupQueries.shared(DedupQueries.incidence(wide, sf))).pinned
+        val edges = DedupQueries.bucketStarEdges(DedupQueries.incidence(wide, sf)).pinned
         val want = rows(GraphQueries.starLoop(edges, 4)._1
           .select(col("node").as("doc_id"), col("comp").as("cluster_id"))
           .orderBy("doc_id"))
@@ -138,16 +137,18 @@ class ComponentsSpec extends AnyFunSuite {
     }
   }
 
-  test("dd08 at sf0.001 builds in at most 1 Spark job and runs in at most 3") {
-    val dd08 = query("dd08_dup_clusters")
-    val sf = s"$testdata/sf0.001"
-    try {
-      var df: DataFrame = null
-      val built = TestSpark.jobsStarted { df = dd08.build(spark, sf) }
-      val forced = TestSpark.jobsStarted(Harness.force(df))
-      assert(built.size <= 1, s"build launched ${built.size} jobs")
-      assert(built.size + forced.size <= 3,
-        s"build and force launched ${built.size} + ${forced.size} jobs")
-    } finally Harness.release(spark)
+  Seq("dd08" -> "dd08_dup_clusters", "dd20" -> "dd20_star_components").foreach {
+    case (id, name) =>
+      test(s"$id at sf0.001 builds in at most 1 Spark job and runs in at most 3") {
+        val sf = s"$testdata/sf0.001"
+        try {
+          val (df, build) = Profile.of(spark)(query(name).build(spark, sf))
+          val built = build.jobs
+          val forced = Profile.of(spark)(Harness.force(df))._2.jobs
+          assert(built.size <= 1, s"build launched ${built.size} jobs")
+          assert(built.size + forced.size <= 3,
+            s"build and force launched ${built.size} + ${forced.size} jobs")
+        } finally Harness.release(spark)
+      }
   }
 }

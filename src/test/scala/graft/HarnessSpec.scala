@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-/** The one harness session, its probe-conf parser and the engine's
-  * option set. */
+/** The one harness session, its probe-conf parser, the engine's option
+  * set and its one SparkListener. */
 class HarnessSpec extends AnyFunSuite {
   /** Every `spark.graft.*` key the engine reads, with why it is an
     * option: two workloads need different values, or it is a fail-fast
@@ -24,6 +24,16 @@ class HarnessSpec extends AnyFunSuite {
         .flatMap((f: Path) => key.findAllIn(Files.readString(f))).toSet
       finally sources.close()
     assert(found == graftOptions.keySet)
+  }
+
+  test("the engine adds a SparkListener only in Profile") {
+    val sources = Files.walk(Paths.get("src/main/scala"))
+    val found =
+      try sources.iterator.asScala.filter(_.toString.endsWith(".scala"))
+        .filter((f: Path) => Files.readString(f).contains("addSparkListener"))
+        .map(_.getFileName.toString).toSet
+      finally sources.close()
+    assert(found == Set("Profile.scala"))
   }
 
   test("no map or cache in the engine is keyed on a SparkSession outside Sessions.children") {

@@ -2,7 +2,6 @@ package graft
 
 import graft.mr.{MapReduceJob, MapReduceRunner}
 import graft.sources.{Corpus, MultiGlob, PathGlob}
-import org.apache.spark.scheduler.SparkListenerJobStart
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -11,42 +10,6 @@ object TestSpark {
   // fixed width: partition-count and plan assertions are written for 4 cores
   lazy val spark: SparkSession = Harness.session(cpus = 4)
 
-  /** The start events of the Spark jobs `body` launches from this
-    * thread: a listener records the jobs that carry this call's scope
-    * property, then waits until every recorded job has ended and the
-    * records hold still. */
-  def jobsStarted(body: => Any): Seq[SparkListenerJobStart] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
-    val sc = spark.sparkContext
-    val scope = java.util.UUID.randomUUID().toString
-    val started = new java.util.concurrent.ConcurrentHashMap[Int, SparkListenerJobStart]()
-    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.test.scope") == scope)) {
-          started.put(e.jobId, e); ()
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = { ended.add(e.jobId); () }
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty("graft.test.scope", scope)
-    try {
-      body
-      var stable, waited = 0
-      var last = -1
-      while (stable < 2 && waited < 10000) {
-        Thread.sleep(100); waited += 100
-        val n = started.size
-        if (n == last && ended.containsAll(started.keySet)) stable += 1
-        else { stable = 0; last = n }
-      }
-      import scala.jdk.CollectionConverters._
-      started.values.asScala.toSeq
-    } finally {
-      sc.setLocalProperty("graft.test.scope", null)
-      sc.removeSparkListener(listener)
-    }
-  }
 }
 
 /** Small file trees on disk for the corpus and runner specs. */
@@ -84,7 +47,6 @@ object MrTestFns extends Serializable {
 class MapReduceSpec extends AnyFunSuite {
   import TestSpark.spark.implicits._
   import MrTestFns.parseValue
-  import TestSpark.jobsStarted
   private def spark = TestSpark.spark
   private val fixtures = "src/test/resources/refFixtures"
 
@@ -382,8 +344,8 @@ class MapReduceSpec extends AnyFunSuite {
   }
 
   /** Whether any stage of `jobs` reads a persisted RDD. */
-  private def persists(jobs: Seq[SparkListenerJobStart]): Boolean =
-    jobs.exists(_.stageInfos.exists(_.rddInfos.exists(_.storageLevel != StorageLevel.NONE)))
+  private def persists(jobs: Seq[Profile.Job]): Boolean =
+    jobs.exists(_.start.stageInfos.exists(_.rddInfos.exists(_.storageLevel != StorageLevel.NONE)))
 
   test("one pass: 6 jobs launch discovery, fetch and the pass; with no directory files, the pass alone") {
     val corpus = Corpus.fromRecords(spark, virtualTree)
@@ -397,13 +359,13 @@ class MapReduceSpec extends AnyFunSuite {
         mapper = (_, parents, _) => Iterator.single(parents.size),
         zero = 0, fold = _ + _, merge = _ + _)
     }
-    assert(jobsStarted(MapReduceRunner.run(spark, corpus, jobs(withDirs = true))).size == 3)
-    assert(jobsStarted(MapReduceRunner.run(spark, corpus, jobs(withDirs = false))).size == 1)
+    assert(Profile.of(spark)(MapReduceRunner.run(spark, corpus, jobs(withDirs = true)))._2.jobs.size == 3)
+    assert(Profile.of(spark)(MapReduceRunner.run(spark, corpus, jobs(withDirs = false)))._2.jobs.size == 1)
     // on a tree, discovery reads the listing: the pass is the only job,
     // and nothing is persisted
     TestTree.withTree(virtualTree) { root =>
       Seq(true, false).foreach { withDirs =>
-        val onTree = jobsStarted(MapReduceRunner.runOnDirectory(spark, root, jobs(withDirs)))
+        val onTree = Profile.of(spark)(MapReduceRunner.runOnDirectory(spark, root, jobs(withDirs)))._2.jobs
         assert(onTree.size == 1, s"withDirs=$withDirs")
         assert(!persists(onTree), s"withDirs=$withDirs")
       }
@@ -416,8 +378,8 @@ class MapReduceSpec extends AnyFunSuite {
       name = "files", filter = PathGlob("**/*.txt"),
       mapper = (_, _, _) => Iterator.single(1),
       zero = 0, fold = _ + _, merge = _ + _)
-    val launched = jobsStarted(
-      assert(MapReduceRunner.run(spark, corpus, Seq(job)) == Map("files" -> 4)))
+    val launched = Profile.of(spark)(
+      assert(MapReduceRunner.run(spark, corpus, Seq(job)) == Map("files" -> 4)))._2.jobs
     assert(launched.size == 1)
     assert(!persists(launched), "the run persisted a corpus only the pass reads")
   }

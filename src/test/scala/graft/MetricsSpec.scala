@@ -6,17 +6,17 @@ import org.scalatest.funsuite.AnyFunSuite
 /** MEASURED efficiency guards — the runtime-counter complement to
   * PlanSpec's plan-text pins. A pushdown that prints in the plan but
   * doesn't change what the scan reads is a lie; these tests assert the
-  * actual task-level IO, via [[Metrics.measure]]. */
+  * actual task-level IO, via [[Profile.of]]. */
 class MetricsSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.01"
 
   test("column pruning is real: projecting 2 columns reads fewer bytes than all columns") {
-    val (_, narrow) = Metrics.measure(spark) {
+    val (_, narrow) = Profile.of(spark) {
       Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
         .agg(count(lit(1))).collect()
     }
-    val (_, wide) = Metrics.measure(spark) {
+    val (_, wide) = Profile.of(spark) {
       Tables.lineitem(spark, sf).groupBy().max("l_orderkey")
         .crossJoin(Tables.lineitem(spark, sf).agg(
           count(col("l_returnflag")), sum(col("l_extendedprice")),
@@ -29,10 +29,10 @@ class MetricsSpec extends AnyFunSuite {
   }
 
   test("predicate pushdown is real: a selective filter reads fewer record(s)") {
-    val (_, filtered) = Metrics.measure(spark) {
+    val (_, filtered) = Profile.of(spark) {
       Tables.orders(spark, sf).filter(col("o_orderkey") === 1L).collect()
     }
-    val (_, full) = Metrics.measure(spark) {
+    val (_, full) = Profile.of(spark) {
       Tables.orders(spark, sf).agg(count(lit(1))).collect()
     }
     // row-group statistics can't skip everything at this file size, but
@@ -42,7 +42,7 @@ class MetricsSpec extends AnyFunSuite {
   }
 
   test("q01 aggregation shuffles only the partial-aggregate rows, not the corpus") {
-    val (_, m) = Metrics.measure(spark) {
+    val (_, m) = Profile.of(spark) {
       SparkEntry.queries("q01_pricing_summary")(spark, sf).collect()
     }
     // partial+final: what crosses the exchange is per-partition GROUP
@@ -56,7 +56,7 @@ class MetricsSpec extends AnyFunSuite {
   }
 
   test("sy02 pushed aggregation reads zero bytes and a handful of partial records") {
-    val (_, m) = Metrics.measure(spark) {
+    val (_, m) = Profile.of(spark) {
       SparkEntry.queries("sy02_agg_pushdown")(spark, sf).collect()
     }
     // closed-form partials: one row per surviving partition, no input IO
@@ -65,7 +65,7 @@ class MetricsSpec extends AnyFunSuite {
   }
 
   test("broadcast join moves no fact bytes through a shuffle (q05)") {
-    val (_, m) = Metrics.measure(spark) {
+    val (_, m) = Profile.of(spark) {
       SparkEntry.queries("q05_join_broadcast")(spark, sf).collect()
     }
     // dims broadcast, so NO fact row ever crosses an exchange: the only
@@ -77,5 +77,20 @@ class MetricsSpec extends AnyFunSuite {
     assert(m.inputRecords >= 10000L, s"q05 must scan fact rows (${m.inputRecords} records)")
     assert(m.shuffleWriteBytes < 64 * 1024,
       s"shuffled ${m.shuffleWriteBytes}B — fact rows crossing an exchange?")
+  }
+
+  test("a job another thread started is not profiled") {
+    // started before the profile, so it does not inherit its scope
+    val latch = new java.util.concurrent.CountDownLatch(1)
+    @volatile var scanned = -1L
+    val other = new Thread(() => {
+      latch.await()
+      scanned = Tables.lineitem(spark, sf).agg(count(lit(1))).head().getLong(0)
+    })
+    other.start()
+    val (_, m) = Profile.of(spark) { latch.countDown(); other.join() }
+    assert(scanned > 0)
+    assert(m.jobs.isEmpty, s"profiled ${m.jobs.size} jobs another thread started")
+    assert(m.inputBytes == 0, s"counted ${m.inputBytes}B another thread read")
   }
 }

@@ -1,12 +1,13 @@
 #!/bin/bash
 # Run a graft main (graft.Verify / graft.Bench / graft.PlanDump /
-# graft.JobProbe / graft.ScaleUp) on the
+# graft.Profile / graft.ScaleUp) on the
 # sbt runtime classpath WITHOUT sbt's per-invocation startup cost,
 # with the same JVM module-opens build.sbt gives forked runs (raw
 # `java -cp` otherwise dies in Kryo on java.nio access — pc01).
 # Usage: tools/graft_java.sh [-Xmx...] graft.Verify args...
 #        tools/graft_java.sh graft.PlanDump [sfDir] [outFile]   (PLANS.md)
 #        tools/graft_java.sh graft.PlanDump <sfDir> <outDir> <suffix> <query>...
+#        tools/graft_java.sh graft.Profile <sfDir> <query> [warmups]   (jobs, stages)
 set -e
 cd "$(dirname "$0")/.."
 CP_CACHE=/tmp/graft_runtime_cp.txt
