@@ -21,9 +21,14 @@ final case class GraftQuery(
     oracle: Option[String],
     doc: String = "",
     sizing: Sizing = Sizing.Session) {
-  /** What every caller runs: `body` on the session [[sizing]] picks. */
-  val build: (SparkSession, String) => DataFrame =
-    (s, d) => body(sizing.session(s, d), d)
+  /** What every caller runs: `body` on the session [[sizing]] picks,
+    * with the graft SQL functions registered if that session lacks them
+    * (a session built without `GraftExtensions`). */
+  val build: (SparkSession, String) => DataFrame = { (s, d) =>
+    val session = sizing.session(s, d)
+    graft.plans.VectorExpressions.register(session)
+    body(session, d)
+  }
 }
 object GraftQuery {
   /** The registry modules' constructor: an oracle-checked query. */
@@ -336,7 +341,12 @@ object Sessions {
   def narrowed(parent: SparkSession, key: String, width: Long,
       adaptive: Boolean): SparkSession =
     children.synchronized {
-      val c = children.getOrElseUpdate((parent, key, adaptive), parent.newSession())
+      val c = children.getOrElseUpdate((parent, key, adaptive), {
+        // a new session has the parent's extensions, not its registrations
+        val c = parent.newSession()
+        graft.plans.VectorExpressions.register(c)
+        c
+      })
       mirror(parent, c)
       c.conf.set("spark.sql.shuffle.partitions", width.toString)
       if (!adaptive) c.conf.set("spark.sql.adaptive.enabled", "false")

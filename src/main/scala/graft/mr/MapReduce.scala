@@ -1,10 +1,12 @@
 package graft.mr
 
 import graft.sources.{Corpus, MultiGlob, PathPredicate}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.SerializableConfiguration
 
 /** The reference's job model (`jobs.go:9-20`) re-expressed Spark-first.
   *
@@ -138,7 +140,7 @@ final case class GraftJobException(jobName: String, path: String,
   * them all in one in-process map, mapreduce.go:187), so this is a
   * hand-rolled broadcast join: the matching rows reach the driver
   * ([[resolvers]] finds them with Spark, [[MapReduceRunner.runOnDirectory]]
-  * in the tree's listing), [[stacks]] sorts them into the stack table the
+  * in its walk of the tree), [[stacks]] sorts them into the stack table the
   * pass ships to its tasks, and each row resolves map-side. No shuffle.
   *
   * Intentional divergence: when SEVERAL files in one folder match
@@ -224,24 +226,26 @@ object ParentStacks {
   * reads each file once and hands it to every job's pipeline, and finds
   * directory files during that same traversal (mapreduce.go:152-204).
   * Here directory files are found once for all jobs, and then ONE Spark
-  * job folds every job: each task reads its partition's `(path, content)`
-  * rows once, feeds each row to every job's filter and mapper, and
-  * returns the K partials, which the driver merges job by job before
-  * calling each `finish`.
+  * job folds every job: each task reads its files once, feeds each
+  * `(path, content)` to every job's filter and mapper, and returns the K
+  * partials, which the driver merges job by job before calling each
+  * `finish`.
   *
-  * Discovery has two sources:
-  *  - [[runOnDirectory]] filters the listing [[Corpus.read]] already
-  *    holds with the jobs' directory-file globs and reads the few
-  *    matches on the driver through Hadoop's `FileSystem`, so the pass
-  *    is the only Spark job and nothing is persisted;
+  * The pass has two sources:
+  *  - [[runOnDirectory]] walks the tree itself ([[Corpus.walk]]),
+  *    pruned to the folders some job could match, as the reference's
+  *    traversal is (work.go:29-37,68-99). It reads the few directory
+  *    files on the driver and hands each task a group of files to
+  *    open, so the pass is the only Spark job on a tree without wide
+  *    folders, and nothing is persisted;
   *  - [[run]] takes any corpus frame (a table has no tree listing) and
   *    discovers with Spark: a path-only scan and a content fetch. It
   *    persists the corpus (MEMORY_AND_DISK) for the run only when some
   *    job declares `directoryFiles`, so those two jobs and the pass
   *    share one read; a corpus the caller cached stays cached.
   *
-  * A corpus with fewer partitions P than cores would leave cores idle,
-  * so the pass reads the corpus g = min(K, ⌈cores / P⌉) times within the
+  * An input with fewer partitions P than cores would leave cores idle,
+  * so the pass reads the input g = min(K, ⌈cores / P⌉) times within the
   * same stage, copy i folding only the jobs whose index is i (mod g):
   * tasks = P × g. Each task holds the fold states of its jobs at once,
   * and a `sortKey` job buffers its partition's mapped records in task
@@ -267,42 +271,57 @@ object MapReduceRunner {
     val owned = js.exists(_.directoryFiles.isDefined) &&
       corpus.storageLevel == StorageLevel.NONE
     val cached = if (owned) corpus.persist(StorageLevel.MEMORY_AND_DISK) else corpus
-    try pass(spark, cached, js, ParentStacks.resolvers(cached, js.map(_.directoryFiles)))
-    finally if (owned) { cached.unpersist(); () }
+    try {
+      val parents = ParentStacks.resolvers(cached, js.map(_.directoryFiles))
+      // a row's content is read before the scan moves to the next row,
+      // which may reuse the row object
+      val files = cached.filter(col("path").isNotNull).select(col("path"), col("content"))
+        .queryExecution.toRdd
+        .mapPartitions(_.map(r => (r.getUTF8String(0).toString, () => r.getBinary(1))))
+      pass(spark, files, js, parents)
+    } finally if (owned) { cached.unpersist(); () }
   }
 
-  /** [[run]] over the tree at `root`, with directory files found in the
-    * read's own listing: one Spark job, no persist. */
-  def runOnDirectory(spark: SparkSession, root: String, jobs: Seq[CorpusJob])
-      : Map[String, Any] = {
+  /** [[run]] over the tree at `root`, read without a DataFrame: one
+    * [[Corpus.walk]] lists the folders some job's filter or directory-file
+    * filter could match (`listed` sees each), the directory files among
+    * the files it finds are read on the driver, and the files are split
+    * by [[Corpus.groups]]; each task of the pass opens its group's files
+    * itself. One Spark job unless the walk meets a wide folder, no
+    * persist. */
+  def runOnDirectory(spark: SparkSession, root: String, jobs: Seq[CorpusJob],
+      listed: String => Unit = _ => ()): Map[String, Any] = {
     if (jobs.isEmpty) return Map.empty
     val js = jobs.toIndexedSeq
-    val corpus = Corpus.read(spark, root)
-    val preds = js.flatMap(_.directoryFiles).distinct
-    val dirRows = if (preds.isEmpty) Nil else {
-      val any = MultiGlob(preds)
-      val conf = spark.sessionState.newHadoopConf()
-      Corpus.listing(corpus, root).collect {
-        case (path, file) if any.matches(path) =>
-          val in = file.getFileSystem(conf).open(file)
-          try (path, in.readAllBytes()) finally in.close()
-      }
+    val dirFilters = js.flatMap(_.directoryFiles).distinct
+    val files = Corpus.walk(spark, root, MultiGlob(js.map(_.filter) ++ dirFilters), listed)
+    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val top = new Path(root)
+    val dirRows = if (dirFilters.isEmpty) Nil else {
+      val fs = top.getFileSystem(conf.value)
+      val anyDir = MultiGlob(dirFilters)
+      files.collect { case f if anyDir.matches(f.path) => (f.path, Corpus.bytes(fs, f.location)) }
     }
-    pass(spark, corpus, js, ParentStacks.stacks(dirRows, js.map(_.directoryFiles)))
+    val groups = Corpus.groups(spark, files)
+    val input = spark.sparkContext.parallelize(groups, groups.size.max(1)).mapPartitions { it =>
+      val fs = top.getFileSystem(conf.value)
+      it.flatten.map(f => (f.path, () => Corpus.bytes(fs, f.location)))
+    }
+    pass(spark, input, js, ParentStacks.stacks(dirRows, js.map(_.directoryFiles)))
   }
 
-  /** The one Spark job: every job folded over `corpus`, partials merged
-    * and finished on the driver. */
-  private def pass(spark: SparkSession, corpus: DataFrame, js: IndexedSeq[CorpusJob],
-      parents: IndexedSeq[String => Seq[Array[Byte]]]): Map[String, Any] = {
-    val rows = corpus.filter(col("path").isNotNull)
-      .select(col("path"), col("content")).queryExecution.toRdd
+  /** The one Spark job: every job folded over `files`, each task's
+    * (path, content reader) pairs, partials merged and finished on the
+    * driver. */
+  private def pass(spark: SparkSession, files: RDD[(String, () => Array[Byte])],
+      js: IndexedSeq[CorpusJob], parents: IndexedSeq[String => Seq[Array[Byte]]])
+      : Map[String, Any] = {
     val sc = spark.sparkContext
-    val nParts = rows.getNumPartitions.max(1)
+    val nParts = files.getNumPartitions.max(1)
     val g = js.size.min((sc.defaultParallelism + nParts - 1) / nParts)
     val copies = (0 until g).map { c =>
       val mine = js.indices.filter(_ % g == c)
-      rows.mapPartitions(it => Iterator.single(foldPartition(it, js, mine, parents)))
+      files.mapPartitions(it => Iterator.single(foldPartition(it, js, mine, parents)))
     }
     val partials = if (g == 1) copies.head else sc.union(copies)
     val add = (acc: Array[Any], part: Array[(Int, Any)]) => {
@@ -320,15 +339,14 @@ object MapReduceRunner {
     js.map(_.name).zip(result).toMap
   }
 
-  /** One task: each row of the partition once, through every job in
+  /** One task: each file of the partition once, through every job in
     * `mine`; returns (job index, partial) for those jobs. */
-  private def foldPartition(rows: Iterator[InternalRow], jobs: IndexedSeq[CorpusJob],
-      mine: Seq[Int], parents: IndexedSeq[String => Seq[Array[Byte]]])
-      : Array[(Int, Any)] = {
+  private def foldPartition(files: Iterator[(String, () => Array[Byte])],
+      jobs: IndexedSeq[CorpusJob], mine: Seq[Int],
+      parents: IndexedSeq[String => Seq[Array[Byte]]]): Array[(Int, Any)] = {
     val folders = mine.map(i => (i, jobs(i).filter, parents(i), jobs(i).folder())).toArray
-    rows.foreach { row =>
-      val path = row.getUTF8String(0).toString
-      lazy val content = row.getBinary(1) // read once, only if a job wants it
+    files.foreach { case (path, read) =>
+      lazy val content = read() // read once, only if a job wants it
       folders.foreach { case (_, filter, parentsFor, f) =>
         if (filter.matches(path)) f.add(path, parentsFor(path), content)
       }

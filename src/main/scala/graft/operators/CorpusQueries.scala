@@ -280,7 +280,6 @@ object CorpusQueries {
       |  CAST(CASE WHEN n_hit * 5 > n_grams THEN 1 ELSE 0 END AS BIGINT)
       |    AS dropped
       |FROM scored WHERE n_hit > 0 ORDER BY doc_id""".stripMargin) { (s, d) =>
-    graft.plans.VectorExpressions.register(s)
     val N = 13
     // ONE tokenize+explode pass feeds both sides (pinned): distinct
     // (doc, fingerprint) pairs out of the streaming Generator
@@ -385,7 +384,6 @@ object CorpusQueries {
       val keepers = s3.groupBy(col("text")).agg(min(col("doc_id")).as("doc_id"))
         .select("doc_id").pinned
       val s4 = s3.join(keepers, Seq("doc_id"), "left_semi")
-      graft.plans.VectorExpressions.register(s)
       val shDf = s4
         .select(col("doc_id"), TextFunctions.shingles(col("text"), 3).as("sh"))
         .pinned

@@ -176,7 +176,6 @@ object DedupQueries {
          |  FROM coded a JOIN coded b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)
          |SELECT vec_a, vec_b, cosine FROM pairs WHERE cosine >= 0.4
          |ORDER BY vec_a, vec_b""".stripMargin) { (s, d) =>
-      graft.plans.VectorExpressions.register(s)
       val coded = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding"),
           VectorSql.bucketExpr("embedding").as("bucket"))
@@ -477,7 +476,6 @@ object DedupQueries {
       // per reference. Pin materializes each ONCE — both frames
       // are a few rows-per-doc of short strings, so the materialized
       // state is tiny next to the recomputation it saves (9 s → s).
-      graft.plans.VectorExpressions.register(s)
       val docs = Tables.documents(s, d)
         .filter(size(split(col("text"), " ")) >= 3)
         .select(col("doc_id"), TextFunctions.shingles(col("text"), 3).as("sh"))
@@ -688,7 +686,6 @@ object DedupQueries {
          |  COALESCE(n_cand, 0) = 0 AS admitted
          |FROM deltadocs dd LEFT JOIN hits ON dd.doc_id = hits.doc_id
          |ORDER BY dd.doc_id""".stripMargin) { (s, d) =>
-      graft.plans.VectorExpressions.register(s)
       val bands = lshBands(
           Tables.documents(s, d).filter(size(split(col("text"), " ")) >= 3),
           rows = R, bands = B)
@@ -801,7 +798,6 @@ object DedupQueries {
          |  COALESCE(n_cand, 0) = 0 AS admitted
          |FROM deltadocs dd LEFT JOIN hits ON dd.doc_id = hits.doc_id
          |ORDER BY dd.doc_id""".stripMargin) { (s, d) =>
-      graft.plans.VectorExpressions.register(s)
       val bands = lshBands(
           Tables.documents(s, d).filter(size(split(col("text"), " ")) >= 3),
           rows = R, bands = B)
@@ -886,7 +882,6 @@ object DedupQueries {
          |JOIN grp ga ON ga.rep = doc_a
          |JOIN grp gb ON gb.rep = doc_b
          |ORDER BY doc_a, doc_b""".stripMargin) { (s, d) =>
-      graft.plans.VectorExpressions.register(s)
       // Shingle set + its order-canonical fingerprint in ONE map-side
       // pass (shingles() is array_distinct'd, so sort_array(sh) is the
       // canonical set image); the fingerprint is engine-internal — it
@@ -1017,7 +1012,6 @@ object DedupQueries {
          |  CASE WHEN n_cand > 0
          |    THEN CAST(n_hit AS DOUBLE) / CAST(n_cand AS DOUBLE) END AS prec
          |FROM m CROSS JOIN nc ORDER BY threshold""".stripMargin) { (s, d) =>
-      graft.plans.VectorExpressions.register(s)
       // scale-free sampling modulus: n/SAMP keeps the stripe ~SAMP docs
       // no matter the corpus size (scalar-join idiom, 1-row broadcast)
       val params = Tables.documents(s, d).agg(

@@ -65,7 +65,6 @@ object IvfQueries {
     * -cid = smallest cid), exactly the oracle's ROW_NUMBER pick. */
   private def assignedDf(s: SparkSession, d: String,
       cells: Long = CELLS): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
     val centArr = e.filter(col("vec_id") < cells)
       .agg(sort_array(collect_list(struct(col("vec_id").as("cid"),
@@ -285,7 +284,6 @@ object IvfQueries {
     * explode — still zero corpus shuffle, output P× queries not P×
     * corpus. */
   private def probedDf(s: SparkSession, d: String, probes: Int): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
     val centArr = e.filter(col("vec_id") < CELLS)
       .agg(sort_array(collect_list(struct(col("vec_id").as("cid"),
@@ -519,7 +517,6 @@ object IvfQueries {
        |LEFT JOIN base b ON b.cid = f.cid
        |LEFT JOIN delta d ON d.cid = f.cid
        |ORDER BY f.cid""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
     // frozen quantizer: the 16 smallest BASE ids (training never reruns
     // on ingest); ~16 rows → broadcast exactly like assignedDf's seeds
@@ -802,7 +799,6 @@ object IvfQueries {
     * broadcast equi-join on the group id. Zero corpus shuffles; the
     * per-vector cost is representatives + 128, independent of ncells. */
   private def assignedDfHier(s: SparkSession, d: String, cells: Long): DataFrame = {
-    VectorExpressions.register(s)
     val e = Tables.embeddings(s, d)
     val cents = e.filter(col("vec_id") < cells)
       .select(col("vec_id").as("cid"), col("embedding").as("cemb"),
@@ -1517,7 +1513,6 @@ object IvfQueries {
          |GROUP BY h.query_id, nv.n_visited
          |ORDER BY h.query_id""".stripMargin) { (s0, d) =>
       val s = searchSession(s0)
-      VectorExpressions.register(s)
       import s.implicits._
       val H3Index(dir, lmax, qe, entryId) = h3Index(s0, d)
       val vecs = s.read.parquet(s"$dir/vecs").pinned
@@ -1710,7 +1705,6 @@ object IvfQueries {
   def h4IndexDir(s: SparkSession, d: String): String =
     graft.Fixtures.once(s, d, "hn04_index", "hn04_hnsw_upsert") {
       val dir = graft.Scratch.dir("graft_hn04_")
-      VectorExpressions.register(s)
       val e = Tables.embeddings(s, d)
       // the frozen codebook is part of the stored index: persist
       // the 1-row array frame so the timed upsert reads 16 rows
@@ -1781,7 +1775,6 @@ object IvfQueries {
          |  SELECT * FROM c0 UNION ALL SELECT * FROM c1
          |  UNION ALL SELECT * FROM c2)
          |ORDER BY layer""".stripMargin, sizing = LadderByEmbeddings) { (s, d) =>
-      VectorExpressions.register(s)
       val dir = h4IndexDir(s, d)
       val e = Tables.embeddings(s, d)
       // the genuinely-new work: assign + level the DELTA under the
@@ -2206,7 +2199,6 @@ object IvfQueries {
   def h5IndexDir(s: SparkSession, d: String): (String, Int) =
     graft.Fixtures.once(s, d, "hn05_index", "hn05_ladder_upsert") {
       val dir = graft.Scratch.dir("graft_hn05_")
-      VectorExpressions.register(s)
       val base = Tables.embeddings(s, d)
         .filter(col("vec_id") % 211 =!= 0)
         .select(col("vec_id"), col("embedding"))
@@ -2321,7 +2313,6 @@ object IvfQueries {
          |  SELECT * FROM c0 UNION ALL SELECT * FROM c1
          |  UNION ALL SELECT * FROM c2)
          |ORDER BY layer""".stripMargin, sizing = LadderByEmbeddings) { (s, d) =>
-      VectorExpressions.register(s)
       val (dir, lmax) = h5IndexDir(s, d)
       // the genuinely-new work: hierarchically assign + level the
       // DELTA under the persisted frozen codebook — the timed path
@@ -2451,7 +2442,6 @@ object IvfQueries {
          |  SELECT * FROM c0 UNION ALL SELECT * FROM c1
          |  UNION ALL SELECT * FROM c2)
          |ORDER BY layer""".stripMargin, sizing = LadderByEmbeddings) { (s, d) =>
-      VectorExpressions.register(s)
       val (dir, lmax) = h5IndexDir(s, d)
       val nodes = s.read.parquet(s"$dir/nodes")
       // the deletion names INDEXED ids: both the deleted rows (with
@@ -3338,7 +3328,6 @@ object IvfQueries {
          |SELECT query_id, n_probed, cand_id, label, cosine, rn
          |FROM ranked WHERE rn <= $K
          |ORDER BY query_id, rn""".stripMargin, sizing = ByEmbeddings) { (s, d) =>
-      VectorExpressions.register(s)
       val e = Tables.embeddings(s, d)
       val assigned = assignedDf(s, d).pinned
       val lab = e.select(col("vec_id"), col("label"))

@@ -991,7 +991,6 @@ object RelationalQueries {
       |  MAX(CASE WHEN rn = GREATEST(1, (n * 95 + 99) // 100) THEN v END) AS p95
       |FROM r GROUP BY rf, ls, yr
       |ORDER BY l_returnflag, l_linestatus, yr""".stripMargin) { (s, d) =>
-    graft.plans.VectorExpressions.register(s)
     // NO fanout (probed and reverted, r16): spreading the scan looked
     // neutral in a first probe but two independent same-box A/Bs vs
     // the pre-change tree measured 1.21x WORSE (0.92->1.11 min-of-5) —

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.{GraftQuery, Sizing, Tables}
+import graft.GraftQuery.q
 import graft.Pin.PinOps
 import graft.plans.VectorExpressions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -29,11 +30,6 @@ object SimilarityQueries {
     * left-associated SQL chain the oracle evaluates (see VectorSql). */
   private def cosineExpr(a: String, b: String): Column =
     VectorExpressions.cosine_similarity(col(a), col(b))
-
-  private def q(name: String, doc: String, sql: String,
-      sizing: Sizing = Sizing.Session)(
-      build: (SparkSession, String) => DataFrame): GraftQuery =
-    GraftQuery.q(name, doc, sql, sizing)((s, d) => { VectorExpressions.register(s); build(s, d) })
 
   /** Width for the embeddings-bounded sm/kn/rp/rr queries — the
     * IvfQueries serving-family rule. r16 quiet probe at width 1

@@ -667,7 +667,6 @@ object TextQueries {
       |FROM (SELECT doc_id, replace(text, 'e', 'e' || chr(769)) AS decomp
       |      FROM documents WHERE doc_id < 100)
       |ORDER BY doc_id""".stripMargin) { (s, d) =>
-    graft.plans.NfcNormalize.register(s)
     val decomp = regexp_replace(col("text"), "e", "e\u0301")
     val nfc = graft.plans.NfcNormalize.nfc_normalize(col("decomp"))
     Tables.documents(s, d)
@@ -891,7 +890,6 @@ object TextQueries {
       |  FROM g GROUP BY gram)
       |SELECT gram, n, df, min_pos FROM c
       |ORDER BY n DESC, gram LIMIT 10""".stripMargin) { (s, d) =>
-    graft.plans.VectorExpressions.register(s)
     Tables.documents(s, d)
       .select(col("doc_id"),
         graft.plans.VectorExpressions.ngram_explode(

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -60,9 +59,4 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 object NfcNormalize {
   /** Column API (through the session function registry). */
   def nfc_normalize(c: Column): Column = call_function("nfc_normalize", c)
-
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "built-in")
 }

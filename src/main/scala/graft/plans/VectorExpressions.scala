@@ -1,8 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -185,66 +185,36 @@ object VectorExpressions {
       s"minhash_signature k must be an integer literal, got $other")
   }
 
-  /** Idempotent per-session SQL/Column registration. */
+  /** Every graft SQL function, as (name, info, builder): what
+    * [[GraftExtensions]] injects and [[register]] registers. */
+  val sqlFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn[DotProduct]("dot_product", e => DotProduct(e(0), e(1))),
+    fn[L2Norm]("l2_norm", e => L2Norm(e.head)),
+    fn[MinHashSignature]("minhash_signature", e => MinHashSignature(e.head, minhashK(e))),
+    fn[NGramExplode]("ngram_explode", e => NGramExplode(e.head, ngramN(e))),
+    fn[NfcNormalize]("nfc_normalize", e => NfcNormalize(e.head)),
+    fn[KllQuantilesAgg]("kll_quantiles", KllQuantiles.fromExprs))
+
+  private def fn[E](name: String, build: Seq[Expression] => Expression)(
+      implicit e: scala.reflect.ClassTag[E]) =
+    (FunctionIdentifier(name), new ExpressionInfo(e.runtimeClass.getName, name), build)
+
+  /** Registers each of [[sqlFunctions]] the session lacks; a session
+    * built with [[GraftExtensions]] lacks none. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2_norm", exprs => L2Norm(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_signature",
-      exprs => MinHashSignature(exprs.head, minhashK(exprs)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_explode",
-      exprs => NGramExplode(exprs.head, ngramN(exprs)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kll_quantiles", exprs => KllQuantiles.fromExprs(exprs), "built-in")
+    val registry = spark.sessionState.functionRegistry
+    sqlFunctions.foreach { case (id, info, build) =>
+      if (!registry.functionExists(id)) registry.registerFunction(id, info, build)
+    }
   }
 }
 
-/** SparkSessionExtensions hook — install the vector functions at
-  * session build time (`.withExtensions(new GraftExtensions)`), the
+/** SparkSessionExtensions hook — install the graft functions and rules
+  * at session build time (`.withExtensions(new GraftExtensions)`), the
   * deployment path a library user would take. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VectorExpressions.DotProduct].getName, "dot_product"),
-        (exprs: Seq[Expression]) => VectorExpressions.DotProduct(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("l2_norm"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[VectorExpressions.L2Norm].getName, "l2_norm"),
-        (exprs: Seq[Expression]) => VectorExpressions.L2Norm(exprs.head)))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_signature"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[MinHashSignature].getName, "minhash_signature"),
-        (exprs: Seq[Expression]) => MinHashSignature(exprs.head, exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"minhash_signature k must be an integer literal, got $other")
-        })))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("ngram_explode"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[NGramExplode].getName, "ngram_explode"),
-        (exprs: Seq[Expression]) => NGramExplode(exprs.head, exprs(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"ngram_explode n must be an integer literal, got $other")
-        })))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("nfc_normalize"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[NfcNormalize].getName, "nfc_normalize"),
-        (exprs: Seq[Expression]) => NfcNormalize(exprs.head)))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("kll_quantiles"),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-          classOf[KllQuantilesAgg].getName, "kll_quantiles"),
-        (exprs: Seq[Expression]) => KllQuantiles.fromExprs(exprs)))
+    VectorExpressions.sqlFunctions.foreach(e.injectFunction)
     // the whole-operator surface rides the same deployment path: a
     // session built withExtensions gets the TopKPerGroup physical
     // strategy without any per-session imperative registration

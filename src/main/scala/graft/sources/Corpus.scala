@@ -1,25 +1,25 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
 /** File-corpus ingestion: the reference's `FileSystem` abstraction
-  * (interfaces.go:89-94) re-expressed as a DataFrame source.
+  * (interfaces.go:89-94), as a DataFrame source and as a walk.
   *
-  * One row per file with schema
+  * [[read]] gives one row per file with schema
   * `(path string, dir string, depth int, length long, content binary)`;
   * `path` is root-relative and '/'-separated. Backed by Spark's
-  * `binaryFile` source with `recursiveFileLookup` (the distributed
-  * analog of the reference's single-threaded DFS traversal,
-  * mapreduce.go:142-205 — Spark's InMemoryFileIndex lists in parallel
-  * across executors).
+  * `binaryFile` source with `recursiveFileLookup` (Spark's
+  * InMemoryFileIndex lists in parallel across executors).
   *
-  * Scan pruning: a [[PathGlob]] is translated to the source's
-  * `pathGlobFilter` when it is a simple one-segment suffix pattern, and
-  * always re-checked post-scan, mirroring the reference's
-  * CouldMatch-prune + Match-confirm split (work.go:19-37).
+  * [[walk]] is the reference's traversal (mapreduce.go:142-205) for
+  * `MapReduceRunner.runOnDirectory`: recursive `FileSystem.listStatus`
+  * that enters only the folders a predicate could match (the
+  * reference's CouldMatch prune, work.go:29-37,68-99). Its caller opens
+  * the files it returns with [[bytes]] and splits them with [[groups]].
   *
   * Split sizing: Spark packs a file scan by charging every file
   * `spark.sql.files.openCostInBytes` (4 MB), so a tree of ~300-byte
@@ -28,14 +28,15 @@ import org.apache.spark.sql.types._
   * `defaultParallelism × spark.sql.files.maxPartitionBytes` the scan is
   * coalesced to `defaultParallelism` partitions (one per core); a larger
   * tree keeps Spark's packing. The bytes come from the listing the read
-  * already holds, so sizing launches no job.
+  * already holds, so sizing launches no job. [[groups]] uses the same
+  * bound.
   *
-  * Known divergence from the reference's raw directory walk: Hadoop's
-  * listing applies its hidden-file filter — basenames starting with
-  * `_` or `.` (the `_SUCCESS`/`.crc` convention) never reach the
-  * DataFrame, whatever the predicate says. Corpora must not rely on
-  * such names carrying data (mr01 originally named its directory
-  * files `_ctx.txt` and saw an empty corpus).
+  * Known divergence from the reference's raw directory walk: both paths
+  * skip what Spark's file index skips ([[hidden]]) — basenames starting
+  * with `_` or `.` (the `_SUCCESS`/`.crc` convention) and empty files
+  * never reach a job, whatever the predicate says. Corpora must not
+  * rely on such names carrying data (mr01 originally named its
+  * directory files `_ctx.txt` and saw an empty corpus).
   */
 object Corpus {
 
@@ -48,94 +49,120 @@ object Corpus {
 
   /** Read a directory tree rooted at `root` as a corpus DataFrame. */
   def read(spark: SparkSession, root: String): DataFrame =
-    readFiltered(spark, root, None)
-
-  /** Read with a path predicate. Two listing-time prunes, both always
-    * re-checked by the exact predicate post-scan (the reference's
-    * CouldMatch-prune / Match-confirm split, work.go:19-37):
-    *
-    *  1. Subtree restriction: the predicate's longest static directory
-    *     prefix moves INTO the load root (`a/b/«**»/«*».txt` lists only
-    *     `root/a/b`, never a sibling subtree) — the distributed analog
-    *     of the reference's traversal skipping subtrees no filter
-    *     could match (work.go:68-99, jobs.go:35-43). At 100 TB trees
-    *     listing is the dominant cost; a glob rooted in one shard must
-    *     not pay for the whole corpus.
-    *  2. Basename pushdown: a remaining glob whose directory part is
-    *     all globstars pushes its basename into the source's
-    *     `pathGlobFilter` (files dropped during listing).
-    */
-  def readFiltered(spark: SparkSession, root: String,
-      predicate: Option[PathPredicate]): DataFrame = {
-    val prefix = predicate.map(_.staticPrefix).getOrElse(Nil)
-    val loadRoot = (root +: prefix).mkString("/")
-    // a restricted root may simply not exist — that's "no matches",
-    // not an error (the reference's traversal just never finds it)
-    if (prefix.nonEmpty && !new java.io.File(loadRoot).isDirectory)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    val reader = spark.read.format("binaryFile")
-      .option("recursiveFileLookup", "true")
-    // A basename is only pushable if it's safe under BOTH glob
-    // dialects: Hadoop's pathGlobFilter treats ? [ ] { } as
-    // metacharacters that PathGlob treats literally, so pushing such a
-    // pattern could silently prune files the predicate matches (or
-    // throw at listing time). '*' is the only shared metachar.
-    def hadoopSafe(seg: String): Boolean =
-      seg.forall(c => c == '*' || c.isLetterOrDigit || "._-".contains(c))
-    val pushed = predicate match {
-      case Some(PathGlob(p)) =>
-        // the static prefix is already consumed by the load root;
-        // pushability is judged on what remains
-        val segs = p.split("/", -1).drop(prefix.length)
-        // pushable iff every directory segment is a globstar (any depth)
-        if (segs.length == 1 && hadoopSafe(segs.head))
-          reader.option("pathGlobFilter", segs.head)
-        else if (segs.init.forall(_ == "**") && hadoopSafe(segs.last))
-          reader.option("pathGlobFilter", segs.last)
-        else reader
-      case _ => reader
-    }
-    val base = withDerivedColumns(
-      sized(pushed.load(loadRoot)).select(
-        regexp_replace(col("path"), java.util.regex.Pattern.quote(rootUri(root) + "/"), "")
-          .as("path"),
-        col("length"), col("content")))
-    predicate match {
-      // a Column predicate over `path` alone (not a row lambda): the
-      // exact re-check must not force whole-row deserialization —
-      // content bytes stay columnar until a row has matched
-      case Some(pred) =>
-        val matchesPath = udf((p: String) => pred.matches(p))
-        base.filter(matchesPath(col("path")))
-      case None => base
-    }
-  }
+    withDerivedColumns(
+      sized(spark.read.format("binaryFile").option("recursiveFileLookup", "true").load(root))
+        .select(
+          regexp_replace(col("path"), java.util.regex.Pattern.quote(rootUri(root) + "/"), "")
+            .as("path"),
+          col("length"), col("content")))
 
   /** `scan` coalesced to one partition per core when its listed bytes
-    * fit in `defaultParallelism` splits of `maxPartitionBytes`, else
-    * `scan` itself. */
+    * are [[perCore]], else `scan` itself. */
   private def sized(scan: DataFrame): DataFrame = {
     val spark = scan.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val bytes = scan.queryExecution.analyzed.stats.sizeInBytes
-    if (bytes < BigInt(cores) * spark.sessionState.conf.filesMaxPartitionBytes)
-      scan.coalesce(cores)
+    if (perCore(spark, scan.queryExecution.analyzed.stats.sizeInBytes))
+      scan.coalesce(spark.sparkContext.defaultParallelism)
     else scan
   }
 
-  /** The files of a corpus [[read]] returned for `root`, from the listing
-    * the read already holds (no job, no second listing): each file's
-    * root-relative path, as the `path` column spells it, with its Hadoop
-    * path. */
-  def listing(corpus: DataFrame, root: String): Seq[(String, Path)] = {
-    val prefix = rootUri(root) + "/"
-    // inputFiles are URI strings (a space reads `%20`); the `path` column
-    // holds the decoded Hadoop path string, which `Path.toString` gives
-    corpus.inputFiles.toSeq.map { f =>
-      val p = new Path(new java.net.URI(f))
-      (p.toString.stripPrefix(prefix), p)
+  /** Whether `bytes` of files read as one split per core: they fit in
+    * `defaultParallelism` splits of `spark.sql.files.maxPartitionBytes`. */
+  private def perCore(spark: SparkSession, bytes: BigInt): Boolean =
+    bytes < BigInt(spark.sparkContext.defaultParallelism) *
+      spark.sessionState.conf.filesMaxPartitionBytes
+
+  /** One file [[walk]] found: its root-relative path, as [[read]]'s
+    * `path` column spells it, its location and its length. */
+  final case class File(path: String, location: Path, length: Long)
+
+  /** The files below `root` in the folders `want` could match, found by
+    * one walk. A folder is listed only when `want.couldMatch` it, so a
+    * subtree no match can lie in is never listed; `listed` sees each
+    * folder listed, root-relative ('' is the root).
+    *
+    * The walk goes level by level on the driver. A folder with more
+    * subfolders to enter than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` has them
+    * walked by a Spark job instead, with the same prune, as
+    * InMemoryFileIndex lists such a folder; one job takes every such
+    * folder of the walk. */
+  def walk(spark: SparkSession, root: String, want: PathPredicate,
+      listed: String => Unit = _ => ()): Seq[File] = {
+    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val sql = spark.sessionState.conf
+    val top = new Path(root)
+    val (folders, files, wide) = descend(top.getFileSystem(conf.value), want,
+      Seq("" -> top), sql.parallelPartitionDiscoveryThreshold)
+    val below = if (wide.isEmpty) Nil else spark.sparkContext
+      .parallelize(wide, wide.size.min(sql.parallelPartitionDiscoveryParallelism))
+      .mapPartitions { dirs =>
+        val (f, fs, _) = descend(top.getFileSystem(conf.value), want, dirs.toSeq, Int.MaxValue)
+        Iterator.single((f, fs))
+      }.collect().toSeq
+    (folders ++ below.flatMap(_._1)).foreach(listed)
+    files ++ below.flatMap(_._2)
+  }
+
+  /** Lists `level` and then each level of folders below it that `want`
+    * could match: returns the folders listed, the files in them and the
+    * subfolders of every folder that had more than `threshold` of them to
+    * enter, left unlisted. */
+  private def descend(fs: FileSystem, want: PathPredicate, level: Seq[(String, Path)],
+      threshold: Int): (Seq[String], Seq[File], Seq[(String, Path)]) = {
+    val folders = Seq.newBuilder[String]
+    val files = Seq.newBuilder[File]
+    val wide = Seq.newBuilder[(String, Path)]
+    var next = level
+    while (next.nonEmpty) {
+      next = next.flatMap { case (rel, dir) =>
+        folders += rel
+        val (subs, leaves) = fs.listStatus(dir).toSeq
+          .filterNot(s => hidden(s.getPath.getName)).partition(_.isDirectory)
+        def relOf(s: FileStatus) =
+          if (rel.isEmpty) s.getPath.getName else s"$rel/${s.getPath.getName}"
+        // a scan reads no empty file and no `_metadata*` file either
+        // (Spark's PartitioningAwareFileIndex.isNonEmptyFile)
+        files ++= leaves.filter(s => s.getLen > 0 && !underscored(s.getPath.getName))
+          .map(s => File(relOf(s), s.getPath, s.getLen))
+        val enter = subs.map(s => relOf(s) -> s.getPath).filter { case (r, _) => want.couldMatch(r) }
+        if (enter.size > threshold) { wide ++= enter; Nil } else enter
+      }
     }
+    (folders.result(), files.result(), wide.result())
+  }
+
+  /** Names Spark's file index does not list, folders and files alike; a
+    * copy of Spark's `HadoopFSUtils.shouldFilterOutPathName`, which is
+    * private to Spark. */
+  private def hidden(name: String): Boolean = {
+    val exclude = underscored(name) || name.startsWith(".") || name.endsWith("._COPYING_")
+    val include = name.startsWith("_common_metadata") || name.startsWith("_metadata")
+    exclude && !include
+  }
+
+  private def underscored(name: String): Boolean =
+    name.startsWith("_") && !name.contains("=")
+
+  /** `files` in byte-balanced groups, one per task: one group per core
+    * when their bytes are [[perCore]], else groups of about
+    * `maxPartitionBytes`. In path order, each file joins the group its
+    * first byte falls in, so one listing always gives the same groups;
+    * empty groups are dropped. */
+  def groups(spark: SparkSession, files: Seq[File]): Seq[Seq[File]] = {
+    val sorted = files.sortBy(_.path)
+    val starts = sorted.scanLeft(0L)(_ + _.length)
+    val total = starts.last
+    val max = spark.sessionState.conf.filesMaxPartitionBytes
+    val n = if (perCore(spark, total)) spark.sparkContext.defaultParallelism
+      else ((total + max - 1) / max).toInt
+    sorted.zip(starts).groupBy { case (_, s) => (s.toDouble / total * n).toInt }
+      .toSeq.sortBy(_._1).map(_._2.map(_._1))
+  }
+
+  /** The bytes of one file. */
+  def bytes(fs: FileSystem, file: Path): Array[Byte] = {
+    val in = fs.open(file)
+    try in.readAllBytes() finally in.close()
   }
 
   private def rootUri(root: String): String =

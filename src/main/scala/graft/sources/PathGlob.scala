@@ -5,21 +5,14 @@ import java.util.regex.Pattern
 /** Path predicate with the two evaluation modes the reference's
   * traversal needs (`Filter.Match` / `Filter.CouldMatch`,
   * reference `interfaces.go:4-7`): exact match for files, and
-  * prefix-feasibility for directory-subtree pruning — the scan-time
-  * pushdown that lets a corpus read skip whole subtrees
-  * (reference `work.go:68-99`).
+  * prefix-feasibility for directory-subtree pruning — what lets
+  * [[Corpus.walk]] skip whole subtrees (reference `work.go:68-99`).
   */
 sealed trait PathPredicate extends Serializable {
   /** Exact match of a full (root-relative, '/'-separated) file path. */
   def matches(path: String): Boolean
   /** Could any file at or strictly below this folder path match? */
   def couldMatch(folder: String): Boolean
-  /** Longest literal directory prefix (as segments) under which EVERY
-    * matching path lives — the listing-time subtree restriction: a
-    * scan may descend from `root/prefix` instead of `root` and cannot
-    * miss a match (reference `work.go:68-99`: the traversal never
-    * enters a subtree no filter could match). Empty = no restriction. */
-  def staticPrefix: Seq[String]
   def or(other: PathPredicate): PathPredicate = MultiGlob(Seq(this, other))
 }
 
@@ -27,13 +20,6 @@ sealed trait PathPredicate extends Serializable {
 final case class MultiGlob(filters: Seq[PathPredicate]) extends PathPredicate {
   def matches(path: String): Boolean = filters.exists(_.matches(path))
   def couldMatch(folder: String): Boolean = filters.exists(_.couldMatch(folder))
-  /** A match of ANY branch must stay reachable → the longest common
-    * prefix of the branches' prefixes. */
-  def staticPrefix: Seq[String] =
-    if (filters.isEmpty) Nil
-    else filters.map(_.staticPrefix).reduce { (a, b) =>
-      a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1)
-    }
 }
 
 /** Glob over '/'-separated paths: `*` is a within-segment wildcard
@@ -112,12 +98,6 @@ final case class PathGlob(pattern: String) extends PathPredicate {
 
   def couldMatch(folder: String): Boolean =
     folder.isEmpty || resolves(folder.split("/", -1), exact = false)
-
-  /** Leading exact directory segments (the basename segment never
-    * joins the prefix — it names a file, not a subtree). */
-  def staticPrefix: Seq[String] =
-    segs.init.iterator.takeWhile(_.isInstanceOf[Exact])
-      .map(_.asInstanceOf[Exact].s).toSeq
 }
 
 object PathGlob {

@@ -184,18 +184,6 @@ class FormatsSpec extends AnyFunSuite {
     assert(df.count() > 0)
   }
 
-  test("corpus glob pushdown: pathGlobFilter for **-shaped globs, exact post-filter always") {
-    import graft.sources.PathGlob
-    val pushable = Corpus.readFiltered(spark, "src/test/resources/refFixtures",
-      Some(PathGlob("**/*.txt")))
-    assert(pushable.select("path").collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("a/b/d.txt", "a/b/e.txt", "a/c/f.txt", "example/file.txt"))
-    val nonPushable = Corpus.readFiltered(spark, "src/test/resources/refFixtures",
-      Some(PathGlob("*/c/*.txt")))
-    assert(nonPushable.select("path").collect().map(_.getString(0)).toSeq ==
-      Seq("a/c/f.txt"))
-  }
-
   test("corrupt files fail fast by default; ignoreCorruptFiles skips them (ref fail-fast errors.go)") {
     val dir = Files.createTempDirectory("graft-corrupt").toString
     Tables.nation(spark, sf).coalesce(1).write.mode("overwrite").parquet(dir)

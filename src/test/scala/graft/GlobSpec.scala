@@ -55,19 +55,6 @@ class GlobSpec extends AnyFunSuite {
     assert(m.matches("a.txt") && m.matches("a.json") && !m.matches("a.csv"))
   }
 
-  test("staticPrefix: longest literal directory prefix (work.go:68-99 subtree skip)") {
-    assert(PathGlob("a/b/**/*.txt").staticPrefix == Seq("a", "b"))
-    assert(PathGlob("a/*/c.txt").staticPrefix == Seq("a"))
-    assert(PathGlob("*.txt").staticPrefix == Nil)
-    assert(PathGlob("**/x.txt").staticPrefix == Nil)
-    assert(PathGlob("a/b/c.txt").staticPrefix == Seq("a", "b"))
-    // disjunction: only the common prefix is a safe subtree restriction
-    assert(MultiGlob(Seq(PathGlob("a/b/x.txt"), PathGlob("a/c/*.txt")))
-      .staticPrefix == Seq("a"))
-    assert(MultiGlob(Seq(PathGlob("a/b/x.txt"), PathGlob("**/y.txt")))
-      .staticPrefix == Nil)
-  }
-
   private val seg = Gen.nonEmptyListOf(Gen.alphaLowerChar).map(_.mkString)
   private val pathGen = Gen.nonEmptyListOf(seg).map(_.mkString("/"))
 

@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.TextFunctions
+import graft.mr.{MapReduceJob, MapReduceRunner}
 import graft.sources.{Corpus, Loaders, PathGlob}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,29 +23,31 @@ class LoadersSpec extends AnyFunSuite {
   }
 
   test("static-prefix subtree pruning: sibling subtree is never listed (work.go:68-99)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-prune").toFile
-    def write(rel: String, content: String): Unit = {
-      val f = new java.io.File(root, rel)
-      f.getParentFile.mkdirs()
-      java.nio.file.Files.write(f.toPath, content.getBytes); ()
+    val tree = Seq("a/b/keep.txt" -> "k", "a/b/deep/keep2.txt" -> "k2",
+      "a/other/skip.txt" -> "s", "sibling/x/huge.txt" -> "x")
+    import TestSpark.spark.implicits._
+    TestTree.withTree(tree.map { case (p, c) => p -> c.getBytes }) { root =>
+      def jobs(glob: String) = Seq(
+        MapReduceJob[String, List[String]](
+          name = "paths", filter = PathGlob(glob),
+          mapper = (path, _, c) => Iterator.single(s"$path=${new String(c, "UTF-8")}"),
+          zero = Nil, fold = (acc, v) => v :: acc, merge = _ ++ _),
+        MapReduceJob[Long, Long](
+          name = "bytes", filter = PathGlob(glob),
+          mapper = (_, _, c) => Iterator.single(c.length.toLong),
+          zero = 0L, fold = _ + _, merge = _ + _))
+      val listed = scala.collection.mutable.ArrayBuffer.empty[String]
+      val res = MapReduceRunner.runOnDirectory(spark, root, jobs("a/b/**/*.txt"), listed += _)
+      assert(res("paths").asInstanceOf[List[String]].sorted ==
+        List("a/b/deep/keep2.txt=k2", "a/b/keep.txt=k"))
+      assert(res("bytes") == 3L)
+      // the walk entered only the folders a match could lie in: the
+      // sibling subtrees were never listed, not merely filtered out
+      assert(listed.sorted == Seq("", "a", "a/b", "a/b/deep"))
+      // a glob under a folder that does not exist means "no matches"
+      assert(MapReduceRunner.runOnDirectory(spark, root, jobs("nosuch/dir/*.txt")) ==
+        Map("paths" -> Nil, "bytes" -> 0L))
     }
-    write("a/b/keep.txt", "k")
-    write("a/b/deep/keep2.txt", "k2")
-    write("a/other/skip.txt", "s")
-    write("sibling/huge.txt", "x")
-    val df = Corpus.readFiltered(spark, root.getAbsolutePath,
-      Some(PathGlob("a/b/**/*.txt")))
-    assert(df.select("path").collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("a/b/deep/keep2.txt", "a/b/keep.txt"))
-    // inputFiles reflects the source's actual listing: with the static
-    // prefix pushed into the load root, the sibling subtrees were
-    // never visited — not merely filtered out afterwards
-    val listed = df.inputFiles
-    assert(listed.nonEmpty && listed.forall(_.contains("/a/b/")),
-      s"listing escaped the a/b subtree: ${listed.mkString(", ")}")
-    // a restricted root that does not exist means "no matches"
-    assert(Corpus.readFiltered(spark, root.getAbsolutePath,
-      Some(PathGlob("nosuch/dir/*.txt"))).count() == 0)
   }
 
   test("json loader parses once, shares across consumers") {

@@ -5,6 +5,7 @@ import graft.sources.{Corpus, MultiGlob, PathGlob}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.mutable.ArrayBuffer
 
 object TestSpark {
   // fixed width: partition-count and plan assertions are written for 4 cores
@@ -361,13 +362,15 @@ class MapReduceSpec extends AnyFunSuite {
     }
     assert(Profile.of(spark)(MapReduceRunner.run(spark, corpus, jobs(withDirs = true)))._2.jobs.size == 3)
     assert(Profile.of(spark)(MapReduceRunner.run(spark, corpus, jobs(withDirs = false)))._2.jobs.size == 1)
-    // on a tree, discovery reads the listing: the pass is the only job,
-    // and nothing is persisted
+    // on a tree, discovery reads the walk: the pass is the only job, it
+    // scans no file source, and nothing is persisted
     TestTree.withTree(virtualTree) { root =>
       Seq(true, false).foreach { withDirs =>
         val onTree = Profile.of(spark)(MapReduceRunner.runOnDirectory(spark, root, jobs(withDirs)))._2.jobs
         assert(onTree.size == 1, s"withDirs=$withDirs")
         assert(!persists(onTree), s"withDirs=$withDirs")
+        assert(!onTree.exists(_.start.stageInfos.exists(_.rddInfos.exists(_.name.contains("FileScan")))),
+          s"withDirs=$withDirs")
       }
     }
   }
@@ -408,18 +411,41 @@ class MapReduceSpec extends AnyFunSuite {
         MapReduceRunner.run(spark, Corpus.read(spark, root), jobs), root)
     }
     val ctx = "ctx \u00e9.txt"
-    TestTree.withTree(Seq(
+    val shown = Seq(
       ctx -> "root".getBytes,
       s"sub d\u00efr/$ctx" -> "sub".getBytes,
       "sub d\u00efr/d\u00e4t\u00e4 1.txt" -> "d1".getBytes,
-      "sub d\u00efr/deep/d\u00e4t\u00e4 2.json" -> "d2".getBytes)) { root =>
+      "sub d\u00efr/deep/d\u00e4t\u00e4 2.json" -> "d2".getBytes,
+      "_k=v/y.txt" -> "y".getBytes)
+    // names Spark's file index skips, folders included, and empty files
+    val hidden = Seq("_skip.txt", ".skip.txt", "_tmp/x.txt", "_metadata", "z.txt._COPYING_")
+      .map(_ -> "h".getBytes) :+ ("empty.txt" -> Array.emptyByteArray)
+    TestTree.withTree(shown ++ hidden) { root =>
       val jobs = stackJobs(s"**/$ctx")
       val listed = MapReduceRunner.runOnDirectory(spark, root, jobs)
       assert(listed == MapReduceRunner.run(spark, Corpus.read(spark, root), jobs))
-      // the listing found both directory files: the deepest file sees
+      assert(listed("stacks0").asInstanceOf[Map[String, Seq[String]]].keySet == shown.map(_._1).toSet)
+      // the walk found both directory files: the deepest file sees
       // them root→leaf
       assert(listed("stacks2").asInstanceOf[Map[String, Seq[String]]].values.toSet
         .contains(Seq("root", "sub")))
+    }
+  }
+
+  test("a folder wider than the discovery threshold has its subfolders walked by a Spark job, same results") {
+    val narrow = Sessions.child(spark, "spark.sql.sources.parallelPartitionDiscovery.threshold" -> "1")
+    // these roots hold a folder with two or more subfolders; in json and
+    // example every folder has at most one, so the driver lists them
+    val wide = Set(s"$fixtures/a", fixtures)
+    Seq(s"$fixtures/a", s"$fixtures/json", s"$fixtures/example", fixtures).foreach { root =>
+      val jobs = stackJobs("**/parent.json")
+      val (folders, narrowFolders) = (ArrayBuffer.empty[String], ArrayBuffer.empty[String])
+      val (res, prof) = Profile.of(narrow)(
+        MapReduceRunner.runOnDirectory(narrow, root, jobs, narrowFolders += _))
+      assert(res == MapReduceRunner.runOnDirectory(spark, root, jobs, folders += _), root)
+      assert(narrowFolders.sorted == folders.sorted, root)
+      assert(prof.jobs.count(_.description.startsWith("graft mr job pass")) == 1, root)
+      assert(prof.jobs.size == (if (wide(root)) 2 else 1), root)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.plans.NfcNormalize
+import graft.plans.{NfcNormalize, VectorExpressions}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
@@ -13,7 +13,7 @@ class NfcSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
 
   private def normalizeViaSpark(strings: Seq[String], codegen: Boolean): Seq[String] = {
-    NfcNormalize.register(spark)
+    VectorExpressions.register(spark)
     val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
     try {
       spark.conf.set("spark.sql.codegen.wholeStage", codegen.toString)

@@ -149,4 +149,14 @@ class VectorExprSpec extends AnyFunSuite {
       "SELECT dot_udf(a, b) = dot_product(a, b) FROM udf_vs_native").head()
     assert(sqlRow.getBoolean(0))
   }
+
+  test("GraftQuery.build registers the graft functions a session lacks") {
+    // at width 1, sm04's input sizing keeps this session, not a new child
+    val s = Sessions.child(spark, "spark.sql.shuffle.partitions" -> "1")
+    val l2 = org.apache.spark.sql.catalyst.FunctionIdentifier("l2_norm")
+    s.sessionState.functionRegistry.dropFunction(l2)
+    assert(!s.sessionState.functionRegistry.functionExists(l2))
+    val sm04 = Registry.all.find(_.name == "sm04_vector_norms").get
+    assert(sm04.build(s, sf).collect().nonEmpty)
+  }
 }
